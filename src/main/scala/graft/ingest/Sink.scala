@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** A10-A12 + A17-A20: gzipped JSON-lines sink with Hive-style district
   * partitions, plus catalog DDL.
@@ -18,6 +18,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * mirroring the reference's one-object-per-district parallelism. The
   * idiomatic scale path is the parquet mirror (`writeParquetMirror`) — same
   * schema, splittable, columnar, an order of magnitude faster to scan.
+  *
+  * [[NcdIngest]] calls the writers from concurrent units, one per table;
+  * each call writes only its own table's location, so they need no
+  * coordination. With the mirror on, a normal table is written mirror
+  * first and its JSON table from the mirror, so its text is parsed once.
+  * The DDL builders only build strings: NcdIngest runs them on its
+  * calling thread, in table order, once every write has landed.
   */
 object Sink {
 
@@ -127,11 +134,4 @@ object Sink {
       .sortBy(bucketCol)
       .format("parquet")
       .saveAsTable(table)
-
-  /** A18/A20: register in the session catalog + discover partitions. */
-  def registerTable(spark: SparkSession, ddl: String, db: String,
-                    table: String, isPartitioned: Boolean): Unit = {
-    spark.sql(ddl)
-    if (isPartitioned) spark.sql(s"MSCK REPAIR TABLE $db.$table")
-  }
 }

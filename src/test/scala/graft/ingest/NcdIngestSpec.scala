@@ -1,8 +1,20 @@
 package graft.ingest
 
+import java.io.{File, FileOutputStream}
+import java.nio.charset.StandardCharsets
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.zip.{ZipEntry, ZipFile, ZipOutputStream}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InsertIntoHadoopFsRelationCommand, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.text.TextFileFormat
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 import graft.TestSpark
 
@@ -10,7 +22,7 @@ import graft.TestSpark
   * catalog registration → SQL over the loaded tables. The Spark analog of
   * driving the reference's DataZip.load() against AthenaMock.
   */
-class NcdIngestSpec extends AnyFunSuite {
+class NcdIngestSpec extends AnyFunSuite with Eventually {
   private lazy val spark = TestSpark.spark
 
   private lazy val warehouse =
@@ -203,6 +215,201 @@ class NcdIngestSpec extends AnyFunSuite {
     val lookupDdl = ingest.ddlLog.find(_.contains("ncd.GS_POSITION (")).get
     assert(lookupDdl.contains("POSITION_CODE STRING"))
     assert(lookupDdl.contains("redacted_POSITION_CODE BOOLEAN"))
+  }
+
+  /** The fixture zip loaded with the mirror on, and every file write the
+    * load made: (output table directory, whether the write scanned
+    * fixed-width text).
+    */
+  private lazy val (mirrored, mirroredWh, mirroredWrites) = {
+    val wh = Files.createTempDirectory("ncd_on_").toString
+    val writes = new ConcurrentLinkedQueue[(String, Boolean)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution,
+                    durationNs: Long): Unit = qe.analyzed.foreach {
+        case w: InsertIntoHadoopFsRelationCommand =>
+          val scansText = w.query.exists {
+            case l: LogicalRelation => l.relation match {
+              case h: HadoopFsRelation => h.fileFormat.isInstanceOf[TextFileFormat]
+              case _ => false
+            }
+            case _ => false
+          }
+          writes.add(w.outputPath.getName -> scansText)
+        case _ =>
+      }
+      def onFailure(funcName: String, qe: QueryExecution,
+                    exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val ing = new NcdIngest(spark, wh, db = "ncdon", parquetMirror = true)
+    try {
+      ing.loadZip(Fixtures.tempZip().toString)
+      // two writes per normal table, one per global/lookup table
+      eventually(timeout(Span(30, Seconds))) { assert(writes.size === 7) }
+    } finally spark.listenerManager.unregister(listener)
+    (ing, wh, writes.asScala.toSeq)
+  }
+
+  /** The whole DDL log of one fixture-zip load, as a load that writes and
+    * registers one table after another emits it.
+    */
+  private def fixtureDdl(db: String, wh: String,
+                         mirror: Boolean): Seq[String] = {
+    val specs = SchemaParser.parse(Fixtures.readme)
+    def loc(table: String) = s"$wh/$db/$table"
+    def flags(cols: String*) = cols ++ cols.map(c => s"redacted_$c")
+    val caseMirror = Seq(
+      s"""CREATE TABLE IF NOT EXISTS $db.GS_CASE_parquet (
+         |    CASEID BIGINT,
+         |    DISTRICT STRING,
+         |    FILE_DATE DATE,
+         |    LEAD_CHARGE STRING,
+         |    TOTAL_LOSS DOUBLE,
+         |    redacted_CASEID BOOLEAN,
+         |    redacted_DISTRICT BOOLEAN,
+         |    redacted_FILE_DATE BOOLEAN,
+         |    redacted_LEAD_CHARGE BOOLEAN,
+         |    redacted_TOTAL_LOSS BOOLEAN,
+         |    filename_district STRING
+         |)
+         |USING parquet
+         |PARTITIONED BY (filename_district)
+         |LOCATION '${loc("GS_CASE")}__parquet'""".stripMargin,
+      s"MSCK REPAIR TABLE $db.GS_CASE_parquet")
+    val histMirror = Seq(
+      s"""CREATE TABLE IF NOT EXISTS $db.GS_COURT_HIST_parquet (
+         |    CASEID BIGINT,
+         |    EVENT_DATE DATE,
+         |    EVENT_TYPE STRING,
+         |    redacted_CASEID BOOLEAN,
+         |    redacted_EVENT_DATE BOOLEAN,
+         |    redacted_EVENT_TYPE BOOLEAN
+         |)
+         |USING parquet
+         |LOCATION '${loc("GS_COURT_HIST")}__parquet'""".stripMargin)
+    Seq(Sink.createDatabaseSql(db),
+      Sink.normalTableDdl(db, specs("GS_CASE"), true, loc("GS_CASE")),
+      s"MSCK REPAIR TABLE $db.GS_CASE") ++
+      (if (mirror) caseMirror else Nil) ++
+      Seq(Sink.normalTableDdl(db, specs("GS_COURT_HIST"), false,
+        loc("GS_COURT_HIST"))) ++
+      (if (mirror) histMirror else Nil) ++ Seq(
+      Sink.stringTableDdl(db, "GS_DISTRICT", flags("CODE", "NAME"),
+        loc("GS_DISTRICT")),
+      Sink.stringTableDdl(db, "GS_OFFENSE", flags("CODE", "TITLE"),
+        loc("GS_OFFENSE")),
+      Sink.stringTableDdl(db, "GS_POSITION",
+        flags("POSITION_CODE", "DESCRIPTION", "ACTIVE_FLAG"),
+        loc("GS_POSITION")))
+  }
+
+  private val fixtureTables =
+    Seq("GS_CASE", "GS_COURT_HIST", "GS_DISTRICT", "GS_OFFENSE", "GS_POSITION")
+
+  test("concurrent load: full DDL log and load order are the sequential " +
+      "ones, mirror off and on") {
+    assert(ingest.ddlLog.toSeq === fixtureDdl("ncd", warehouse, mirror = false))
+    assert(ingest.loaded.toSeq === fixtureTables)
+    assert(mirrored.ddlLog.toSeq === fixtureDdl("ncdon", mirroredWh, mirror = true))
+    assert(mirrored.loaded.toSeq === fixtureTables)
+  }
+
+  /** Rows of a table as strings, grouped by district ("" unpartitioned). */
+  private def rowsByDistrict(table: String,
+                             columns: Seq[String]): Map[String, Seq[String]] = {
+    val df = spark.table(table)
+    val district =
+      if (df.columns.contains("filename_district")) df("filename_district")
+      else org.apache.spark.sql.functions.lit("")
+    df.select(district +: columns.map(df(_)): _*).collect().toSeq
+      .groupBy(_.getString(0))
+      .map { case (d, rows) => d -> rows.map(_.toString).sorted }
+  }
+
+  test("JSON rows are the same per district with the mirror off and on") {
+    mirrored
+    for (table <- Seq("GS_CASE", "GS_COURT_HIST")) {
+      val columns = spark.table(s"ncd.$table").columns.toSeq
+        .filterNot(_ == "filename_district")
+      val off = rowsByDistrict(s"ncd.$table", columns)
+      assert(off.values.map(_.size).sum > 0)
+      assert(rowsByDistrict(s"ncdon.$table", columns) === off)
+      assert(rowsByDistrict(s"ncdon.${table}_parquet", columns) === off)
+    }
+  }
+
+  test("mirror on: exactly one write per normal table scans the text") {
+    // the parse feeds the mirror; the JSON table is written from the mirror
+    val textScans = mirroredWrites.filter(_._2).map(_._1).sorted
+    assert(textScans === Seq("GS_CASE__parquet", "GS_COURT_HIST__parquet"))
+    assert(mirroredWrites.map(_._1).sorted === Seq("GS_CASE",
+      "GS_CASE__parquet", "GS_COURT_HIST", "GS_COURT_HIST__parquet",
+      "GS_DISTRICT", "GS_OFFENSE", "GS_POSITION"))
+  }
+
+  test("second zip with the mirror on: JSON and mirror agree per district, " +
+      "and only the zip's own districts are rewritten") {
+    import spark.implicits._
+    val wh = Files.createTempDirectory("ncd_multi_mirror_").toString
+    val ing = new NcdIngest(spark, wh, db = "ncdmm", parquetMirror = true)
+    ing.loadZip(Fixtures.tempZip().toString)
+    def partFiles(dir: String): Seq[String] =
+      Option(new File(s"$wh/ncdmm/$dir").listFiles()).toSeq.flatten
+        .map(_.getName).filter(_.startsWith("part-")).sorted
+    val untouched = Seq("GS_CASE/filename_district=CT",
+      "GS_CASE__parquet/filename_district=CT", "GS_COURT_HIST",
+      "GS_COURT_HIST__parquet")
+    val before = untouched.map(partFiles)
+    assert(before.forall(_.nonEmpty))
+
+    ing.loadZip(Fixtures.tempZipB().toString)
+    // part-file names carry the writing job's id: a rewrite renames them
+    assert(untouched.map(partFiles) === before)
+    val columns = spark.table("ncdmm.GS_CASE").columns.toSeq
+      .filterNot(_ == "filename_district")
+    val json = rowsByDistrict("ncdmm.GS_CASE", columns)
+    assert(rowsByDistrict("ncdmm.GS_CASE_parquet", columns) === json)
+    assert(json.map { case (d, rows) => d -> rows.size } ===
+      Map("CT" -> 1, "FLM" -> 1, "NY" -> 1))
+    val flm = spark.table("ncdmm.GS_CASE")
+      .filter($"filename_district" === "FLM").select($"CASEID").as[Long]
+    assert(flm.collect().toSeq === Seq(6L))
+    assert(spark.table("ncdmm.GS_COURT_HIST").count() === 3)
+    assert(spark.table("ncdmm.GS_COURT_HIST_parquet").count() === 3)
+  }
+
+  test("a failing unit is rethrown after every unit has finished") {
+    // the fixture zip plus a codebook member with no GS_* name
+    val zipPath = Files.createTempDirectory("ncd_bad_").resolve("bad.zip")
+    val fixture = new ZipFile(Fixtures.tempZip().toFile)
+    val out = new ZipOutputStream(new FileOutputStream(zipPath.toFile))
+    try {
+      fixture.entries().asScala.foreach { e =>
+        out.putNextEntry(new ZipEntry(e.getName))
+        out.write(fixture.getInputStream(e).readAllBytes())
+        out.closeEntry()
+      }
+      out.putNextEntry(new ZipEntry("table_gs_bad.txt"))
+      out.write("not a codebook\n".getBytes(StandardCharsets.ISO_8859_1))
+      out.closeEntry()
+    } finally {
+      out.close()
+      fixture.close()
+    }
+    val tmp = new File(System.getProperty("java.io.tmpdir"))
+    def scratchDirs(): Set[String] =
+      tmp.listFiles().map(_.getName).filter(_.startsWith("ncd_zip_")).toSet
+    val scratchBefore = scratchDirs()
+
+    val wh = Files.createTempDirectory("ncd_bad_wh_").toString
+    val ing = new NcdIngest(spark, wh, db = "ncdbad")
+    val e = intercept[IllegalArgumentException](ing.loadZip(zipPath.toString))
+    assert(e.getMessage === "no GS_* table name found")
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    assert(scratchDirs() === scratchBefore)
+    // the tables before the failed unit are registered, none after it
+    assert(ing.loaded.toSeq === fixtureTables.take(4))
   }
 
   test("global-file size gate: a sub-gate member takes the distributed " +
