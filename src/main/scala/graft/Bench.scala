@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.queries.{IngestQueries, MultimodalQueries, Relational, SimilarityQueries, TextQueries, TrainingQueries}
 
 /** Benchmark main: the FULL catalog on SPARK_GRAFT_SF_DIR, one JSON line.
@@ -32,20 +30,6 @@ object Bench {
     "training" -> TrainingQueries.defs.map(_._1),
     "ingest" -> IngestQueries.defs.map(_._1))
 
-  /** Kept for tooling compatibility: the round-2 headline slice. */
-  val headline: Seq[String] = Seq(
-    "q01_scan_filter_project",
-    "q02_agg_pricing_summary",
-    "q04_join_fact_fact",
-    "q13_window_topn",
-    "q41_dedup_minhash_lsh",
-    "q42_dedup_simhash",
-    "q43_dedup_ngram_jaccard",
-    "q45_ann_topk_bruteforce",
-    "q46_ann_ivf",
-    "q47_embed_lsh_srp",
-    "q50_sessionize")
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -56,14 +40,7 @@ object Bench {
       v.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
         s"SPARK_GRAFT_BENCH_ROUND must be an integer, got '$v'"))
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // optional comma-separated subset for targeted local iteration
@@ -175,8 +152,7 @@ object Bench {
     // per-query-minima map from the previous clean run (the driver's
     // BENCH_r*.json artifacts truncate the query map, so they cannot be
     // diffed); it is rewritten only on a clean pass, so a regressing run
-    // never becomes its own excuse. Queries under 0.3 s are skipped —
-    // there, fixed overhead dominates and 1.5x is noise, not plan shape.
+    // never becomes its own excuse. The rule itself is [[Tripwire]].
     // baseline is per-SF: minima at sf0.01 must never be the yardstick
     // for an sf0.1 run (everything would read as a regression).
     // Repo-relative artifacts (tripwire baseline, full per-query dump)
@@ -214,99 +190,8 @@ object Bench {
     if (priorTimes.isEmpty)
       System.err.println(s"[bench] WARNING: no tripwire baseline at " +
         s"$baselinePath — the regression check is VACUOUS this run")
-    // both a ratio AND an absolute floor: sub-second queries can move
-    // 1.5x on JVM/page-cache noise alone while staying irrelevant to the
-    // total; a real plan regression moves both the ratio and >0.5 s.
-    // AMBIENT normalization (round-9 lesson): the whole MACHINE can get
-    // slower between rounds (container CPU quota, co-tenants) — observed
-    // as a uniform ~1.6x across 13 unrelated unchanged queries, which a
-    // per-query tripwire misreads as 13 regressions. The run-wide MEDIAN
-    // ratio over comparable queries estimates that ambient factor (a
-    // median is blind to the handful of genuinely-regressed queries);
-    // ratios are normalized by it before flagging, so the tripwire
-    // detects queries that regressed RELATIVE to the fleet. The factor
-    // is reported in the JSON line; it never shrinks below 1 (a FASTER
-    // machine must not mask absolute regressions).
-    //
-    // Round-10 hardening (advice): a run-wide median absorbs a GENUINE
-    // shared-operator regression that hits >= 50% of the catalog. Two
-    // guards: (1) the run-wide estimate is CORROBORATED against a fixed
-    // pinned subset of simple queries over disjoint heavy operators —
-    // those only slow together when the machine does; if the run-wide
-    // median materially exceeds the pinned one, the pinned estimate
-    // wins and the residual flags as regressions. (2) normalization is
-    // hard-CAPPED at 1.5x — past that, slowdown is never silently
-    // absorbed; the excess surfaces as per-query regressions for manual
-    // confirmation. Median is the proper lower/averaged one (the old
-    // ratios(n/2) picked the upper-middle element on even counts,
-    // biasing ambient up).
-    def median(xs: Seq[Double]): Option[Double] = {
-      val s = xs.sorted
-      val n = s.size
-      if (n == 0) None
-      else if (n % 2 == 1) Some(s(n / 2))
-      else Some((s(n / 2 - 1) + s(n / 2)) / 2.0)
-    }
-    // disjoint heavy operators: parquet scan+hash-agg / shuffle join /
-    // window / string funcs / array dot / sessionize / validation / sink
-    val pinnedNames = Set(
-      "q02_agg_pricing_summary", "q04_join_fact_fact",
-      "q13_window_topn", "q30_text_quality",
-      "q45_ann_topk_bruteforce", "q50_sessionize",
-      "q82_data_quality", "q103_range_partition_export")
-    val ratioByName = best.collect {
-      case (name, now) if now >= 0 &&
-          priorTimes.get(name).exists(_ >= 0.3) =>
-        name -> now / priorTimes(name)
-    }
-    val runWide = median(ratioByName.map(_._2)).getOrElse(1.0)
-    val pinnedRatios = ratioByName.collect {
-      case (n, r) if pinnedNames(n) => r
-    }
-    // fewer than 3 comparable pinned queries is no corroboration signal
-    val pinnedMed = if (pinnedRatios.size >= 3) median(pinnedRatios) else None
-    val corroborated = pinnedMed match {
-      case Some(p) if runWide > 1.25 * math.max(1.0, p) =>
-        System.err.println(
-          f"[bench] run-wide median ratio $runWide%.2fx NOT corroborated " +
-            f"by the pinned subset ($p%.2fx over ${pinnedRatios.size} " +
-            "queries) — treating the excess as a shared-operator " +
-            "regression, not ambient; normalizing by the pinned estimate")
-        p
-      case _ => runWide
-    }
-    val ambientCap = 1.5
-    val ambient = math.max(1.0, math.min(ambientCap, corroborated))
-    if (corroborated > ambientCap)
-      System.err.println(
-        f"[bench] ambient estimate $corroborated%.2fx EXCEEDS the " +
-          f"$ambientCap%.1fx cap — normalization capped; slowdown past " +
-          "the cap is reported as regressions and needs manual " +
-          "confirmation (is the machine really that much slower?)")
-    if (ambient > 1.2)
-      System.err.println(
-        f"[bench] ambient slowdown ${ambient}%.2fx vs baseline " +
-          "(pinned-corroborated median) — per-query tripwire " +
-          "normalized by it")
-    // Absolute floor raised 0.5 -> 1.5 s (round-10 verdict #4): the
-    // observed cross-run spread on 1-2 s queries is ~±10% but single
-    // outlier passes blip past 1.5x with deltas well under a second
-    // (q292: +0.66 s tripped rc=1 on a run that was 10% faster overall).
-    // A genuine plan regression on a query that MATTERS to the 386 s
-    // total moves it by >1.5 s; anything smaller is latent until the
-    // ratio persists, at which point the baseline-vs-now diff shows it.
-    val regressions = best.collect {
-      case (name, now) if now >= 0 &&
-          priorTimes.get(name).exists(p =>
-            p >= 0.3 && now > 1.5 * ambient * p &&
-              now - ambient * p > 1.5) =>
-        (name, priorTimes(name), now)
-    }
-    regressions.foreach { case (name, p, now) =>
-      System.err.println(
-        f"[bench] REGRESSION $name: $p%.2f s -> $now%.2f s (${now / p}%.2fx" +
-          f", ${now / (ambient * p)}%.2fx ambient-normalized)")
-    }
+    val Tripwire.Result(ambient, regressions, notes) = Tripwire(best, priorTimes)
+    notes.foreach(System.err.println)
     val fams = (families :+
         ("streaming" -> graft.streaming.StreamBench.jobs.map(_._1)))
       .map { case (fam, qn) =>

@@ -1,0 +1,23 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one way this repo builds a session: `local[cpus]` with `cpus`
+  * shuffle partitions, session time zone UTC (the oracle and the
+  * `Tables.table` timestamp normalisation both assume it), the UI off, and
+  * [[graft.plans.GraftExtensions]] installed so the native functions and
+  * the as-of join plan without a `register()` call.
+  *
+  * Callers with extra needs chain onto the returned builder before
+  * `getOrCreate()` — a warehouse dir, Hive support, or a different
+  * `master` — and a later setting of the same key wins.
+  */
+object GraftSession {
+  def builder(cpus: Int): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.plans.GraftExtensions)
+}

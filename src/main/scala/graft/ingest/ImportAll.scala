@@ -3,7 +3,7 @@ package graft.ingest
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** CLI analog of the reference's `import_all.py`: scrape a DOJ listing
   * page, then download + load every linked zip (pipelined 2-deep).
@@ -18,13 +18,10 @@ object ImportAll {
     val warehouse = args(1)
     val db = if (args.length > 2) args(2) else "ncd"
 
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder(
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .appName("ncd-import-all")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

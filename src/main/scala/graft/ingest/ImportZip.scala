@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** CLI analog of the reference's `import_zip.py`: load one NCD zip into the
   * session catalog + warehouse dir.
@@ -14,13 +14,10 @@ object ImportZip {
     val warehouse = args(1)
     val db = if (args.length > 2) args(2) else "ncd"
 
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder(
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .appName("ncd-import-zip")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions.call_function
 
 /** Session extension installer for the custom whole-plan operators.
   *
-  * Install with `SparkSession.builder().withExtensions(new GraftExtensions)`
+  * Install with `withExtensions(new GraftExtensions)` on a session builder
   * or `--conf spark.sql.extensions=graft.plans.GraftExtensions` (the config
-  * route needs no code change in the launching application). All of this
-  * repo's mains (Verify/Bench) and the test session install it.
+  * route needs no code change in the launching application). Every session
+  * this repo builds — its mains, tools and the test session — installs it
+  * via [[graft.GraftSession]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

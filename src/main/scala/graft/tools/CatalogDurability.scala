@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.GraftSession
 import graft.ingest.NcdIngest
 
 /** Catalog durability harness: proves ingested tables survive a full
@@ -27,14 +28,11 @@ import graft.ingest.NcdIngest
 object CatalogDurability {
 
   def session(warehouse: String, metastore: String): SparkSession =
-    SparkSession.builder()
-      .master("local[2]")
+    GraftSession.builder(2)
       .appName("graft-catalog-durability")
       .config("spark.sql.warehouse.dir", warehouse)
       .config("javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$metastore;create=true")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
       .enableHiveSupport()
       .getOrCreate()
 

@@ -2,8 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.ingest.{FieldSpec, FixedWidth, OracleType, TableSpec}
 
 /** Ingest throughput: generate an N-row fixed-width file and time the full
@@ -12,10 +11,7 @@ import graft.ingest.{FieldSpec, FixedWidth, OracleType, TableSpec}
 object IngestBench {
   def main(args: Array[String]): Unit = {
     val rows = if (args.nonEmpty) args(0).toInt else 1000000
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val spec = TableSpec("BENCH", Seq(

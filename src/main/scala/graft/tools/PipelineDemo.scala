@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.operators.{CorpusPipeline, PipelineConfig}
 
 /** Runnable end-to-end corpus preparation over the testdata documents:
@@ -14,12 +12,7 @@ import graft.operators.{CorpusPipeline, PipelineConfig}
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = GraftSession.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = Tables.table(spark, sfDir, "documents")

@@ -2,11 +2,10 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.streaming.StreamSessionize
 
 /** End-to-end Structured Streaming drive: replay the events table through
@@ -16,11 +15,7 @@ import graft.streaming.StreamSessionize
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val events = Tables.table(spark, sfDir, "events")
