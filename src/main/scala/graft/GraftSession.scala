@@ -6,7 +6,10 @@ import org.apache.spark.sql.SparkSession
   * shuffle partitions, session time zone UTC (the oracle and the
   * `Tables.table` timestamp normalisation both assume it), the UI off, and
   * [[graft.plans.GraftExtensions]] installed so the native functions and
-  * the as-of join plan without a `register()` call.
+  * the as-of join plan without a `register()` call. Local FileContext
+  * paths resolve to [[graft.fs.NioLocalFs]], so a stream started on the
+  * session directly writes its checkpoint as one started through
+  * [[graft.streaming.StreamStart]] does.
   *
   * Callers with extra needs chain onto the returned builder before
   * `getOrCreate()` — a warehouse dir, Hive support, or a different
@@ -19,5 +22,7 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop." + graft.fs.NioLocalFs.ImplKey,
+        classOf[graft.fs.NioLocalFs].getName)
       .withExtensions(new graft.plans.GraftExtensions)
 }

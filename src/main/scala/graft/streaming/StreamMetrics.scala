@@ -9,6 +9,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * progress events are folded into a per-job summary the bench emits
   * as `stream_batch_metrics` in its JSON line. Purely additive — the
   * recorded run is the same run that was timed.
+  *
+  * `state_commit_ms` (the state operators' commits: each partition's
+  * delta file closed, checksummed and renamed into the checkpoint) and
+  * `wal_commit_ms` (the offset-log write) are checkpoint I/O, not state
+  * work. Both go through the checkpoint's FileContext, which is why they
+  * fell once [[StreamStart]] bound it to [[graft.fs.NioLocalFs]].
   */
 object StreamMetrics {
 

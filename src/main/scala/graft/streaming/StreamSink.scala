@@ -81,11 +81,10 @@ object StreamSink {
                     orderCols: Seq[String], path: String,
                     checkpoint: String,
                     trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
+    StreamStart(stream)(_
       .foreachBatch { (batch: DataFrame, _: Long) =>
         applyBatch(batch.sparkSession, batch, keyCol, orderCols, path)
       }
       .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+      .trigger(trigger))
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.{GraftSession, Tables}
-import graft.streaming.StreamSessionize
+import graft.streaming.{StreamSessionize, StreamStart}
 
 /** End-to-end Structured Streaming drive: replay the events table through
   * a file-source stream (micro-batched) into the session_window
@@ -34,10 +34,10 @@ object StreamDemo {
     // wider than the full data span — otherwise whole files arrive "late"
     // behind the advancing watermark and are (correctly) dropped. A real
     // deployment reads roughly-ordered input and keeps a tight watermark.
-    val query = StreamSessionize.sessionWindows(stream, gap = "30 minutes",
-        watermark = "3650 days")
-      .writeStream.format("memory").queryName("stream_sessions")
-      .outputMode(OutputMode.Complete()).start()
+    val query = StreamStart(StreamSessionize.sessionWindows(stream,
+        gap = "30 minutes", watermark = "3650 days"))(
+      _.format("memory").queryName("stream_sessions")
+        .outputMode(OutputMode.Complete()))
     query.processAllAvailable()
     query.stop()
 

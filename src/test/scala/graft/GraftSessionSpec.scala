@@ -4,8 +4,10 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.AbstractFileSystem
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.fs.NioLocalFs
 import graft.functions.ShingleHashes
 
 class GraftSessionSpec extends AnyFunSuite {
@@ -15,6 +17,13 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
     assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
     assert(spark.sparkContext.master === "local[4]")
+  }
+
+  test("local FileContext paths resolve to NioLocalFs") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    assert(conf.get(NioLocalFs.ImplKey) === classOf[NioLocalFs].getName)
+    assert(AbstractFileSystem.get(java.net.URI.create("file:///"), conf)
+      .isInstanceOf[NioLocalFs])
   }
 
   test("injected native functions resolve in spark.sql without register()") {
