@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** The one way this repo builds a session: `local[cpus]` with `cpus`
   * shuffle partitions, session time zone UTC (the oracle and the
   * `Tables.table` timestamp normalisation both assume it), the UI off, and
-  * [[graft.plans.GraftExtensions]] installed so the native functions and
-  * the as-of join plan without a `register()` call. Local FileContext
+  * [[graft.plans.GraftExtensions]] installed (the one registry of the
+  * native functions; it also plans the as-of join). Local FileContext
   * paths resolve to [[graft.fs.NioLocalFs]], so a stream started on the
   * session directly writes its checkpoint as one started through
   * [[graft.streaming.StreamStart]] does.

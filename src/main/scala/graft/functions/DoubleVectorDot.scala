@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -76,13 +76,6 @@ case class DoubleVectorDot(left: Expression, right: Expression)
 object DoubleVectorDot {
 
   val FunctionName = "double_vector_dot"
-
-  /** Register in the session's function registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      exprs => DoubleVectorDot(exprs(0), exprs(1)),
-      "scala_udf")
 
   /** Column API over the registered function. */
   def dot(a: Column, b: Column): Column = call_function(FunctionName, a, b)

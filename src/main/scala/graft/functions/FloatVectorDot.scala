@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -80,13 +80,6 @@ case class FloatVectorDot(left: Expression, right: Expression)
 object FloatVectorDot {
 
   val FunctionName = "float_vector_dot"
-
-  /** Register in the session's function registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      exprs => FloatVectorDot(exprs(0), exprs(1)),
-      "scala_udf")
 
   /** Column API over the registered function. */
   def dot(a: Column, b: Column): Column = call_function(FunctionName, a, b)

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -76,10 +76,6 @@ case class LongVectorDot(left: Expression, right: Expression)
 object LongVectorDot {
 
   val FunctionName = "long_vector_dot"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => LongVectorDot(exprs.head, exprs(1)), "scala_udf")
 
   def dot(a: Column, b: Column): Column = call_function(FunctionName, a, b)
 }

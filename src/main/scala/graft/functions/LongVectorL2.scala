@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -81,12 +81,6 @@ case class LongVectorL2(left: Expression, right: Expression)
 object LongVectorL2 {
 
   val FunctionName = "long_vector_l2"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      exprs => LongVectorL2(exprs(0), exprs(1)),
-      "scala_udf")
 
   def l2(a: Column, b: Column): Column = call_function(FunctionName, a, b)
 }

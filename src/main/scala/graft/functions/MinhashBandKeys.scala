@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -74,10 +74,6 @@ case class MinhashBandKeys(child: Expression) extends UnaryExpression {
 object MinhashBandKeys {
 
   val FunctionName = "minhash_band_keys"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => MinhashBandKeys(exprs.head), "scala_udf")
 
   def of(hashes: Column): Column = call_function(FunctionName, hashes)
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GenericInternalRow}
@@ -82,10 +82,6 @@ case class NGrams(child: Expression, n: Expression)
 object NGrams {
 
   val FunctionName = "ngrams"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => NGrams(exprs.head, exprs(1)), "scala_udf")
 
   def of(tokens: Column, n: Column): Column =
     call_function(FunctionName, tokens, n)

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -56,12 +56,6 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 object NfcNormalize {
 
   val FunctionName = "nfc_normalize"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName,
-      exprs => NfcNormalize(exprs.head),
-      "scala_udf")
 
   def of(c: Column): Column = call_function(FunctionName, c)
 }

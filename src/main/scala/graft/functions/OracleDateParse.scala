@@ -2,7 +2,7 @@ package graft.functions
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -97,10 +97,6 @@ case class OracleDateParse(child: Expression) extends UnaryExpression {
 object OracleDateParse {
 
   val FunctionName = "oracle_date_parse"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => OracleDateParse(exprs.head), "scala_udf")
 
   def of(c: Column): Column = call_function(FunctionName, c)
 }

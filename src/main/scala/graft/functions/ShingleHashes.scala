@@ -3,7 +3,7 @@ package graft.functions
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -90,10 +90,6 @@ case class ShingleHashes(child: Expression) extends UnaryExpression {
 object ShingleHashes {
 
   val FunctionName = "shingle_hashes"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => ShingleHashes(exprs.head), "scala_udf")
 
   def of(tokens: Column): Column = call_function(FunctionName, tokens)
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -78,10 +78,6 @@ case class SimhashSig(child: Expression) extends UnaryExpression {
 object SimhashSig {
 
   val FunctionName = "simhash_sig"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => SimhashSig(exprs.head), "scala_udf")
 
   def of(hashes: Column): Column = call_function(FunctionName, hashes)
 }

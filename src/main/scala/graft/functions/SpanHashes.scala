@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -144,11 +144,6 @@ object WindowHashes {
 
   val FunctionName = "window_hashes"
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => WindowHashes(exprs(0), exprs(1), exprs(2)),
-      "scala_udf")
-
   def of(tokens: Column, n: Column, stride: Column): Column =
     call_function(FunctionName, tokens, n, stride)
 }
@@ -192,11 +187,6 @@ case class WinnowFingerprints(first: Expression, second: Expression,
 object WinnowFingerprints {
 
   val FunctionName = "winnow_fps"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => WinnowFingerprints(exprs(0), exprs(1), exprs(2)),
-      "scala_udf")
 
   def of(lt: Column, k: Column, w: Column): Column =
     call_function(FunctionName, lt, k, w)

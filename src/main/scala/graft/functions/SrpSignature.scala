@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -83,10 +83,6 @@ case class SrpBandKeys(child: Expression) extends UnaryExpression {
 object SrpBandKeys {
 
   val FunctionName = "srp_band_keys"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => SrpBandKeys(exprs.head), "scala_udf")
 
   def of(v: Column): Column = call_function(FunctionName, v)
 }

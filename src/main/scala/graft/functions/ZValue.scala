@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -63,10 +63,6 @@ case class ZValue(left: Expression, right: Expression)
 object ZValue {
 
   val FunctionName = "z_value16"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, exprs => ZValue(exprs(0), exprs(1)), "scala_udf")
 
   def of(x: Column, y: Column): Column = call_function(FunctionName, x, y)
 }

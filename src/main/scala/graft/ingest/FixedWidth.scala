@@ -44,10 +44,9 @@ object FixedWidth {
     case OracleType.OracleDate =>
       // native single-scan parser (graft.functions.OracleDateParse): the
       // equivalent regex + try_to_timestamp formulation costs ~80x more
-      // per cell and dominated the ingest profile. Requires
-      // OracleDateParse.register on the session (done in [[read]]/callers).
-      org.apache.spark.sql.functions.call_function(
-        graft.functions.OracleDateParse.FunctionName, raw)
+      // per cell and dominated the ingest profile. Resolved through
+      // graft.plans.GraftExtensions, which every GraftSession installs.
+      graft.functions.OracleDateParse.of(raw)
   }
 
   /** Project one raw-line DataFrame (single `value` string column) into the
@@ -56,7 +55,6 @@ object FixedWidth {
     */
   def project(lines: DataFrame, spec: TableSpec,
               keep: Seq[String] = Nil): DataFrame = {
-    graft.functions.OracleDateParse.register(lines.sparkSession)
     val value = col("value")
     val rawCells = spec.fields.map { f =>
       f.name -> trim(substring(value, f.start, f.length))

@@ -4,7 +4,6 @@ import scala.util.matching.Regex
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.storage.StorageLevel
 
 /** A13: split `global_LIONS.txt` into its stacked per-table fragments.
   *
@@ -54,47 +53,12 @@ object GlobalSplitter {
     }.toMap
   }
 
-  /** Executor-side variant of [[split]] for a dump too large to hold as
-    * one driver-side string. Two metadata-only passes collect the marker
-    * lines (bare table names, and the lines just after them to test the
-    * blank separator); the `(start, end, name)` ranges are then BROADCAST
-    * and every fragment is carved in ONE tagged pass over the file — the
-    * number of full-file scans no longer grows with the table count (the
-    * earlier version paid one filter plus a `sortBy` shuffle per table,
-    * which undercut the whole point of the distributed path). Semantics
-    * match [[split]] exactly: a table starts at a bare `^[A-Z]\S+$` line
-    * followed by a blank line (first occurrence per name wins) and runs
-    * until the next bare name line.
+  /** The single tagged pass behind [[splitDistributed]]: one row per
+    * content line of any fragment as (table, lineIdx, line) in file order,
+    * plus the `(start, end, name)` ranges (line-index space, end
+    * exclusive, `Long.MaxValue` = to-EOF).
     */
-  def tableLineRdds(spark: SparkSession, path: String): TableLines = {
-    val (ranges, tagged) = taggedTableLines(spark, path)
-    TableLines(
-      ranges.map { case (_, _, name) =>
-        // narrow filter over the persisted tagged pass — no file re-read,
-        // no shuffle: zipWithIndex order is stable and filter preserves it
-        name -> tagged.filter(_._1 == name).map(_._3)
-      },
-      tagged)
-  }
-
-  /** Per-table fragment RDDs plus the persisted tagged pass they derive
-    * from — the handle callers need to release the cached pass once
-    * done (returning only the derived RDDs would strand the persisted
-    * parent in the block manager with no way to unpersist it).
-    */
-  final case class TableLines(tables: Seq[(String, RDD[String])],
-                              source: RDD[(String, Long, String)]) {
-    def unpersist(): Unit = { source.unpersist(false); () }
-  }
-
-  /** The single tagged pass behind [[tableLineRdds]]: one row per content
-    * line of any fragment as (table, lineIdx, line) in file order, plus
-    * the `(start, end, name)` ranges (line-index space, end exclusive,
-    * `Long.MaxValue` = to-EOF). The returned RDD is persisted serialized
-    * with disk spill so per-table derivations scan memory, not the file;
-    * callers that consume it once should `unpersist()` it.
-    */
-  def taggedTableLines(spark: SparkSession, path: String)
+  private def taggedTableLines(spark: SparkSession, path: String)
       : (Seq[(Long, Long, String)], RDD[(String, Long, String)]) = {
     val bare = "^[A-Z]\\S+$"
     val lines = spark.sparkContext.textFile(path).zipWithIndex()
@@ -131,21 +95,27 @@ object GlobalSplitter {
         if (rs(mid)._1 <= j) { hit = mid; lo = mid + 1 } else hi = mid - 1
       }
       if (hit >= 0 && j < rs(hit)._2) Some((rs(hit)._3, j, l)) else None
-    }.persist(StorageLevel.MEMORY_AND_DISK_SER)
+    }
     (ranges, tagged)
   }
 
-  /** Collect [[tableLineRdds]] fragments back to codebook-sized strings —
-    * drop-in equal to [[split]] over the same file's content. One
-    * collect of the single tagged pass; grouping is driver-side (the
-    * FRAGMENTS are codebook-sized even when the surrounding dump is not).
+  /** Executor-side variant of [[split]] for a dump too large to hold as
+    * one driver-side string — drop-in equal to [[split]] over the same
+    * file's content. Two metadata-only passes collect the marker lines
+    * (bare table names, and the lines just after them to test the blank
+    * separator); the `(start, end, name)` ranges are then BROADCAST and
+    * every fragment is carved in ONE tagged pass over the file, collected
+    * once — the number of full-file scans does not grow with the table
+    * count. Grouping is driver-side (the FRAGMENTS are codebook-sized even
+    * when the surrounding dump is not). A table starts at a bare
+    * `^[A-Z]\S+$` line followed by a blank line (first occurrence per
+    * name wins) and runs until the next bare name line.
     */
   def splitDistributed(spark: SparkSession, path: String)
       : Map[String, String] = {
     val (ranges, tagged) = taggedTableLines(spark, path)
     if (ranges.isEmpty) return Map.empty
     val byTable = tagged.collect().groupBy(_._1)
-    tagged.unpersist(false)
     ranges.map { case (_, _, name) =>
       name -> byTable.getOrElse(name, Array.empty)
         .sortBy(_._2).map(_._3).mkString("\n").trim

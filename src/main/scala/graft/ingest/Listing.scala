@@ -133,19 +133,6 @@ object Listing {
     dest
   }
 
-  /** A23: sequential download→load loop over every listed zip (the
-    * reference's actual behavior, import_all.py:107-108).
-    */
-  def loadAll(ingest: NcdIngest, listingUrl: String,
-              fetchPage: String => String,
-              fetchZip: String => Path): Seq[String] = {
-    zipUrls(fetchPage(listingUrl), listingUrl).flatMap { url =>
-      val zipPath = fetchZip(url)
-      try ingest.loadZip(zipPath.toString)
-      finally Files.deleteIfExists(zipPath)
-    }
-  }
-
   /** A23, pipelined: the 2-deep download/ingest overlap the reference
     * wanted but never finished (README.md:83-87) — zip N+1 downloads while
     * zip N ingests. Load order (and therefore catalog state) stays

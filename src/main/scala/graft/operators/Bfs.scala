@@ -123,29 +123,25 @@ object Bfs {
     // broadcast threshold AQE broadcasts it, and once it outgrows that
     // (the regime this path exists for) the per-hop sort-merge join finds
     // the edge side pre-clustered and shuffles only frontier-sized data
-    val sym = pairs.filter(col("a") =!= col("b"))
+    val sym = Materialize.checkpointed(pairs.filter(col("a") =!= col("b"))
       .select(col("a").as("src"), col("b").as("dst"))
       .unionAll(pairs.select(col("b").as("src"), col("a").as("dst")))
-      .repartition(col("src"))
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+      .repartition(col("src")))
     val seed = pairs
       .agg(least(min(col("a")), min(col("b"))).as("node")).filter(col("node").isNotNull)
       .select(col("node"), lit(0).as("level"))
-    var visited = seed
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+    var visited = Materialize.checkpointed(seed)
     var frontier = visited
     var hop = 1
     // stop early once the frontier empties — later hops cannot reach
     // anything, and each skipped hop saves three exchanges
     while (hop <= hops && !frontier.isEmpty) {
-      frontier = sym
+      frontier = Materialize.checkpointed(sym
         .join(frontier.select(col("node")), sym("src") === col("node"))
         .select(col("dst").as("node")).distinct()
         .join(visited.select(col("node")), Seq("node"), "left_anti")
-        .select(col("node"), lit(hop).as("level"))
-        .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-      visited = visited.unionAll(frontier)
-        .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+        .select(col("node"), lit(hop).as("level")))
+      visited = Materialize.checkpointed(visited.unionAll(frontier))
       hop += 1
     }
     visited.select(col("level"), col("node"))

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Connected components over an undirected edge list — the clustering step
   * that turns verified near-dup pairs into dedup groups (transitive chains
@@ -110,17 +109,16 @@ object ConnectedComponents {
     val longPairs = castLong(pairs)
     // node universe: self-loop-only and isolated-in-contraction nodes must
     // still be labeled (with themselves) in the output
-    val nodes = longPairs
+    val nodes = Materialize.lazyCheckpointed(longPairs
       .select(col("a").as("node"))
       .unionAll(longPairs.select(col("b").as("node")))
-      .distinct()
-      .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
+      .distinct())
 
-    var edges = longPairs.filter(col("a") =!= col("b"))
-      .select(greatest(col("a"), col("b")).as("hi"),
-              least(col("a"), col("b")).as("lo"))
-      .distinct()
-      .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
+    var edges = Materialize.lazyCheckpointed(
+      longPairs.filter(col("a") =!= col("b"))
+        .select(greatest(col("a"), col("b")).as("hi"),
+                least(col("a"), col("b")).as("lo"))
+        .distinct())
 
     def fingerprint(e: DataFrame): Seq[Any] =
       e.agg(count(lit(1)),
@@ -152,7 +150,7 @@ object ConnectedComponents {
         .unionAll(ssMin.select(col("hi").as("node"), col("m")))
         .select(col("node").as("hi"), col("m").as("lo")) // m ≤ every lo: canonical
         .distinct()
-      edges = ss.localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
+      edges = Materialize.lazyCheckpointed(ss)
       val fp = fingerprint(edges)
       converged = fp == prevFp &&
         (fp.head == 0L ||
@@ -187,9 +185,9 @@ object ConnectedComponents {
     // (an eager checkpoint followed by the checksum aggregate would pay
     // two). Lineage is still cut at materialization, keeping the loop's
     // plans flat.
-    var labels = edges.select(col("a").as("doc")).distinct()
-      .withColumn("label", col("doc"))
-      .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
+    var labels = Materialize.lazyCheckpointed(
+      edges.select(col("a").as("doc")).distinct()
+        .withColumn("label", col("doc")))
     var prevSum = checksum(labels)
     var converged = false
     var iter = 0
@@ -202,9 +200,8 @@ object ConnectedComponents {
         .join(labels, edges("a") === labels("doc"))
         .select(col("b").as("doc"), col("label"))
         .unionAll(labels)
-      labels = contrib
-        .groupBy("doc").agg(min("label").as("label"))
-        .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
+      labels = Materialize.lazyCheckpointed(
+        contrib.groupBy("doc").agg(min("label").as("label")))
       val sumNow = checksum(labels)
       converged = sumNow.compareTo(prevSum) == 0
       prevSum = sumNow

@@ -74,7 +74,6 @@ object CorpusPipeline {
               cfg: PipelineConfig = PipelineConfig(),
               shingleSource: Option[DataFrame] = None)
       : (DataFrame, Seq[(String, Long)]) = {
-    ShingleHashes.register(spark)
     val funnel = Seq.newBuilder[(String, Long)]
     funnel += "input" -> docs.count()
 

@@ -167,9 +167,8 @@ object PageRank {
     // action found the caches already unpersisted and recomputed the
     // edge derivation once per iteration (the round-12 regression this
     // ordering fixes).
-    var ranks = deg
-      .select(col("src").as("node"), lit(1000000L).as("r"))
-      .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
+    var ranks = Materialize.lazyCheckpointed(
+      deg.select(col("src").as("node"), lit(1000000L).as("r")))
     for (it <- 1 to iters) {
       // DIV (integral divide) throughout — a float Divide would round
       // where the driver path truncates, and past 2^53 would drift. BOTH
@@ -182,13 +181,15 @@ object PageRank {
       // itself (r' ≤ 150000 + 0.85·nV·10⁶ outgrows BIGINT only past
       // nV ≈ 1.08e13 — beyond any real graph). DIV on decimals still
       // truncates like the integer twin, so the oracle stays hash-exact
-      ranks = edgeDeg.join(ranks, edgeDeg("src") === ranks("node"))
+      val next = edgeDeg.join(ranks, edgeDeg("src") === ranks("node"))
         .groupBy(col("dst"))
         .agg(expr("CAST(150000 + (CAST(850000 AS DECIMAL(38,0)) *" +
           " sum(CAST(r DIV deg AS DECIMAL(38,0)))) DIV 1000000" +
           " AS BIGINT)").as("r"))
         .select(col("dst").as("node"), col("r"))
-        .localCheckpoint(it == iters, StorageLevel.MEMORY_AND_DISK_SER)
+      ranks =
+        if (it == iters) Materialize.checkpointed(next)
+        else Materialize.lazyCheckpointed(next)
     }
     edgeDeg.unpersist(false)
     ranks.select(col("node").as("pk"), col("r").as("rank_scaled"))

@@ -49,14 +49,6 @@ object StagedArtifacts {
     p.toString
   }
 
-  /** Register an externally created scratch dir (streaming feed/ckpt
-    * staging) for exit-time deletion.
-    */
-  def register(path: String): String = {
-    dirs.add(java.nio.file.Paths.get(path))
-    path
-  }
-
   /** Time one mirror family's build; seconds accumulate per key (a
     * family built at several SFs or variants records each under its own
     * key). Purely additive accounting — the caller's result is returned

@@ -19,10 +19,9 @@ import graft.functions.ZValue
   */
 object ZOrder {
 
-  /** Curve-value column. Requires `z_value16` to be resolvable in the
-    * session — true for any session built with
-    * [[graft.plans.GraftExtensions]]; otherwise call
-    * `ZValue.register(spark)` first ([[layout]] does).
+  /** Curve-value column. `z_value16` resolves in any session with
+    * [[graft.plans.GraftExtensions]] installed (every
+    * [[graft.GraftSession]]).
     */
   def zkey(dimA: Column, dimB: Column): Column =
     ZValue.of(pmod(dimA.cast("long"), lit(65536L)),
@@ -33,8 +32,6 @@ object ZOrder {
     */
   def layout(df: DataFrame, dimA: Column, dimB: Column,
              numFiles: Int): DataFrame = {
-    val spark = df.sparkSession
-    ZValue.register(spark)
     df.withColumn("__z", zkey(dimA, dimB))
       .repartitionByRange(numFiles, col("__z"))
       .sortWithinPartitions("__z")

@@ -5,7 +5,15 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.functions.call_function
 
-/** Session extension installer for the custom whole-plan operators.
+/** Session extension installer: the one registry of the native
+  * expressions, plus the whole-plan operators. Every native function is
+  * an entry of [[GraftExtensions.Functions]] and reaches a session only
+  * through it, so `spark.sql`, `QueryClient` and the Column helpers
+  * (`of`/`dot`, which call the function by name) see the same set in
+  * every session; without the extension a call fails with
+  * `UNRESOLVED_ROUTINE` naming the function. `GraftSessionSpec` fails on
+  * a per-session temp-function registration in the library and on a
+  * declared `FunctionName` missing from the list.
   *
   * Install with `withExtensions(new GraftExtensions)` on a session builder
   * or `--conf spark.sql.extensions=graft.plans.GraftExtensions` (the config
@@ -15,45 +23,47 @@ import org.apache.spark.sql.functions.call_function
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  import graft.functions._
-
-  private def fn(name: String, clazz: Class[_],
-                 builder: Seq[Expression] => Expression) =
-    (FunctionIdentifier(name), new ExpressionInfo(clazz.getName, name), builder)
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // the as-of join stack: marker function + rewrite + planning
-    ext.injectFunction(fn(AsofLE.FunctionName, classOf[AsofLE],
-      exprs => AsofLE(exprs.head, exprs(1), exprs.drop(2).headOption)))
+    GraftExtensions.Functions.foreach { case (name, clazz, builder) =>
+      ext.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(clazz.getName, name), builder))
+    }
+
+    // the as-of join stack: the asof_le marker above + rewrite + planning
     ext.injectOptimizerRule(RewriteAsofJoin)
     ext.injectPlannerStrategy(_ => AsofJoinStrategy)
 
     // free length-difference guard in front of thresholded levenshtein
     // filters (the fuzzy-match prefilter, applied automatically)
     ext.injectOptimizerRule(_ => LevenshteinPrefilter)
-
-    // every native expression, so the pure-SQL surface (spark.sql /
-    // QueryClient) can call the whole hash/vector family without any
-    // Scala-side register() call
-    ext.injectFunction(fn(ShingleHashes.FunctionName, classOf[ShingleHashes],
-      exprs => ShingleHashes(exprs.head)))
-    ext.injectFunction(fn(MinhashBandKeys.FunctionName, classOf[MinhashBandKeys],
-      exprs => MinhashBandKeys(exprs.head)))
-    ext.injectFunction(fn(SimhashSig.FunctionName, classOf[SimhashSig],
-      exprs => SimhashSig(exprs.head)))
-    ext.injectFunction(fn(SrpBandKeys.FunctionName, classOf[SrpBandKeys],
-      exprs => SrpBandKeys(exprs.head)))
-    ext.injectFunction(fn(FloatVectorDot.FunctionName, classOf[FloatVectorDot],
-      exprs => FloatVectorDot(exprs.head, exprs(1))))
-    ext.injectFunction(fn(OracleDateParse.FunctionName, classOf[OracleDateParse],
-      exprs => OracleDateParse(exprs.head)))
-    ext.injectFunction(fn(NGrams.FunctionName, classOf[NGrams],
-      exprs => NGrams(exprs.head, exprs(1))))
-    ext.injectFunction(fn(LongVectorL2.FunctionName, classOf[LongVectorL2],
-      exprs => LongVectorL2(exprs.head, exprs(1))))
-    ext.injectFunction(fn(ZValue.FunctionName, classOf[ZValue],
-      exprs => ZValue(exprs.head, exprs(1))))
   }
+}
+
+object GraftExtensions {
+
+  import graft.functions._
+
+  /** Every native expression: SQL name, expression class, builder. */
+  val Functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    (AsofLE.FunctionName, classOf[AsofLE],
+      e => AsofLE(e.head, e(1), e.drop(2).headOption)),
+    (ShingleHashes.FunctionName, classOf[ShingleHashes], e => ShingleHashes(e.head)),
+    (MinhashBandKeys.FunctionName, classOf[MinhashBandKeys], e => MinhashBandKeys(e.head)),
+    (SimhashSig.FunctionName, classOf[SimhashSig], e => SimhashSig(e.head)),
+    (SrpBandKeys.FunctionName, classOf[SrpBandKeys], e => SrpBandKeys(e.head)),
+    (NfcNormalize.FunctionName, classOf[NfcNormalize], e => NfcNormalize(e.head)),
+    (OracleDateParse.FunctionName, classOf[OracleDateParse], e => OracleDateParse(e.head)),
+    (NGrams.FunctionName, classOf[NGrams], e => NGrams(e.head, e(1))),
+    (WindowHashes.FunctionName, classOf[WindowHashes],
+      e => WindowHashes(e.head, e(1), e(2))),
+    (WinnowFingerprints.FunctionName, classOf[WinnowFingerprints],
+      e => WinnowFingerprints(e.head, e(1), e(2))),
+    (FloatVectorDot.FunctionName, classOf[FloatVectorDot], e => FloatVectorDot(e.head, e(1))),
+    (DoubleVectorDot.FunctionName, classOf[DoubleVectorDot], e => DoubleVectorDot(e.head, e(1))),
+    (LongVectorDot.FunctionName, classOf[LongVectorDot], e => LongVectorDot(e.head, e(1))),
+    (LongVectorL2.FunctionName, classOf[LongVectorL2], e => LongVectorL2(e.head, e(1))),
+    (MaxSimMilli.FunctionName, classOf[MaxSimMilli], e => MaxSimMilli(e.head, e(1))),
+    (ZValue.FunctionName, classOf[ZValue], e => ZValue(e.head, e(1))))
 }
 
 /** Public DataFrame-level API for the native as-of join. */

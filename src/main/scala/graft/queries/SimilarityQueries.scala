@@ -24,14 +24,10 @@ object SimilarityQueries {
 
   /** All vector math goes through the native codegen expression
     * (FloatVectorDot — ~3x the throughput of the zip_with/aggregate fold on
-    * pairwise workloads, bit-identical results). Registration is idempotent
-    * per session.
+    * pairwise workloads, bit-identical results).
     */
-  private def dot(s: SparkSession)(a: Column, b: Column): Column = {
-    FloatVectorDot.register(s)
-    FloatVectorDot.dot(a, b)
-  }
-  private def norm(s: SparkSession)(a: Column): Column = sqrt(dot(s)(a, a))
+  private def dot(a: Column, b: Column): Column = FloatVectorDot.dot(a, b)
+  private def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** FIXED index cardinalities — deliberately independent of corpus size.
     *
@@ -123,7 +119,7 @@ object SimilarityQueries {
         .crossJoin(sel)
         .groupBy(col("vec_id"))
         .agg(first(col("v")).as("v"), first(col("vv")).as("vv"),
-          min(floor((col("vv") - lit(2.0) * dot(s)(col("v"), col("sv"))
+          min(floor((col("vv") - lit(2.0) * dot(col("v"), col("sv"))
             + col("svv")) * lit(1000000)).cast("long")).as("mind_s"))
         .orderBy(desc("mind_s"), asc("vec_id"))
         .limit(1).head()
@@ -146,7 +142,7 @@ object SimilarityQueries {
     val e = tableParallel(s, dir, "embeddings")
       .filter(col("vec_id") < 300)
       .select(col("vec_id"), col("embedding").as("v"))
-      .withColumn("nrm", norm(s)(col("v")))
+      .withColumn("nrm", norm(col("v")))
     val q = broadcast(e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
               col("nrm").as("qn")))
@@ -154,7 +150,7 @@ object SimilarityQueries {
       .orderBy(desc("sim"), asc("vec_id"))
     val exact = e.join(q, col("vec_id") =!= col("query_id"))
       .withColumn("sim",
-        dot(s)(col("qv"), col("v")) / (col("qn") * col("nrm")))
+        dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
       .withColumn("rnk", row_number().over(wTop))
       .filter(col("rnk") <= 10)
       .select(col("query_id"), col("vec_id").as("neighbor_id"))
@@ -162,8 +158,8 @@ object SimilarityQueries {
     val cent = broadcast(hashSample(e, nlist)
       .select(col("vec_id").as("cid"), col("v").as("cv")))
     def l2(a: String, b: String) =
-      dot(s)(col(a), col(a)) - lit(2.0) * dot(s)(col(a), col(b)) +
-        dot(s)(col(b), col(b))
+      dot(col(a), col(a)) - lit(2.0) * dot(col(a), col(b)) +
+        dot(col(b), col(b))
     val wAssign = Window.partitionBy("vec_id")
       .orderBy(asc("d2"), asc("cid"))
     val assign = e.join(cent)
@@ -181,7 +177,7 @@ object SimilarityQueries {
     val ivf = broadcast(probe).join(assign, "cid")
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("sim",
-        dot(s)(col("qv"), col("v")) / (col("qn") * col("nrm")))
+        dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
       .withColumn("rnk", row_number().over(wTop))
       .filter(col("rnk") <= 10)
       .select(col("query_id"), col("vec_id").as("neighbor_id"))
@@ -212,7 +208,7 @@ object SimilarityQueries {
     val q = broadcast(e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("v").as("qv")))
     def d2(a: Column, b: Column): Column =
-      dot(s)(a, a) - lit(2.0) * dot(s)(a, b) + dot(s)(b, b)
+      dot(a, a) - lit(2.0) * dot(a, b) + dot(b, b)
     val wExact = Window.partitionBy("query_id")
       .orderBy(asc("d2s"), asc("vec_id"))
     val exact = e.join(q, col("vec_id") =!= col("query_id"))
@@ -293,13 +289,12 @@ object SimilarityQueries {
     ivfPqMirror.computeIfAbsent(dir, _ => graft.operators.StagedArtifacts.timed(
       s"ivfpq@${new java.io.File(dir).getName}") {
       import graft.functions.DoubleVectorDot
-      DoubleVectorDot.register(s)
       def ddot(a: Column, b: Column): Column = DoubleVectorDot.dot(a, b)
       def rd2(a: Column, b: Column): Column =
         ddot(a, a) - lit(2.0) * ddot(a, b) + ddot(b, b)
       def fd2(a: String, b: String): Column =
-        dot(s)(col(a), col(a)) - lit(2.0) * dot(s)(col(a), col(b)) +
-          dot(s)(col(b), col(b))
+        dot(col(a), col(a)) - lit(2.0) * dot(col(a), col(b)) +
+          dot(col(b), col(b))
       def residual(v: Column, c: Column): Column =
         zip_with(v, c, (x, y) => x.cast("double") - y.cast("double"))
 
@@ -368,13 +363,12 @@ object SimilarityQueries {
   private def ivfPqTopM(s: SparkSession, dir: String,
                         queryPred: Column, m: Int): DataFrame = {
     import graft.functions.DoubleVectorDot
-    DoubleVectorDot.register(s)
     def ddot(a: Column, b: Column): Column = DoubleVectorDot.dot(a, b)
     def rd2(a: Column, b: Column): Column =
       ddot(a, a) - lit(2.0) * ddot(a, b) + ddot(b, b)
     def fd2(a: String, b: String): Column =
-      dot(s)(col(a), col(a)) - lit(2.0) * dot(s)(col(a), col(b)) +
-        dot(s)(col(b), col(b))
+      dot(col(a), col(a)) - lit(2.0) * dot(col(a), col(b)) +
+        dot(col(b), col(b))
     def residual(v: Column, c: Column): Column =
       zip_with(v, c, (x, y) => x.cast("double") - y.cast("double"))
 
@@ -533,7 +527,6 @@ object SimilarityQueries {
       : (org.apache.spark.sql.DataFrame, Int) = {
     import graft.functions.LongVectorL2
     import graft.operators.Materialize
-    LongVectorL2.register(s)
     import s.implicits._
     val e = Materialize(tableParallel(s, dir, "embeddings")
       .select(col("vec_id"),
@@ -692,10 +685,10 @@ object SimilarityQueries {
         val e = tableParallel(s, dir, "embeddings")
           .filter(col("vec_id") < 300)
           .select(col("vec_id"), col("embedding").as("v"))
-          .withColumn("nrm", norm(s)(col("v")))
+          .withColumn("nrm", norm(col("v")))
         e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
           .withColumn("cos_sim",
-            dot(s)(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm")))
+            dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm")))
           .filter(col("cos_sim") >= 0.4)
           .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
                   round(col("cos_sim"), 4).as("cos_sim"))
@@ -715,12 +708,12 @@ object SimilarityQueries {
       (s, dir) => {
         val e = tableParallel(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding").as("v"))
-          .withColumn("nrm", norm(s)(col("v")))
+          .withColumn("nrm", norm(col("v")))
         val q = broadcast(e.filter(col("vec_id") < 5)
           .select(col("vec_id").as("query_id"), col("v").as("qv"),
                   col("nrm").as("qn")))
         val sims = e.join(q, col("vec_id") =!= col("query_id"))
-          .withColumn("sim", dot(s)(col("qv"), col("v")) / (col("qn") * col("nrm")))
+          .withColumn("sim", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
         val w = Window.partitionBy("query_id")
           .orderBy(desc("sim"), asc("vec_id"))
         sims.withColumn("rnk", row_number().over(w))
@@ -762,8 +755,8 @@ object SimilarityQueries {
           .select(col("vec_id").as("cid"), col("v").as("cv"))))
 
         def l2(a: String, b: String) =
-          dot(s)(col(a), col(a)) - lit(2.0) * dot(s)(col(a), col(b)) +
-            dot(s)(col(b), col(b))
+          dot(col(a), col(a)) - lit(2.0) * dot(col(a), col(b)) +
+            dot(col(b), col(b))
 
         val wAssign = Window.partitionBy("vec_id")
           .orderBy(asc("d2"), asc("cid"))
@@ -786,7 +779,7 @@ object SimilarityQueries {
         val cands = broadcast(probe).join(assign, "cid")
           .filter(col("vec_id") =!= col("query_id"))
           .withColumn("sim",
-            dot(s)(col("qv"), col("v")) / (norm(s)(col("qv")) * norm(s)(col("v"))))
+            dot(col("qv"), col("v")) / (norm(col("qv")) * norm(col("v"))))
         val wTop = Window.partitionBy("query_id")
           .orderBy(desc("sim"), asc("vec_id"))
         cands.withColumn("rnk", row_number().over(wTop))
@@ -858,7 +851,6 @@ object SimilarityQueries {
     "q47_embed_lsh_srp" -> QueryDef(
       (s, dir) => {
         import graft.functions.SrpBandKeys
-        SrpBandKeys.register(s)
         val e = tableParallel(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding").as("v"))
         // native signature: one loop over (plane, dim) per vector emits the
@@ -876,8 +868,8 @@ object SimilarityQueries {
                   col("a.v").as("va"), col("b.v").as("vb"))
           .distinct()
         cand
-          .withColumn("cos_sim", dot(s)(col("va"), col("vb")) /
-            (norm(s)(col("va")) * norm(s)(col("vb"))))
+          .withColumn("cos_sim", dot(col("va"), col("vb")) /
+            (norm(col("va")) * norm(col("vb"))))
           .filter(col("cos_sim") >= 0.4)
           .select(col("vec_a"), col("vec_b"),
                   round(col("cos_sim"), 4).as("cos_sim"))
@@ -924,13 +916,12 @@ object SimilarityQueries {
     "q64_lsh_recall" -> QueryDef(
       (s, dir) => {
         import graft.functions.SrpBandKeys
-        SrpBandKeys.register(s)
         val e = tableParallel(s, dir, "embeddings")
           .filter(col("vec_id") < 300)
           .select(col("vec_id"), col("embedding").as("v"))
-          .withColumn("nrm", norm(s)(col("v")))
+          .withColumn("nrm", norm(col("v")))
         val exact = e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
-          .filter(dot(s)(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm"))
+          .filter(dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm"))
             >= 0.4)
           .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
         val bands = e.select(col("vec_id"), col("v"), col("nrm"),
@@ -945,7 +936,7 @@ object SimilarityQueries {
             col("a.v").as("va"), col("b.v").as("vb"),
             col("a.nrm").as("na"), col("b.nrm").as("nb"))
           .distinct()
-          .filter(dot(s)(col("va"), col("vb")) / (col("na") * col("nb")) >= 0.4)
+          .filter(dot(col("va"), col("vb")) / (col("na") * col("nb")) >= 0.4)
           .select("vec_a", "vec_b")
         val hits = exact
           .join(lsh.withColumn("hit", lit(1)), Seq("vec_a", "vec_b"), "left")
@@ -1093,7 +1084,7 @@ object SimilarityQueries {
             .select(col("vec_id").as("cid"), col("v")), "cid")
             .select(col("cid"), col("j"), col("sub").as("csub"))))
         def d2(a: Column, b: Column): Column =
-          dot(s)(a, a) - lit(2.0) * dot(s)(a, b) + dot(s)(b, b)
+          dot(a, a) - lit(2.0) * dot(a, b) + dot(b, b)
         // encode: per (vector, subspace), code = argmin_c d²(sub, cent_c)
         val codes = subbed(e, "vec_id").join(cents, "j")
           .withColumn("d2s", floor(d2(col("sub"), col("csub")) * 1e6)
@@ -1282,14 +1273,14 @@ object SimilarityQueries {
           .select(col("neighbor_id"), col("rnk").as("adc_rnk")))
         val e = tableParallel(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding").as("v"),
-            norm(s)(col("embedding")).as("nrm"))
+            norm(col("embedding")).as("nrm"))
         val qv = broadcast(e.filter(col("vec_id") === 0)
           .select(col("v").as("qv"), col("nrm").as("qnrm")))
         val cand = Materialize(
           e.join(broadcast(topm), col("vec_id") === col("neighbor_id"))
             .crossJoin(qv)
             .select(col("vec_id"), col("adc_rnk"), col("v"), col("nrm"),
-              floor(dot(s)(col("v"), col("qv")) / (col("nrm") * col("qnrm"))
+              floor(dot(col("v"), col("qv")) / (col("nrm") * col("qnrm"))
                 * lit(1000000)).cast("long").as("rel_s")))
         var picked = Vector.empty[(Long, Array[Float], Double)]
         var out = Vector.empty[(Int, Long, Int, Long)]
@@ -1307,7 +1298,7 @@ object SimilarityQueries {
                 .agg(first(col("adc_rnk")).as("adc_rnk"),
                   first(col("v")).as("v"), first(col("nrm")).as("nrm"),
                   (first(col("rel_s")) * 7 -
-                    max(floor(dot(s)(col("v"), col("sv")) /
+                    max(floor(dot(col("v"), col("sv")) /
                       (col("nrm") * col("snrm")) * lit(1000000))
                       .cast("long")) * 3).as("score_s"))
             }
@@ -1493,15 +1484,15 @@ object SimilarityQueries {
             .limit(IvfNlist.toInt)
             .select(col("ccid").as("cid"), col("cv")))
         def l2(a: String, b: String) =
-          dot(s)(col(a), col(a)) - lit(2.0) * dot(s)(col(a), col(b)) +
-            dot(s)(col(b), col(b))
+          dot(col(a), col(a)) - lit(2.0) * dot(col(a), col(b)) +
+            dot(col(b), col(b))
         val wAssign = Window.partitionBy("vec_id")
           .orderBy(asc("d2"), asc("cid"))
         val assigned = Materialize(e.join(cent)
           .withColumn("d2", l2("v", "cv"))
           .withColumn("rn", row_number().over(wAssign))
           .filter(col("rn") === 1)
-          .select(col("vec_id"), col("v"), norm(s)(col("v")).as("nrm"),
+          .select(col("vec_id"), col("v"), norm(col("v")).as("nrm"),
             col("cid")))
         // within-cluster pair search through the rank-blocked self-join:
         // identical pair set to a plain cid-equi-join (so the oracle below
@@ -1510,7 +1501,7 @@ object SimilarityQueries {
         // one k²-pair reducer
         val dropped = graft.operators.SkewTools
           .blockedSelfPairs(assigned, "cid", "vec_id", SemDedupBlock)
-          .filter(dot(s)(col("a.v"), col("b.v")) /
+          .filter(dot(col("a.v"), col("b.v")) /
             (col("a.nrm") * col("b.nrm")) >= 0.4)
           .select(col("b.vec_id").as("vec_id")).distinct()
           .withColumn("is_dup", lit(true))
@@ -1568,13 +1559,13 @@ object SimilarityQueries {
         val e = tableParallel(s, dir, "embeddings")
           .filter(col("vec_id") < 300)
           .select(col("vec_id"), col("embedding").as("v"),
-            norm(s)(col("embedding")).as("nrm"))
+            norm(col("embedding")).as("nrm"))
         val qv = broadcast(e.filter(col("vec_id") === 0)
           .select(col("v").as("qv"), col("nrm").as("qnrm")))
         val cand = Materialize(e.filter(col("vec_id") > 0)
           .crossJoin(qv)
           .select(col("vec_id"), col("v"), col("nrm"),
-            floor(dot(s)(col("v"), col("qv")) / (col("nrm") * col("qnrm"))
+            floor(dot(col("v"), col("qv")) / (col("nrm") * col("qnrm"))
               * lit(1000000)).cast("long").as("rel_s")))
         var picked = Vector.empty[(Long, Array[Float], Double)]
         var out = Vector.empty[(Int, Long, Long)]
@@ -1591,7 +1582,7 @@ object SimilarityQueries {
                 .groupBy(col("vec_id"))
                 .agg(first(col("v")).as("v"), first(col("nrm")).as("nrm"),
                   (first(col("rel_s")) * 7 -
-                    max(floor(dot(s)(col("v"), col("sv")) /
+                    max(floor(dot(col("v"), col("sv")) /
                       (col("nrm") * col("snrm")) * lit(1000000))
                       .cast("long")) * 3).as("score_s"))
             }
@@ -1627,7 +1618,7 @@ object SimilarityQueries {
         val cand = Materialize(tableParallel(s, dir, "embeddings")
           .filter(col("vec_id") < 300)
           .select(col("vec_id"), col("embedding").as("v"),
-            dot(s)(col("embedding"), col("embedding")).as("vv")))
+            dot(col("embedding"), col("embedding")).as("vv")))
         val (_, out) = kcenterPicks(s, cand, MmrK)
         import s.implicits._
         out.toDF("rnk", "vec_id", "radius_s").orderBy("rnk")
@@ -1654,7 +1645,7 @@ object SimilarityQueries {
         val cand = Materialize(tableParallel(s, dir, "embeddings")
           .filter(col("vec_id") < 300)
           .select(col("vec_id"), col("embedding").as("v"),
-            dot(s)(col("embedding"), col("embedding")).as("vv")))
+            dot(col("embedding"), col("embedding")).as("vv")))
         val (picked, _) = kcenterPicks(s, cand, MmrK)
         import s.implicits._
         val rand = hashSample(cand, MmrK)
@@ -1667,7 +1658,7 @@ object SimilarityQueries {
           val selDf = broadcast(sel.toDF("svec_id", "sv", "svv"))
           cand.crossJoin(selDf)
             .groupBy(col("vec_id"))
-            .agg(min(floor((col("vv") - lit(2.0) * dot(s)(col("v"), col("sv"))
+            .agg(min(floor((col("vv") - lit(2.0) * dot(col("v"), col("sv"))
               + col("svv")) * lit(1000000)).cast("long")).as("mind_s"))
             .agg(count(lit(1)).as("n_points"),
               max("mind_s").as("radius_s"),
@@ -1783,14 +1774,14 @@ object SimilarityQueries {
         val e = tableParallel(s, dir, "embeddings")
           .filter(col("vec_id") < 300)
           .select(col("vec_id"), col("embedding").as("v"), col("label"),
-            dot(s)(col("embedding"), col("embedding")).as("vv"))
+            dot(col("embedding"), col("embedding")).as("vv"))
         val a = e.select(col("vec_id").as("aid"), col("v").as("av"),
           col("label").as("albl"), col("vv").as("avv"))
         val b = e.select(col("vec_id").as("bid"), col("v").as("bv"),
           col("label").as("blbl"), col("vv").as("bvv"))
         val pairs = a.join(b, col("aid") =!= col("bid"))
           .withColumn("d2s",
-            floor((col("avv") - lit(2.0) * dot(s)(col("av"), col("bv"))
+            floor((col("avv") - lit(2.0) * dot(col("av"), col("bv"))
               + col("bvv")) * lit(1000000)).cast("long"))
         val wk = Window.partitionBy("aid").orderBy(asc("d2s"), asc("bid"))
         val votes = pairs
@@ -1851,7 +1842,7 @@ object SimilarityQueries {
         val k = 5
         val e = tableParallel(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding").as("v"), col("label"),
-            dot(s)(col("embedding"), col("embedding")).as("vv"))
+            dot(col("embedding"), col("embedding")).as("vv"))
         val coarse = broadcast(Materialize(hashSample(e, IvfNlist)
           .select(col("vec_id").as("ccid"), col("v").as("cv"),
             col("vv").as("cvv"))))
@@ -1859,7 +1850,7 @@ object SimilarityQueries {
           .orderBy(asc("cd2s"), asc("ccid"))
         val assign = e.join(coarse)
           .withColumn("cd2s",
-            floor((col("vv") - lit(2.0) * dot(s)(col("v"), col("cv"))
+            floor((col("vv") - lit(2.0) * dot(col("v"), col("cv"))
               + col("cvv")) * lit(1000000)).cast("long"))
           .withColumn("rn", row_number().over(wAssign))
           .filter(col("rn") === 1)
@@ -1876,7 +1867,7 @@ object SimilarityQueries {
         val once = Materialize.lazyCheckpointed(SkewTools
           .blockedSelfPairs(assign, "ccid", "vec_id", SemDedupBlock)
           .withColumn("d2s",
-            floor((col("a.vv") - lit(2.0) * dot(s)(col("a.v"), col("b.v"))
+            floor((col("a.vv") - lit(2.0) * dot(col("a.v"), col("b.v"))
               + col("b.vv")) * lit(1000000)).cast("long"))
           .select(col("a.vec_id").as("aid"), col("a.label").as("albl"),
             col("b.vec_id").as("bid"), col("b.label").as("blbl"),
@@ -2037,12 +2028,12 @@ object SimilarityQueries {
         val kTop = 20
         val e = tableParallel(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding").as("v"))
-          .withColumn("nrm", norm(s)(col("v")))
+          .withColumn("nrm", norm(col("v")))
         val q = broadcast(e.filter(col("vec_id") === 0)
           .select(col("v").as("qv"), col("nrm").as("qnrm")))
         val dense = e.filter(col("vec_id") > 0).join(q)
           .select(col("vec_id"),
-            floor(dot(s)(col("v"), col("qv")) / (col("nrm") * col("qnrm"))
+            floor(dot(col("v"), col("qv")) / (col("nrm") * col("qnrm"))
               * lit(1000000)).cast("long").as("ds"))
           .orderBy(desc("ds"), asc("vec_id")).limit(kTop)
         val dr = dense.withColumn("r_dense", row_number()
@@ -2108,15 +2099,15 @@ object SimilarityQueries {
         val e = tableParallel(s, dir, "embeddings")
         val qs = broadcast(e.filter(col("vec_id") < 8)
           .select(col("vec_id").as("qid"), col("embedding").as("qv"),
-            norm(s)(col("embedding")).as("qnrm"), col("label").as("qlbl")))
+            norm(col("embedding")).as("qnrm"), col("label").as("qlbl")))
         val cand = e.filter(col("vec_id") >= 100 && col("vec_id") < 400)
           .select(col("vec_id").as("cid"), col("embedding").as("cv"),
-            norm(s)(col("embedding")).as("cnrm"), col("label").as("clbl"))
+            norm(col("embedding")).as("cnrm"), col("label").as("clbl"))
         // both rankings (actual and ideal) re-read the scored pool;
         // cached, the queries×slice scoring pass runs once
         val scored = Materialize(cand.join(qs)
           .select(col("qid"), col("qlbl"), col("cid"),
-            floor(dot(s)(col("cv"), col("qv")) / (col("cnrm") * col("qnrm"))
+            floor(dot(col("cv"), col("qv")) / (col("cnrm") * col("qnrm"))
               * lit(1000000)).cast("long").as("cos_s"),
             when(col("clbl") === col("qlbl"), 3L)
               .when(abs(col("clbl") - col("qlbl")) === 1, 1L)
@@ -2196,7 +2187,6 @@ object SimilarityQueries {
       (s, dir) => {
         import graft.functions.LongVectorL2
         import org.apache.spark.sql.DataFrame
-        LongVectorL2.register(s)
         val e = tableParallel(s, dir, "embeddings")
           .select(col("vec_id"),
             transform(col("embedding"),
@@ -2288,13 +2278,13 @@ object SimilarityQueries {
         val margin = 500000L // 0.5 in L2² micro-units
         val e = Materialize(tableParallel(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding").as("v"), col("label"),
-            dot(s)(col("embedding"), col("embedding")).as("vv")))
+            dot(col("embedding"), col("embedding")).as("vv")))
         val anc = broadcast(e.filter(col("vec_id") < 8)
           .select(col("vec_id").as("aid"), col("v").as("av"),
             col("label").as("albl"), col("vv").as("avv")))
         val pairs = e.join(anc, col("vec_id") =!= col("aid"))
           .withColumn("d2s",
-            floor((col("avv") - lit(2.0) * dot(s)(col("av"), col("v"))
+            floor((col("avv") - lit(2.0) * dot(col("av"), col("v"))
               + col("vv")) * lit(1000000)).cast("long"))
         val pos = broadcast(pairs.filter(col("label") === col("albl"))
           .groupBy("aid")
@@ -2376,14 +2366,13 @@ object SimilarityQueries {
     "q217_multiprobe_lsh_recall" -> QueryDef(
       (s, dir) => {
         import graft.functions.SrpBandKeys
-        SrpBandKeys.register(s)
         val e = Materialize(tableParallel(s, dir, "embeddings")
           .filter(col("vec_id") < 300)
           .select(col("vec_id"), col("embedding").as("v"))
-          .withColumn("nrm", norm(s)(col("v"))))
+          .withColumn("nrm", norm(col("v"))))
         val exact = Materialize(e.as("a")
           .join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
-          .filter(dot(s)(col("a.v"), col("b.v")) /
+          .filter(dot(col("a.v"), col("b.v")) /
             (col("a.nrm") * col("b.nrm")) >= 0.4)
           .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b")))
         val bands = Materialize(e
@@ -2413,7 +2402,7 @@ object SimilarityQueries {
               col("nrm").as("na")), Seq("vec_a"))
             .join(e.select(col("vec_id").as("vec_b"), col("v").as("vb"),
               col("nrm").as("nb")), Seq("vec_b"))
-            .filter(dot(s)(col("va"), col("vb")) /
+            .filter(dot(col("va"), col("vb")) /
               (col("na") * col("nb")) >= 0.4)
             .select("vec_a", "vec_b")
           val nCand = cand.agg(count(lit(1)).as("n_cand"))
@@ -3780,7 +3769,6 @@ object SimilarityQueries {
         // order-free and max/Σ deterministic, so maxsim_milli2 is
         // bit-identical (MaxSimSpec pins native ≡ exploded). The size
         // guard mirrors the exploded form's drop of empty embeddings.
-        graft.functions.MaxSimMilli.register(s)
         val vecs = tableParallel(s, dir, "embeddings")
           .filter(size(col("embedding")) > 0)
           .select(col("vec_id"),
@@ -4094,7 +4082,6 @@ object SimilarityQueries {
         // a 2-exchange groupBy) with a broadcast nested-loop over the
         // bounded slice producing the 200·199 pair rows directly —
         // integer sums are order-free, so d2 is bit-identical.
-        graft.functions.LongVectorL2.register(s)
         // size guard (round-12 advice): the old exploded per-dimension
         // join emitted NO pair rows for an empty/null embedding, while
         // the array crossJoin would emit d2 = 0 pairs — unreachable with
@@ -4223,7 +4210,6 @@ object SimilarityQueries {
         // cross-set pair — replaces the exploded per-dimension join +
         // 2-exchange groupBy; integer dot is order-free so `d` is
         // bit-identical to the old sum(a.xv * b.xv)
-        graft.functions.LongVectorDot.register(s)
         // size guard: see q322 — empty embeddings must drop out like the
         // old exploded form, not score d = 0
         val vecs = Materialize(tableParallel(s, dir, "embeddings")

@@ -97,8 +97,6 @@ object TextQueries {
   private def lshMirrorBase(s: SparkSession, dir: String): String =
     lshMirror.computeIfAbsent(dir, _ => graft.operators.StagedArtifacts.timed(
       s"lsh@${new java.io.File(dir).getName}") {
-      ShingleHashes.register(s)
-      MinhashBandKeys.register(s)
       val out = graft.operators.StagedArtifacts.tempDir("graft-lsh-")
       val hs = Materialize(tableParallel(s, dir, "documents")
         .select(col("doc_id"), col("source"),
@@ -790,7 +788,6 @@ object TextQueries {
     */
   private[graft] def shingleTable(s: SparkSession, dir: String,
                                   stopShingleDf: Option[Long]): DataFrame = {
-    ShingleHashes.register(s)
     val sh = tableParallel(s, dir, "documents")
       .select(col("doc_id"),
         explode(ShingleHashes.of(tokens(col("text")))).as("sh"))
@@ -1062,7 +1059,6 @@ object TextQueries {
     // is near-identical) while shingle sets still separate unrelated docs.
     "q42_dedup_simhash" -> QueryDef(
       (s, dir) => {
-        SimhashSig.register(s)
         // signature is a NARROW per-doc projection (native SimhashSig)
         // over the shared hs mirror: nothing shuffles until the chunk
         // equi-join — the explode + 32-column conditional-sum
@@ -1216,7 +1212,6 @@ object TextQueries {
     // order (count desc, ngram asc) keeps the limit oracle-exact.
     "q65_ngram_udtf" -> QueryDef(
       (s, dir) => {
-        NGrams.register(s)
         tableParallel(s, dir, "documents")
           .select(col("doc_id"), NGrams.of(tokens(col("text")), lit(2)))
           .groupBy("ngram").agg(count(lit(1)).as("n"))
@@ -1346,7 +1341,6 @@ object TextQueries {
     // (< 2 tokens) count separately instead of polluting the average.
     "q75_repetition_ratio" -> QueryDef(
       (s, dir) => {
-        NGrams.register(s)
         val bg = tableParallel(s, dir, "documents")
           .select(col("doc_id"), col("lang"),
             NGrams.of(tokens(col("text")), lit(2)))
@@ -1596,7 +1590,6 @@ object TextQueries {
     // the composition behavior on real combining characters.
     "q108_normalize_text" -> QueryDef(
       (s, dir) => {
-        NfcNormalize.register(s)
         tableParallel(s, dir, "documents")
           .withColumn("ct", trim(regexp_replace(
             regexp_replace(NfcNormalize.of(lower(col("text"))),
@@ -1636,7 +1629,6 @@ object TextQueries {
         // the 8-token window hashes come from ONE native pass per doc
         // (WindowHashes); the old position-explode carried the whole
         // token array through the Generate and re-hashed interpreted
-        WindowHashes.register(s)
         val spans = Materialize(
           tableParallel(s, dir, "documents")
             .select(col("doc_id"), tokens(col("text")).as("ws"))
@@ -3702,7 +3694,6 @@ object TextQueries {
     // denominator.
     "q230_dup_span_share" -> QueryDef(
       (s, dir) => {
-        WindowHashes.register(s)
         val win = Materialize(tableParallel(s, dir, "documents")
           .select(col("doc_id"), col("source"),
             tokens(col("text")).as("ws"))
@@ -4531,7 +4522,6 @@ object TextQueries {
         // same pos·2³²+hash encoding, same first-occurrence dedup); the
         // old interpreted transform/slice/array_min chain cost O(len·w)
         // lambda evaluations per document and dominated this query
-        WinnowFingerprints.register(s)
         val fp = Materialize(tableParallel(s, dir, "documents")
           .select(col("doc_id"), col("source"),
             lower(trim(col("text"))).as("lt"))
@@ -4811,7 +4801,6 @@ object TextQueries {
     // pipeline exactly.
     "q271_segment_dedup" -> QueryDef(
       (s, dir) => {
-        WindowHashes.register(s)
         val seg = Materialize(tableParallel(s, dir, "documents")
           .select(col("doc_id"), col("source"), tokens(col("text")).as("ws"))
           .filter(size(col("ws")) >= 10)
@@ -5274,7 +5263,6 @@ object TextQueries {
     // quantifies.
     "q308_bbit_minwise" -> QueryDef(
       (s, dir) => {
-        ShingleHashes.register(s)
         val hs = Materialize(tableParallel(s, dir, "documents")
           .filter(col("doc_id") < 40)
           .select(col("doc_id"),
@@ -5584,7 +5572,6 @@ object TextQueries {
     // gain rows.
     "q318_greedy_set_cover" -> QueryDef(
       (s, dir) => {
-        ShingleHashes.register(s)
         // no distinct here: ShingleHashes dedups per doc, so the exploded
         // (doc_id, source, sh) rows are unique by construction — the old
         // .distinct() was a provable no-op costing a corpus-wide exchange.
@@ -5780,7 +5767,6 @@ object TextQueries {
     // everything downstream of the pair sets is three scalar aggregates.
     "q321_capture_recapture" -> QueryDef(
       (s, dir) => {
-        SimhashSig.register(s)
         val hs = Materialize(hsMirror(s, dir).select("doc_id", "hs"))
         val pa = Materialize(candMirror(s, dir))
         val sim = hs.select(col("doc_id"), SimhashSig.of(col("hs")).as("sh"))

@@ -532,7 +532,6 @@ object TrainingQueries {
     // (graft.operators.ZOrder is the write-side pass).
     "q68_zorder_stats" -> QueryDef(
       (s, dir) => {
-        graft.functions.ZValue.register(s)
         table(s, dir, "events")
           .select(pmod(col("user_id"), lit(65536L)).as("um"),
             pmod(expr("unix_micros(ts) DIV 1000000"), lit(65536L)).as("sm"))

@@ -9,9 +9,19 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.fs.NioLocalFs
 import graft.functions.ShingleHashes
+import graft.plans.GraftExtensions
 
 class GraftSessionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+
+  /** Every `.scala` file under `root`, with its text. */
+  private def sources(root: String): Seq[(Path, String)] = {
+    val files = Files.walk(Paths.get(root))
+    try files.iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toList
+      .map(p => p -> Files.readString(p))
+    finally files.close()
+  }
 
   test("the test session carries the factory's settings") {
     assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
@@ -30,23 +40,54 @@ class GraftSessionSpec extends AnyFunSuite {
     // a new session shares no temp functions another spec may have
     // registered, so only the installed extension can resolve the name
     val fresh = spark.newSession()
+    val names = GraftExtensions.Functions.map(_._1)
+    assert(names.distinct === names)
+    val wrong = GraftExtensions.Functions.collect {
+      case (name, clazz, _) if !fresh.catalog.functionExists(name) ||
+          fresh.catalog.getFunction(name).className != clazz.getName => name
+    }
+    assert(wrong.isEmpty,
+      s"not resolved to their expression in a fresh session: ${wrong.mkString(", ")}")
     val n = fresh.sql(
       s"SELECT size(${ShingleHashes.FunctionName}(array('a', 'b', 'c', 'd')))")
       .head().getInt(0)
     assert(n === 2)
   }
 
+  test("native functions reach a session only through GraftExtensions") {
+    val main = sources("src/main/scala")
+    val tempFns = main.collect {
+      case (p, src) if src.contains("createOrReplaceTempFunction") => p
+    }
+    assert(tempFns.isEmpty,
+      s"inject native functions through GraftExtensions, not per session: ${tempFns.mkString(", ")}")
+    val declared = main.flatMap { case (_, src) =>
+      "val FunctionName\\s*=\\s*\"([^\"]+)\"".r.findAllMatchIn(src).map(_.group(1))
+    }
+    val injected = GraftExtensions.Functions.map(_._1).toSet
+    // the pattern must still match the declarations it guards
+    assert(declared.contains(ShingleHashes.FunctionName))
+    val missing = declared.filterNot(injected)
+    assert(missing.isEmpty,
+      s"declared but missing from GraftExtensions.Functions: ${missing.mkString(", ")}")
+  }
+
+  test("lineage cuts go through Materialize") {
+    val offenders = sources("src/main/scala").collect {
+      case (p, src) if p.getFileName.toString != "Materialize.scala" &&
+          src.contains("localCheckpoint(") => p
+    }
+    assert(offenders.isEmpty,
+      s"cut lineage with Materialize.checkpointed/lazyCheckpointed: ${offenders.mkString(", ")}")
+  }
+
   test("no session is built anywhere but GraftSession") {
     val builder = "SparkSession\\s*\\.\\s*builder".r
-    val offenders = Seq("src/main/scala", "src/test/scala").flatMap { root =>
-      val files = Files.walk(Paths.get(root))
-      try files.iterator.asScala
-        .filter(_.toString.endsWith(".scala")).toList
-      finally files.close()
-    }.filter { (p: Path) =>
-      p.getFileName.toString != "GraftSession.scala" &&
-        builder.findFirstIn(Files.readString(p)).isDefined
-    }
+    val offenders = Seq("src/main/scala", "src/test/scala").flatMap(sources)
+      .collect {
+        case (p, src) if p.getFileName.toString != "GraftSession.scala" &&
+            builder.findFirstIn(src).isDefined => p
+      }
     assert(offenders.isEmpty,
       s"build sessions through graft.GraftSession, not by hand: ${offenders.mkString(", ")}")
   }

@@ -10,7 +10,6 @@ class DoubleVectorDotSpec extends AnyFunSuite {
 
   test("native expression matches the zip_with/aggregate fold bit-for-bit") {
     import spark.implicits._
-    DoubleVectorDot.register(spark)
     val df = Seq(
       (Array(1.0, 2.0, 3.0), Array(0.5, -1.0, 2.0)),
       (Array(0.1, 0.2), Array(0.3, 0.4)),
@@ -28,7 +27,6 @@ class DoubleVectorDotSpec extends AnyFunSuite {
 
   test("null inputs yield null; mismatched lengths dot the common prefix") {
     import spark.implicits._
-    DoubleVectorDot.register(spark)
     val nulls = Seq((Some(Array(1.0)), Option.empty[Array[Double]]))
       .toDF("a", "b")
     assert(nulls.select(DoubleVectorDot.dot(col("a"), col("b")))
@@ -40,7 +38,6 @@ class DoubleVectorDotSpec extends AnyFunSuite {
   }
 
   test("whole-stage codegen compiles the residual pipeline (no fallback)") {
-    DoubleVectorDot.register(spark)
     // drive it from a real parquet scan through the q170 residual shape:
     // float arrays widened by zip_with into array<double>, then dotted
     val emb = spark.read

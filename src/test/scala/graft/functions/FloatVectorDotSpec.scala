@@ -10,7 +10,6 @@ class FloatVectorDotSpec extends AnyFunSuite {
 
   test("native expression matches the zip_with/aggregate fold bit-for-bit") {
     import spark.implicits._
-    FloatVectorDot.register(spark)
     val df = Seq(
       (Array(1.0f, 2.0f, 3.0f), Array(0.5f, -1.0f, 2.0f)),
       (Array(0.1f, 0.2f), Array(0.3f, 0.4f)),
@@ -28,7 +27,6 @@ class FloatVectorDotSpec extends AnyFunSuite {
 
   test("null inputs yield null") {
     import spark.implicits._
-    FloatVectorDot.register(spark)
     val df = Seq((Some(Array(1.0f)), Option.empty[Array[Float]]))
       .toDF("a", "b")
     val r = df.select(FloatVectorDot.dot(col("a"), col("b"))).collect().head
@@ -36,7 +34,6 @@ class FloatVectorDotSpec extends AnyFunSuite {
   }
 
   test("whole-stage codegen compiles the loop (no fallback)") {
-    FloatVectorDot.register(spark)
     // literals constant-fold to LocalTableScan, so drive it from a real
     // parquet scan where the projection must run through codegen
     val emb = spark.read

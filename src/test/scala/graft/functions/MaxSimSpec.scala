@@ -27,7 +27,6 @@ class MaxSimSpec extends AnyFunSuite {
     Gen.listOfN(64, Gen.choose(-5L, 5L)).map(_.toSeq)
 
   test("maxsim_milli equals the exploded k-join + max/sum cascade") {
-    MaxSimMilli.register(spark)
     import spark.implicits._
     check("maxsim", Prop.forAll(
       Gen.listOfN(6, genVec), Gen.listOfN(2, genVec)) { (docs, qs) =>
@@ -59,7 +58,6 @@ class MaxSimSpec extends AnyFunSuite {
   }
 
   test("ragged or empty multi-vectors fail loudly instead of diverging") {
-    MaxSimMilli.register(spark)
     import spark.implicits._
     val df = Seq((Seq.fill(64)(1L), Seq.fill(56)(1L)))
       .toDF("a", "b")

@@ -11,7 +11,6 @@ class NfcNormalizeSpec extends AnyFunSuite {
 
   test("composes decomposed sequences to canonical form") {
     import spark.implicits._
-    NfcNormalize.register(spark)
     val decomposedE = "e\u0301"   // e + COMBINING ACUTE ACCENT
     val composedE = "\u00e9"
     val decomposedA = "A\u030A"   // A + COMBINING RING ABOVE
@@ -25,7 +24,6 @@ class NfcNormalizeSpec extends AnyFunSuite {
 
   test("null passes through; non-string input is rejected at analysis") {
     import spark.implicits._
-    NfcNormalize.register(spark)
     val nulls = Seq[Option[String]](None, Some("x"))
       .toDF("s").select(NfcNormalize.of(col("s")).as("n"))
       .collect().map(r => Option(r.getString(0))).toSeq
@@ -37,7 +35,6 @@ class NfcNormalizeSpec extends AnyFunSuite {
 
   test("matches the q108 cleanup chain on a unicode fixture end-to-end") {
     import spark.implicits._
-    NfcNormalize.register(spark)
     // the full q108 projection over text that exercises every stage:
     // case, NFC, control chars, whitespace runs, outer padding
     val messy = "  Cafe\u0301 du\tmonde   " // decomposed e-acute

@@ -29,7 +29,6 @@ class SpanHashesSpec extends AnyFunSuite {
   } yield toks.mkString(" ")
 
   test("window_hashes(n, 1) equals the interpreted transform chain") {
-    WindowHashes.register(spark)
     import spark.implicits._
     check("wh-stride1", Prop.forAll(Gen.listOfN(8, genDoc)) { texts =>
       val df = texts.zipWithIndex.toDF("text", "id")
@@ -49,7 +48,6 @@ class SpanHashesSpec extends AnyFunSuite {
   }
 
   test("window_hashes(10, 10) equals the interpreted strided chain") {
-    WindowHashes.register(spark)
     import spark.implicits._
     check("wh-stride10", Prop.forAll(Gen.listOfN(6, genDoc)) { texts =>
       val df = texts.zipWithIndex.toDF("text", "id")
@@ -69,7 +67,6 @@ class SpanHashesSpec extends AnyFunSuite {
   }
 
   test("winnow_fps equals the interpreted winnowing chain") {
-    WinnowFingerprints.register(spark)
     import spark.implicits._
     val k = 5; val w = 4
     // char-level docs: tiny alphabet so k-gram hashes collide and the
@@ -102,8 +99,6 @@ class SpanHashesSpec extends AnyFunSuite {
   }
 
   test("degenerate inputs: short docs yield empty arrays, not errors") {
-    WindowHashes.register(spark)
-    WinnowFingerprints.register(spark)
     import spark.implicits._
     val df = Seq("", "a", "aa bb", "abcdefg").toDF("text")
       .select(

@@ -19,7 +19,6 @@ class TextOpsSpec extends AnyFunSuite {
 
   test("ShingleHashes equals hash32 over shingles3 (as sets)") {
     import spark.implicits._
-    ShingleHashes.register(spark)
     val df = texts.toDF("text")
     val rows = df.select(
       ShingleHashes.of(TextOps.tokens(col("text"))).as("native"),
@@ -38,8 +37,6 @@ class TextOpsSpec extends AnyFunSuite {
 
   test("MinhashBandKeys equals affine minhash over the hash array") {
     import spark.implicits._
-    ShingleHashes.register(spark)
-    MinhashBandKeys.register(spark)
     val df = texts.filter(_.split(" ").length >= 3).toDF("text")
       .select(ShingleHashes.of(TextOps.tokens(col("text"))).as("hs"))
     val rows = df.select(
@@ -55,8 +52,6 @@ class TextOpsSpec extends AnyFunSuite {
 
   test("SimhashSig equals the 32-column conditional-sum formulation") {
     import spark.implicits._
-    ShingleHashes.register(spark)
-    SimhashSig.register(spark)
     val hs = texts.filter(_.split(" ").length >= 3).toDF("text")
       .select(ShingleHashes.of(TextOps.tokens(col("text"))).as("hs"))
     val rows = hs.select(
@@ -73,7 +68,6 @@ class TextOpsSpec extends AnyFunSuite {
 
   test("NGrams generator equals the declarative transform formulation") {
     import spark.implicits._
-    NGrams.register(spark)
     val df = texts.toDF("text")
     val native = df.select(
         NGrams.of(TextOps.tokens(col("text")), lit(3)))

@@ -101,24 +101,6 @@ class GlobalSplitterSpec extends AnyFunSuite {
       java.nio.file.Files.delete(f)
     }
   }
-
-  test("tableLineRdds exposes the persisted pass and can release it") {
-    val spark = graft.TestSpark.spark
-    val f = java.nio.file.Files.createTempFile("global_unp_", ".txt")
-    java.nio.file.Files.write(f, Fixtures.globalLions.getBytes("ISO-8859-1"))
-    val handle = GlobalSplitter.tableLineRdds(spark, f.toString)
-    assert(handle.tables.map(_._1).toSet === Set("GS_DISTRICT", "GS_OFFENSE"))
-    // consuming a derived RDD materializes the persisted tagged pass
-    assert(handle.tables.head._2.count() > 0)
-    assert(handle.source.getStorageLevel.useMemory ||
-      handle.source.getStorageLevel.useDisk)
-    handle.unpersist()
-    // the block-manager copy is released — the leak the handle exists
-    // to make releasable
-    assert(handle.source.getStorageLevel ===
-      org.apache.spark.storage.StorageLevel.NONE)
-    java.nio.file.Files.delete(f)
-  }
 }
 
 class LookupParserSpec extends AnyFunSuite {

@@ -68,7 +68,6 @@ class CorpusPipelineSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import graft.functions.ShingleHashes
     import graft.functions.TextOps.tokens
-    ShingleHashes.register(spark)
 
     // the pipeline must be safe-by-default: an explicit opt-IN to the
     // unbounded self-join, never a silent one

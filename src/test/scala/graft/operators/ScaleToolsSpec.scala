@@ -76,8 +76,6 @@ class SkewToolsSpec extends AnyFunSuite {
       val body = if (i % 2 == 0) s"$boiler unique body $i" else boiler
       (i.toLong, body)
     }.toDF("doc_id", "text")
-    val s = spark
-    graft.functions.ShingleHashes.register(s)
     val sh = docs.select(col("doc_id"),
       explode(graft.functions.ShingleHashes.of(
         graft.functions.TextOps.tokens(col("text")))).as("sh"))

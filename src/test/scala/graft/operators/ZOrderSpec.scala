@@ -25,7 +25,6 @@ class ZOrderSpec extends AnyFunSuite {
     assert(ZValueUtil.z16(3, 3) === 15L)
     // the expression evaluates the same helper through codegen
     import spark.implicits._
-    ZValue.register(spark)
     val got = cases.toDF("x", "y")
       .select(ZValue.of(col("x"), col("y"))).collect().map(_.getLong(0))
     assert(got.toSeq === cases.map((ref _).tupled))
@@ -33,7 +32,6 @@ class ZOrderSpec extends AnyFunSuite {
 
   test("every coarse z-bucket bounds BOTH dimension spreads (exact math)") {
     import spark.implicits._
-    ZValue.register(spark) // zkey needs the function resolvable standalone
     // adversarial data: dims anti-correlated, full 16-bit domain
     val rows = (0 until 5000)
       .map(i => ((i * 131L) % 65536, (65535 - (i * 257L) % 65536)))

@@ -37,7 +37,6 @@ class JaccardPropertySpec extends AnyFunSuite {
   test("jaccardPairs equals driver-side set jaccard on random corpora") {
     check("jaccard", Prop.forAll(Gen.listOfN(12, genDoc)) { texts =>
       import spark.implicits._
-      ShingleHashes.register(spark)
       val docs = texts.zipWithIndex
         .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
       val sh = Materialize(docs.select(col("doc_id"),

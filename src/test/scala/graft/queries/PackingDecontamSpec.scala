@@ -92,7 +92,6 @@ class PackingDecontamSpec extends AnyFunSuite {
     import graft.functions.ShingleHashes
     import graft.functions.TextOps.tokens
     import org.apache.spark.sql.functions._
-    ShingleHashes.register(spark)
     val docs = Tables.table(spark, sf, "documents")
     def shingled(d: org.apache.spark.sql.DataFrame) =
       d.select(col("doc_id"), ShingleHashes.of(tokens(col("text"))).as("hs"))

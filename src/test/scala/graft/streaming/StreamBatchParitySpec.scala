@@ -28,7 +28,6 @@ class StreamBatchParitySpec extends AnyFunSuite {
       import graft.functions.TextOps.tokens
       val dir = Files.createTempDirectory("decontam_replay_").toString
       val ckpt = Files.createTempDirectory("decontam_ckpt_").toString
-      ShingleHashes.register(spark)
       val docs = Tables.table(spark, sf, "documents")
       def shingled(d: org.apache.spark.sql.DataFrame) =
         d.select(col("doc_id"),
@@ -569,8 +568,6 @@ class StreamBatchParitySpec extends AnyFunSuite {
       import graft.functions.TextOps.tokens
       val dir = Files.createTempDirectory("lshdup_replay_").toString
       val ckpt = Files.createTempDirectory("lshdup_ckpt_").toString
-      ShingleHashes.register(spark)
-      MinhashBandKeys.register(spark)
       // the SAME signature pipeline the batch MinHash-LSH query runs
       val bands = Tables.table(spark, sf, "documents")
         .select(col("doc_id"),
