@@ -71,18 +71,29 @@ object FixedWidth {
     lines.select(dataCols ++ flagCols ++ keep.map(col): _*)
   }
 
-  /** Read one fixed-width member file end-to-end: latin-1 decode, CR scrub,
-    * slice, type, flag. Pure narrow pipeline — parallel per file split.
+  /** Read fixed-width text end-to-end: latin-1 decode, CR scrub, slice,
+    * type, flag. `path` is one member file or a directory of them, read
+    * with ONE text scan, so the projection is one whole-stage-codegen
+    * stage (one generated class) however many files it covers. Each of
+    * `partitionColumns` is a Hive partition directory level under `path`
+    * (`<path>/filename_district=FLM/...`): its value comes from the scan's
+    * partition values, pinned to STRING, and is carried through after the
+    * 2N typed columns. Pure narrow pipeline — parallel per file split.
     */
   def read(spark: SparkSession, path: String, spec: TableSpec,
-           encoding: String = "ISO-8859-1"): DataFrame = {
+           encoding: String = "ISO-8859-1",
+           partitionColumns: Seq[String] = Nil): DataFrame = {
+    val schema = StructType(
+      ("value" +: partitionColumns).map(StructField(_, StringType)))
     val lines = spark.read
+      .schema(schema)
       .option("lineSep", "\n")
       .option("encoding", encoding)
       .text(path)
       // translate, not regexp_replace: same single-char mapping without
       // regex-engine cost on every line of a 100 TB scan
-      .select(translate(col("value"), "\r", " ").as("value"))
-    project(lines, spec)
+      .select(translate(col("value"), "\r", " ").as("value") +:
+        partitionColumns.map(col): _*)
+    project(lines, spec, keep = partitionColumns)
   }
 }

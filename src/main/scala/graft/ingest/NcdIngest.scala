@@ -20,9 +20,10 @@ import org.apache.spark.sql.types._
   * run concurrently on a pool bounded by the session's default
   * parallelism: a table too small to fill the cores (an unpartitioned
   * table, a codebook) no longer holds the session alone. Each normal
-  * table's conversion is one narrow, shuffle-free Spark job (all district
-  * files unioned, then written with `partitionBy` so the Hive layout
-  * matches the reference byte-for-byte in structure).
+  * table's conversion is one narrow, shuffle-free Spark job over one text
+  * scan of all its district files (one generated parse class per table),
+  * written with `partitionBy` so the Hive layout matches the reference
+  * byte-for-byte in structure.
   *
   * With the parquet mirror on, each table's text is parsed once: the parse
   * feeds the mirror, and the gzip JSON table is written from the mirror
@@ -105,9 +106,17 @@ final class NcdIngest(spark: SparkSession, warehouseDir: String,
   private def repairDdl(table: String, isPartitioned: Boolean): Seq[String] =
     if (isPartitioned) Seq(s"MSCK REPAIR TABLE $db.$table") else Nil
 
-  /** One normal table: discover district files, convert all of them in one
-    * unioned distributed job, write partitioned gzip JSON (and the parquet
-    * mirror), and return the DDL that registers them.
+  /** One normal table: discover district files, extract them under one
+    * directory per table, convert them with one text scan, write
+    * partitioned gzip JSON (and the parquet mirror), and return the DDL
+    * that registers them.
+    *
+    * A partitioned table's members land in Hive partition directories
+    * (`<scratch>/<table>/filename_district=<D>/`), so the scan's partition
+    * values supply `filename_district` and the fixed-width projection is
+    * one whole-stage-codegen stage for the table, whatever its district
+    * count. An unpartitioned or mixed table's files sit flat in
+    * `<scratch>/<table>/`.
     *
     * With the mirror on, the parse feeds only the mirror write, and the
     * JSON table is read back from the mirror with the parse's schema. The
@@ -120,16 +129,15 @@ final class NcdIngest(spark: SparkSession, warehouseDir: String,
     if (files.isEmpty) return None
     val isPartitioned = !files.keySet.contains(None)
 
-    val frames = files.toSeq.sortBy(_._1) .map { case (district, member) =>
-      val path = zip.extractMember(member, scratch)
-      val df = FixedWidth.read(spark, path.toString, spec)
-      district match {
-        case Some(d) if isPartitioned =>
-          df.withColumn("filename_district", lit(d))
-        case _ => df
-      }
+    val tableDir = Files.createDirectory(scratch.resolve(spec.name))
+    files.foreach { case (district, member) =>
+      val dir =
+        if (isPartitioned) tableDir.resolve(s"filename_district=${district.get}")
+        else tableDir
+      zip.extractMember(member, dir)
     }
-    val parsed = frames.reduce(_ unionByName _)
+    val parsed = FixedWidth.read(spark, tableDir.toString, spec,
+      partitionColumns = if (isPartitioned) Seq("filename_district") else Nil)
 
     val location = tableLocation(spec.name)
     val mirrorLocation = s"${location}__parquet"

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{ShingleHashes, TextOps}
@@ -70,7 +70,7 @@ object CorpusPipeline {
     *   re-run inside the pipeline. None = derive inline (stand-alone
     *   library use).
     */
-  def prepare(spark: SparkSession, docs: DataFrame,
+  def prepare(docs: DataFrame,
               cfg: PipelineConfig = PipelineConfig(),
               shingleSource: Option[DataFrame] = None)
       : (DataFrame, Seq[(String, Long)]) = {

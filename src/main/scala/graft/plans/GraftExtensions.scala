@@ -36,6 +36,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // free length-difference guard in front of thresholded levenshtein
     // filters (the fuzzy-match prefilter, applied automatically)
     ext.injectOptimizerRule(_ => LevenshteinPrefilter)
+
+    // coalesce(1) over a global ORDER BY: sort in the one partition
+    // instead of range-partitioning first (QueryClient's one-CSV write)
+    ext.injectOptimizerRule(_ => SortInOnePartition)
   }
 }
 

@@ -823,8 +823,10 @@ object TextQueries {
           saltExpr = Some(pmod(hash(col("doc_a")), lit(bk))),
           extraCond = Some(col("doc_a") < col("doc_b")))
       case None =>
-        aSide.join(bSide,
-          aSide("sh") === bSide("sh") && col("doc_a") < col("doc_b"))
+        // the sides are two projections of one frame: alias them so the
+        // join keys resolve to distinct attributes
+        aSide.as("a").join(bSide.as("b"),
+          col("a.sh") === col("b.sh") && col("doc_a") < col("doc_b"))
     }
     val inter = pairRows.groupBy("doc_a", "doc_b").agg(count(lit(1)).as("i"))
     val sa = sizes.select(col("doc_id").as("doc_a"), col("n").as("na"))

@@ -905,7 +905,7 @@ object TrainingQueries {
         // (per-doc-deterministic, so the semi-join to survivors yields
         // exactly the rows the inline re-shingling produced)
         val (_, funnel) = graft.operators.CorpusPipeline.prepare(
-          s, table(s, dir, "documents"),
+          table(s, dir, "documents"),
           graft.operators.PipelineConfig(minTokens = 5,
             maxPunctRatio = 0.3, jaccard = 0.8, sampleBp = 8000),
           shingleSource =

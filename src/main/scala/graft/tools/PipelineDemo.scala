@@ -16,7 +16,7 @@ object PipelineDemo {
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = Tables.table(spark, sfDir, "documents")
-    val (corpus, funnel) = CorpusPipeline.prepare(spark, docs,
+    val (corpus, funnel) = CorpusPipeline.prepare(docs,
       PipelineConfig(minTokens = 5, maxPunctRatio = 0.3,
         jaccard = 0.8, sampleBp = 8000, iqrOutlierK = Some(3.0)))
     val out = corpus.count()

@@ -1,10 +1,12 @@
 package graft.tools
 
+import java.lang.management.ManagementFactory
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import scala.collection.mutable
 
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -22,13 +24,27 @@ import graft.{GraftSession, SparkEntry}
   * optimization, physical planning) and `exec_ms` (the no-op sink write).
   * The task columns — count, CPU seconds, longest task, shuffle-write
   * bytes — are summed over every job of the rep with the best `exec_ms`.
-  * Rep 1 pays codegen and first-read costs, so use at least 2 reps.
+  * The driver-build columns of that rep are `compiles` (generated
+  * classes Janino compiled, a cache miss each) and `jit_ms` (the JVM's
+  * JIT compiler time, all compiler threads). Rep 1 pays codegen and
+  * first-read costs, so use at least 2 reps.
   */
 object Probe {
 
   final case class Layers(buildMs: Double, planMs: Double, execMs: Double,
                           tasks: Long, taskCpuS: Double, maxTaskMs: Long,
-                          shuffleWriteBytes: Long)
+                          shuffleWriteBytes: Long, compiles: Long, jitMs: Long)
+
+  val Header: String =
+    f"${"query"}%-40s ${"build_ms"}%9s ${"plan_ms"}%9s ${"exec_ms"}%9s " +
+      f"${"tasks"}%7s ${"cpu_s"}%8s ${"max_task_ms"}%11s ${"shuffle_w_bytes"}%15s " +
+      f"${"compiles"}%8s ${"jit_ms"}%7s"
+
+  /** One printed line per query, in [[Header]]'s column order. */
+  def row(name: String, l: Layers): String =
+    f"$name%-40s ${l.buildMs}%9.1f ${l.planMs}%9.1f ${l.execMs}%9.1f " +
+      f"${l.tasks}%7d ${l.taskCpuS}%8.2f ${l.maxTaskMs}%11d ${l.shuffleWriteBytes}%15d " +
+      f"${l.compiles}%8d ${l.jitMs}%7d"
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -37,14 +53,10 @@ object Probe {
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.catalog.map(_._1)
-    println(f"${"query"}%-40s ${"build_ms"}%9s ${"plan_ms"}%9s ${"exec_ms"}%9s " +
-      f"${"tasks"}%7s ${"cpu_s"}%8s ${"max_task_ms"}%11s ${"shuffle_w_bytes"}%15s")
+    println(Header)
     names.foreach { n =>
-      try {
-        val l = measure(spark, n, sfDir, reps)
-        println(f"$n%-40s ${l.buildMs}%9.1f ${l.planMs}%9.1f ${l.execMs}%9.1f " +
-          f"${l.tasks}%7d ${l.taskCpuS}%8.2f ${l.maxTaskMs}%11d ${l.shuffleWriteBytes}%15d")
-      } catch { case e: Throwable =>
+      try println(row(n, measure(spark, n, sfDir, reps)))
+      catch { case e: Throwable =>
         System.err.println(s"[probe] $n failed: ${e.getMessage}")
       }
     }
@@ -56,12 +68,15 @@ object Probe {
   def measure(spark: SparkSession, name: String, sfDir: String,
               reps: Int): Layers = {
     val fn = SparkEntry.queries(name)
+    val jit = ManagementFactory.getCompilationMXBean
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val totals = new TaskTotals(spark.sparkContext)
     spark.sparkContext.addSparkListener(totals)
     try {
       val runs = (1 to reps).map { _ =>
         totals.settle()
         try {
+          val (c0, j0) = (compiles, jit.getTotalCompilationTime)
           val t0 = System.nanoTime()
           val df = fn(spark, sfDir)
           val t1 = System.nanoTime()
@@ -71,7 +86,8 @@ object Probe {
           val t3 = System.nanoTime()
           val t = totals.settle()
           Layers((t1 - t0) / 1e6, (t2 - t1) / 1e6, (t3 - t2) / 1e6,
-            t.tasks, t.cpuNs / 1e9, t.maxTaskMs, t.shuffleWriteBytes)
+            t.tasks, t.cpuNs / 1e9, t.maxTaskMs, t.shuffleWriteBytes,
+            compiles - c0, jit.getTotalCompilationTime - j0)
         } finally spark.sqlContext.clearCache()
       }
       runs.minBy(_.execMs).copy(

@@ -8,7 +8,8 @@ import java.util.zip.{ZipEntry, ZipFile, ZipOutputStream}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, UnionExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InsertIntoHadoopFsRelationCommand, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.text.TextFileFormat
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -377,6 +378,59 @@ class NcdIngestSpec extends AnyFunSuite with Eventually {
     assert(flm.collect().toSeq === Seq(6L))
     assert(spark.table("ncdmm.GS_COURT_HIST").count() === 3)
     assert(spark.table("ncdmm.GS_COURT_HIST_parquet").count() === 3)
+  }
+
+  test("a partitioned table's parsing write is one text scan and no union, " +
+      "whatever its district count") {
+    // three district members of GS_CASE and the unpartitioned court history
+    val zipPath = Files.createTempDirectory("ncd_three_").resolve("three.zip")
+    val out = new ZipOutputStream(new FileOutputStream(zipPath.toFile))
+    try Seq("README.TXT" -> Fixtures.readme,
+      "gs_case_CT.txt" -> Fixtures.gsCaseCt,
+      "gs_case_FLM.txt" -> Fixtures.gsCaseFlm,
+      "gs_case_NY.txt" -> Fixtures.gsCaseNy,
+      "gs_court_hist.txt" -> Fixtures.gsCourtHist).foreach { case (n, text) =>
+      out.putNextEntry(new ZipEntry(n))
+      out.write(text.getBytes(StandardCharsets.ISO_8859_1))
+      out.closeEntry()
+    } finally out.close()
+
+    // output table directory -> (text scans, unions) of its write's plan
+    object Plans extends AdaptiveSparkPlanHelper
+    val writes = new ConcurrentLinkedQueue[(String, (Int, Int))]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution,
+                    durationNs: Long): Unit = qe.analyzed.foreach {
+        case w: InsertIntoHadoopFsRelationCommand =>
+          val nodes = Plans.collectWithSubqueries(qe.executedPlan) { case p => p }
+          val textScans = nodes.count {
+            case s: FileSourceScanExec =>
+              s.relation.fileFormat.isInstanceOf[TextFileFormat]
+            case _ => false
+          }
+          writes.add(w.outputPath.getName ->
+            (textScans, nodes.count(_.isInstanceOf[UnionExec])))
+        case _ =>
+      }
+      def onFailure(funcName: String, qe: QueryExecution,
+                    exception: Exception): Unit = ()
+    }
+    val wh = Files.createTempDirectory("ncd_three_wh_").toString
+    spark.listenerManager.register(listener)
+    try {
+      new NcdIngest(spark, wh, db = "ncdthree").loadZip(zipPath.toString)
+      eventually(timeout(Span(30, Seconds))) { assert(writes.size === 2) }
+    } finally spark.listenerManager.unregister(listener)
+
+    val plans = writes.asScala.toMap
+    assert(plans("GS_CASE") === (1, 0))
+    assert(plans("GS_COURT_HIST") === (1, 0))
+    val table = spark.table("ncdthree.GS_CASE")
+    assert(table.schema("filename_district").dataType ===
+      org.apache.spark.sql.types.StringType)
+    assert(rowsByDistrict("ncdthree.GS_CASE", Seq("CASEID"))
+      .map { case (d, rows) => d -> rows.size } ===
+      Map("CT" -> 1, "FLM" -> 4, "NY" -> 1))
   }
 
   test("a failing unit is rethrown after every unit has finished") {

@@ -12,7 +12,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
     val docs = Tables.table(spark, sf, "documents")
     val cfg = PipelineConfig(minTokens = 5, maxPunctRatio = 0.5,
       jaccard = 0.8, sampleBp = 8000)
-    val (corpus, funnel) = CorpusPipeline.prepare(spark, docs, cfg)
+    val (corpus, funnel) = CorpusPipeline.prepare(docs, cfg)
     val counts = funnel.map(_._2)
     assert(funnel.map(_._1) ===
       Seq("input", "quality", "exact_dedup", "near_dedup", "sampled"))
@@ -23,7 +23,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
     assert(corpus.count() === counts.last)
 
     // hash-seeded decisions: a rerun keeps EXACTLY the same documents
-    val (corpus2, funnel2) = CorpusPipeline.prepare(spark, docs, cfg)
+    val (corpus2, funnel2) = CorpusPipeline.prepare(docs, cfg)
     assert(funnel2 === funnel)
     val a = corpus.select("doc_id").collect().map(_.getLong(0)).sorted
     val b = corpus2.select("doc_id").collect().map(_.getLong(0)).sorted
@@ -32,7 +32,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
 
   test("near-dup stage removes transitive duplicate chains") {
     val docs = Tables.table(spark, sf, "documents")
-    val (_, funnel) = CorpusPipeline.prepare(spark, docs,
+    val (_, funnel) = CorpusPipeline.prepare(docs,
       PipelineConfig(minTokens = 0, maxPunctRatio = 1.0, sampleBp = 10000))
     val m = funnel.toMap
     // the synthetic corpus contains injected near-dup groups: exact dedup
@@ -49,7 +49,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
       .union(Seq((99L, "tiny doc x y z"),
         (100L, ("gigantic " * 400) + "end of the enormous outlier"))
         .toDF("doc_id", "text"))
-    val (out, funnel) = CorpusPipeline.prepare(spark, docs,
+    val (out, funnel) = CorpusPipeline.prepare(docs,
       PipelineConfig(minTokens = 3, maxPunctRatio = 1.0,
         iqrOutlierK = Some(1.5)))
     val m = funnel.toMap
@@ -102,7 +102,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
 
     // end-to-end with defaults: completes linearly and keeps every doc
     // (boilerplate-only overlap is not a near-dup signal)
-    val (out, funnel) = CorpusPipeline.prepare(spark, docs,
+    val (out, funnel) = CorpusPipeline.prepare(docs,
       PipelineConfig(minTokens = 3))
     assert(out.count() === k.toLong)
     assert(funnel.toMap.apply("near_dedup") === k.toLong)
@@ -115,7 +115,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
       (2L, "one two three four five six seven"),
       (3L, "red green blue cyan magenta yellow"))
       .toDF("doc_id", "text")
-    val (out, funnel) = CorpusPipeline.prepare(spark, tiny, PipelineConfig())
+    val (out, funnel) = CorpusPipeline.prepare(tiny, PipelineConfig())
     assert(out.count() === 3)
     assert(funnel.toMap.apply("near_dedup") === 3)
   }

@@ -15,5 +15,13 @@ class ProbeSpec extends AnyFunSuite {
     assert(l.buildMs >= 0)
     assert(l.taskCpuS > 0)
     assert(l.shuffleWriteBytes > 0)
+    // the driver-build layer: Janino compiles and JIT time of the rep
+    assert(l.compiles >= 0)
+    assert(l.jitMs >= 0)
+    val header = Probe.Header.trim.split("\\s+").toSeq
+    assert(header.takeRight(2) === Seq("compiles", "jit_ms"))
+    val fields = Probe.row("q02_agg_pricing_summary", l).trim.split("\\s+").toSeq
+    assert(fields.size === header.size)
+    assert(fields.takeRight(2) === Seq(l.compiles.toString, l.jitMs.toString))
   }
 }
