@@ -2,7 +2,9 @@
 (ncd/normal_table.py): fixed-width slice -> strip -> typed convert with
 null-on-error -> redaction flags -> json.dumps -> gzip. csvkit/agate add
 overhead on top of this, so this is a LOWER bound on the reference's cost.
-Input rows generated identically to graft.tools.IngestBench."""
+Input: ROWS synthetic fixed-width rows (default 2M) from the generator
+below, five columns (number, varchar, Oracle date, varchar, float with
+every 13th cell redacted as '*')."""
 import gzip, io, json, sys, time
 from datetime import datetime
 

@@ -113,4 +113,23 @@ object Tripwire {
     }
     Result(ambient, regressions, notes.result())
   }
+
+  /** The baseline the next run diffs against, given this run's per-query
+    * `best` (seconds, negative for a failed query) and its `failed`,
+    * `partial` and flagged `regressions`; `None` leaves the baseline as
+    * it is. A clean run's minima replace it. A complete run flagged only
+    * by regressions refreshes just the minima it improved (round-10
+    * lesson: a 10%-faster run was barred from the baseline by one
+    * sub-second blip); regressed and absent entries keep their prior
+    * values, so a flagged run can only tighten the tripwire. A run with
+    * a failed or partially failed query never touches it.
+    */
+  def nextBaseline(prior: Map[String, Double], best: Seq[(String, Double)],
+                   failed: Seq[String], partial: Seq[String],
+                   regressions: Seq[(String, Double, Double)]): Option[Map[String, Double]] =
+    if (failed.nonEmpty || partial.nonEmpty) None
+    else if (regressions.isEmpty) Some(best.toMap)
+    else Some(prior ++ best.map { case (n, now) =>
+      n -> prior.get(n).fold(now)(math.min(_, now))
+    })
 }

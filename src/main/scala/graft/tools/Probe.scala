@@ -9,14 +9,21 @@ import org.apache.spark.SparkContext
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainMode
 
 import graft.{GraftSession, SparkEntry}
 
 /** Per-query layer probe: where a catalog query's wall time goes.
   *
-  *   java -cp ... graft.tools.Probe [query ...]   (default: the whole catalog)
+  *   java -cp ... graft.tools.Probe [--explain] [query ...]
+  *     (default: the whole catalog)
   *   Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_REPS (default 2),
   *        SPARK_GRAFT_CPUS (default 32)
+  *
+  * `--explain` prints each query's `explain("formatted")` plan instead of
+  * timing it: PushedFilters/ReadSchema on scans, WholeStageCodegen spans
+  * and join strategies, the manual companion to PlanInvariantsSpec and
+  * PlanSizeSpec.
   *
   * Per query it prints the best-of-reps `build_ms` (the query function
   * building its DataFrame, including any eager mirror builds or
@@ -52,16 +59,26 @@ object Probe {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val names = if (args.nonEmpty) args.toSeq else SparkEntry.catalog.map(_._1)
-    println(Header)
+    val explain = args.headOption.contains("--explain")
+    val named = args.toSeq.drop(if (explain) 1 else 0)
+    val names = if (named.nonEmpty) named else SparkEntry.catalog.map(_._1)
+    if (!explain) println(Header)
     names.foreach { n =>
-      try println(row(n, measure(spark, n, sfDir, reps)))
+      try println(if (explain) plan(spark, n, sfDir)
+                  else row(n, measure(spark, n, sfDir, reps)))
       catch { case e: Throwable =>
         System.err.println(s"[probe] $n failed: ${e.getMessage}")
       }
     }
     spark.stop()
   }
+
+  /** Catalog query `name`'s formatted physical plan on `sfDir`, under a
+    * `===== name =====` banner. */
+  def plan(spark: SparkSession, name: String, sfDir: String): String =
+    try s"===== $name =====\n" + SparkEntry.queries(name)(spark, sfDir)
+      .queryExecution.explainString(ExplainMode.fromString("formatted"))
+    finally spark.sqlContext.clearCache()
 
   /** Run catalog query `name` on `sfDir` `reps` times; best-of-reps
     * timings plus the task totals of the fastest-executing rep. */

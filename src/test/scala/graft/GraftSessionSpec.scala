@@ -81,6 +81,19 @@ class GraftSessionSpec extends AnyFunSuite {
       s"cut lineage with Materialize.checkpointed/lazyCheckpointed: ${offenders.mkString(", ")}")
   }
 
+  test("the mains in src/main/scala are exactly the listed entry points") {
+    // each `def main` is attributed to the last object declared above it
+    val objectDecl = "(?m)^\\s*(?:private\\s+|final\\s+)*object\\s+(\\w+)".r
+    val mains = sources("src/main/scala").flatMap { case (_, src) =>
+      "def\\s+main\\s*\\(".r.findAllMatchIn(src).map { m =>
+        objectDecl.findAllMatchIn(src.substring(0, m.start)).map(_.group(1)).toSeq.last
+      }
+    }
+    // a one-off profiler belongs in Probe, not in a new main
+    assert(mains.sorted === Seq("Bench", "CatalogDurability", "ImportAll", "ImportZip",
+      "PipelineDemo", "Probe", "ScaleUp", "StreamDemo", "Verify"))
+  }
+
   test("no session is built anywhere but GraftSession") {
     val builder = "SparkSession\\s*\\.\\s*builder".r
     val offenders = Seq("src/main/scala", "src/test/scala").flatMap(sources)

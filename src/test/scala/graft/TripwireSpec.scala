@@ -84,4 +84,51 @@ class TripwireSpec extends AnyFunSuite {
       assert(t.regressions === regressions)
     }
   }
+
+  private def sha256(s: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
+  /** The baseline Bench writes after a complete run of archive `now`
+    * against archive `prior`. */
+  private def nextBaseline(prior: String, now: String) = {
+    val best = queries(now)
+    val p = queries(prior).toMap
+    Tripwire.nextBaseline(p, best, Nil, Nil, Tripwire(best, p).regressions)
+  }
+
+  test("nextBaseline: a clean run's minima become the baseline") {
+    Seq("bench_full_r12_sf0.1.json" -> "bench_full_r13_sf0.1.json",
+        "bench_full_r12_sf0.1_c8.json" -> "bench_full_r14_sf0.1_c8.json")
+      .foreach { case (prior, now) =>
+        assert(nextBaseline(prior, now) === Some(queries(now).toMap))
+      }
+  }
+
+  // each digest is of the baseline file the inline rule in Bench wrote
+  // for the same archive pair before the rule was extracted (keys
+  // sorted, 4 decimals); 242 and 203 of the 341 minima keep their prior
+  Seq(
+    ("bench_full_r13_sf0.1.json", "bench_full_r12_sf0.1.json", 0.4193,
+      "316fd3027c63f3f3c2aab6fe89f614a647ceb4c87515d20831bbc664dc2a6c60"),
+    ("bench_full_r14_sf0.1_c8.json", "bench_full_r12_sf0.1_c8.json", 0.3116,
+      "dc2d42c7c0f5b3a8ab6182f6e1744c5544293e195a7ea1920e458b9faeb8069c")
+  ).foreach { case (prior, now, q305Prior, digest) =>
+    test(s"nextBaseline: a flagged complete run $prior -> $now merges minima") {
+      val next = nextBaseline(prior, now).get
+      // the regressed query keeps its prior minimum
+      assert(next("q305_maxsim_late_interaction") === q305Prior)
+      assert(sha256(Bench.jsonMap(next.toSeq.sortBy(_._1))) === digest)
+    }
+  }
+
+  test("nextBaseline: a failed or partially failed query leaves the baseline") {
+    val prior = queries("bench_full_r12_sf0.1.json").toMap
+    val now = queries("bench_full_r13_sf0.1.json")
+    val q = now.head._1
+    val failedRun = now.map { case (n, v) => n -> (if (n == q) -1.0 else v) }
+    assert(Tripwire.nextBaseline(prior, failedRun, Seq(q), Nil, Nil) === None)
+    // a query that failed in one pass keeps the best of the others
+    assert(Tripwire.nextBaseline(prior, now, Nil, Seq(q), Nil) === None)
+  }
 }

@@ -33,7 +33,7 @@ class SkewToolsSpec extends AnyFunSuite {
       .toDF("doc_id", "sh")
     val a = sh.select(col("doc_id").as("da"), col("sh"))
     val b = sh.select(col("doc_id").as("db"), col("sh"))
-    val plain = a.join(b, a("sh") === b("sh") && col("da") < col("db"))
+    val plain = a.as("a").join(b.as("b"), col("a.sh") === col("b.sh") && col("da") < col("db"))
       .select("da", "db").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val salted = SkewTools.saltedJoin(a, b, "sh", buckets = 8,
         saltExpr = Some(pmod(hash(col("da")), lit(8))),

@@ -24,4 +24,10 @@ class ProbeSpec extends AnyFunSuite {
     assert(fields.size === header.size)
     assert(fields.takeRight(2) === Seq(l.compiles.toString, l.jitMs.toString))
   }
+
+  test("--explain prints a scan's pushed filters") {
+    val plan = Probe.plan(TestSpark.spark, "q01_scan_filter_project", "/root/testdata/sf0.001")
+    assert(plan.startsWith("===== q01_scan_filter_project ====="))
+    assert(plan.contains("PushedFilters: [") && !plan.contains("PushedFilters: []"), plan)
+  }
 }
