@@ -14,9 +14,11 @@ import org.apache.spark.sql.types._
   * `DataZip.load()` (ncd/data_zip.py:40-52).
   *
   * Driver parses schemas/fragments (they're tiny and must exist before a
-  * plan can be declared); executors do all row work. The tables of a zip
-  * are independent, so each normal table, each `global_LIONS.txt` table
-  * and each `table_gs_*` codebook is one unit of work, and a zip's units
+  * plan can be declared); executors do all row work. `global_LIONS.txt`
+  * is split by one pass over its lines streamed from the archive, with no
+  * Spark job and no extracted copy. The tables of a zip are independent,
+  * so each normal table, each `global_LIONS.txt` table and each
+  * `table_gs_*` codebook is one unit of work, and a zip's units
   * run concurrently on a pool bounded by the session's default
   * parallelism: a table too small to fill the cores (an unpartitioned
   * table, a codebook) no longer holds the session alone. Each normal
@@ -182,32 +184,14 @@ final class NcdIngest(spark: SparkSession, warehouseDir: String,
   }
 
   /** A13/A14: one unit per table of the stacked global file, if present.
-    * The file is split on the calling thread, before any unit runs.
-    *
-    * Size-gated dispatch (round-9 verdict #7): the driver-side
-    * whole-file `split` assumes the dump fits in one JVM string — true
-    * of every reference dump, but an ASSUMPTION, not a property. Past
-    * the gate (or when the archive doesn't record a size) the member is
-    * extracted and split via the executor-side tagged pass
-    * (`splitDistributed`), which holds only codebook-sized fragments on
-    * the driver. Equality of the two paths is spec'd in ParserSpec /
-    * NcdIngestSpec.
+    * The member's UTF-8 lines are streamed from the archive and split on
+    * the calling thread in one pass, before any unit runs; only the
+    * fragments are held.
     */
   private def globalTableUnits(zip: ZipSource): Seq[() => Option[Written]] = {
     if (!zip.hasMember("global_LIONS.txt")) return Nil
-    val size = zip.memberSize("global_LIONS.txt")
     val tables =
-      if (size >= 0 && size <= NcdIngest.GlobalFileDriverGateBytes)
-        GlobalSplitter.split(zip.readMember("global_LIONS.txt", "UTF-8"))
-      else {
-        val tmp = Files.createTempDirectory("ncd_global_")
-        try {
-          val p = zip.extractMember("global_LIONS.txt", tmp)
-          // splitDistributed collects its codebook-sized fragments before
-          // returning, so the extracted copy is safe to delete right after
-          GlobalSplitter.splitDistributed(spark, p.toString)
-        } finally deleteRecursively(tmp)
-      }
+      zip.withMemberLines("global_LIONS.txt", "UTF-8")(GlobalSplitter.split)
     tables.keys.toSeq.sorted.map { name =>
       () => Some(writeStringTable(name, RulerParser.parse(tables(name))))
     }
@@ -245,16 +229,6 @@ final class NcdIngest(spark: SparkSession, warehouseDir: String,
 object NcdIngest {
   /** A table whose data has landed, with the DDL that registers it. */
   private final case class Written(table: String, ddl: Seq[String])
-
-  /** Driver-side whole-string budget for global_LIONS.txt: a UTF-16
-    * JVM string costs ~2 bytes/char plus the raw byte[] during decode,
-    * so 256 MB uncompressed stays well inside an 8 GiB driver; anything
-    * larger (or of unrecorded size) takes the distributed tagged-pass
-    * split. Overridable for tests via the system property.
-    */
-  private[ingest] def GlobalFileDriverGateBytes: Long =
-    sys.props.get("graft.globalfile.driver.gate.bytes").map(_.toLong)
-      .getOrElse(256L * 1024 * 1024)
 
   /** Run `units` on at most `threads` threads and return their outcomes in
     * order, once every unit has finished. The pool is created by this

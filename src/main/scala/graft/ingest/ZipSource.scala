@@ -1,9 +1,9 @@
 package graft.ingest
 
-import java.io.File
+import java.io.{BufferedReader, File, InputStreamReader}
 import java.nio.charset.Charset
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.zip.ZipFile
+import java.util.zip.{ZipEntry, ZipFile}
 
 import scala.jdk.CollectionConverters._
 import scala.util.matching.Regex
@@ -17,7 +17,10 @@ import scala.util.matching.Regex
   * *executors* can then read them in parallel via `spark.read.text`; for
   * dumps too big for driver disk the alternative is
   * `spark.read.format("binaryFile")` + a `ZipInputStream` flatMap, which
-  * trades faithful ordering for executor-side decompression.
+  * trades faithful ordering for executor-side decompression. Text members
+  * the driver parses itself (README.TXT, the codebooks) are read whole;
+  * `global_LIONS.txt` is streamed line by line through [[withMemberLines]],
+  * so only its split fragments are held.
   */
 final class ZipSource(zipPath: String) extends AutoCloseable {
 
@@ -26,26 +29,33 @@ final class ZipSource(zipPath: String) extends AutoCloseable {
   def memberNames: Seq[String] =
     zip.entries().asScala.map(_.getName).toVector
 
+  private def entry(name: String): ZipEntry = {
+    val e = zip.getEntry(name)
+    require(e != null, s"no member $name in $zipPath")
+    e
+  }
+
   /** Read a member fully as a string in the given charset. */
   def readMember(name: String, charset: String): String = {
-    val entry = zip.getEntry(name)
-    require(entry != null, s"no member $name in $zipPath")
-    val in = zip.getInputStream(entry)
+    val in = zip.getInputStream(entry(name))
     try new String(in.readAllBytes(), Charset.forName(charset))
     finally in.close()
   }
 
-  def hasMember(name: String): Boolean = zip.getEntry(name) != null
-
-  /** Uncompressed member size in bytes, or -1 when the archive does not
-    * record it — callers gating driver-side whole-member loads must
-    * treat -1 as "assume large".
+  /** Run `f` over a member's lines, decoded in the given charset and
+    * streamed from the archive: a line ends at `\n`, `\r\n` or `\r`, as
+    * in Hadoop's `LineRecordReader`, and carries no terminator. The
+    * iterator is valid only inside `f`.
     */
-  def memberSize(name: String): Long = {
-    val entry = zip.getEntry(name)
-    require(entry != null, s"no member $name in $zipPath")
-    entry.getSize
+  def withMemberLines[T](name: String, charset: String)
+                        (f: Iterator[String] => T): T = {
+    val reader = new BufferedReader(new InputStreamReader(
+      zip.getInputStream(entry(name)), Charset.forName(charset)))
+    try f(Iterator.continually(reader.readLine()).takeWhile(_ != null))
+    finally reader.close()
   }
+
+  def hasMember(name: String): Boolean = zip.getEntry(name) != null
 
   /** Extract a member to `destDir/name` and return the path.
     *
@@ -55,14 +65,13 @@ final class ZipSource(zipPath: String) extends AutoCloseable {
     * rejected instead of writing outside the scratch dir.
     */
   def extractMember(name: String, destDir: Path): Path = {
-    val entry = zip.getEntry(name)
-    require(entry != null, s"no member $name in $zipPath")
+    val e = entry(name)
     val base = destDir.toAbsolutePath.normalize()
     val dest = base.resolve(name).normalize()
     require(dest.startsWith(base) && dest != base,
       s"zip entry '$name' escapes the extraction directory")
     Files.createDirectories(dest.getParent)
-    val in = zip.getInputStream(entry)
+    val in = zip.getInputStream(e)
     try Files.copy(in, dest, StandardCopyOption.REPLACE_EXISTING)
     finally in.close()
     dest

@@ -170,11 +170,22 @@ final class FixedWidthReaderFactory(fields: Array[(String, Int, Int)],
       private val in = path.getFileSystem(serConf.value).open(path)
       private val reader = new java.io.BufferedReader(
         new java.io.InputStreamReader(in, java.nio.charset.Charset.forName(encoding)))
+      private val buf = new java.lang.StringBuilder
       private var line: String = _
 
+      // the ingest's A7 rule, as in FixedWidth.read: a line ends only at
+      // `\n`, and a `\r` is scrubbed to a space instead of shearing the
+      // record in two (BufferedReader.readLine also ends a line at `\r`)
       override def next(): Boolean = {
-        line = reader.readLine()
-        line != null
+        var c = reader.read()
+        if (c < 0) return false
+        buf.setLength(0)
+        while (c >= 0 && c != '\n') {
+          buf.append(if (c == '\r') ' ' else c.toChar)
+          c = reader.read()
+        }
+        line = buf.toString
+        true
       }
 
       override def get(): InternalRow = {

@@ -81,6 +81,15 @@ class GraftSessionSpec extends AnyFunSuite {
       s"cut lineage with Materialize.checkpointed/lazyCheckpointed: ${offenders.mkString(", ")}")
   }
 
+  test("no JVM-property knob in src/main/scala") {
+    val knob = "sys\\.props|System\\.(?:get|set)Property".r
+    val offenders = sources("src/main/scala").collect {
+      case (p, src) if knob.findFirstIn(src).isDefined => p
+    }
+    assert(offenders.isEmpty,
+      s"configure through options or the session, not JVM properties: ${offenders.mkString(", ")}")
+  }
+
   test("the mains in src/main/scala are exactly the listed entry points") {
     // each `def main` is attributed to the last object declared above it
     val objectDecl = "(?m)^\\s*(?:private\\s+|final\\s+)*object\\s+(\\w+)".r

@@ -433,24 +433,32 @@ class NcdIngestSpec extends AnyFunSuite with Eventually {
       Map("CT" -> 1, "FLM" -> 4, "NY" -> 1))
   }
 
-  test("a failing unit is rethrown after every unit has finished") {
-    // the fixture zip plus a codebook member with no GS_* name
-    val zipPath = Files.createTempDirectory("ncd_bad_").resolve("bad.zip")
+  /** The fixture zip with `member` added, or replaced if present. */
+  private def fixtureZipWith(member: String,
+                             content: Array[Byte]): java.nio.file.Path = {
+    val zipPath = Files.createTempDirectory("ncd_variant_").resolve("v.zip")
     val fixture = new ZipFile(Fixtures.tempZip().toFile)
     val out = new ZipOutputStream(new FileOutputStream(zipPath.toFile))
     try {
-      fixture.entries().asScala.foreach { e =>
+      fixture.entries().asScala.filter(_.getName != member).foreach { e =>
         out.putNextEntry(new ZipEntry(e.getName))
         out.write(fixture.getInputStream(e).readAllBytes())
         out.closeEntry()
       }
-      out.putNextEntry(new ZipEntry("table_gs_bad.txt"))
-      out.write("not a codebook\n".getBytes(StandardCharsets.ISO_8859_1))
+      out.putNextEntry(new ZipEntry(member))
+      out.write(content)
       out.closeEntry()
     } finally {
       out.close()
       fixture.close()
     }
+    zipPath
+  }
+
+  test("a failing unit is rethrown after every unit has finished") {
+    // the fixture zip plus a codebook member with no GS_* name
+    val zipPath = fixtureZipWith("table_gs_bad.txt",
+      "not a codebook\n".getBytes(StandardCharsets.ISO_8859_1))
     val tmp = new File(System.getProperty("java.io.tmpdir"))
     def scratchDirs(): Set[String] =
       tmp.listFiles().map(_.getName).filter(_.startsWith("ncd_zip_")).toSet
@@ -466,20 +474,17 @@ class NcdIngestSpec extends AnyFunSuite with Eventually {
     assert(ing.loaded.toSeq === fixtureTables.take(4))
   }
 
-  test("global-file size gate: a sub-gate member takes the distributed " +
-      "split path and loads tables equal to the driver path") {
-    // force the gate to 1 byte so global_LIONS.txt exceeds it — the load
-    // must dispatch to GlobalSplitter.splitDistributed and produce the
-    // SAME registered tables as the whole-string driver path above
-    System.setProperty("graft.globalfile.driver.gate.bytes", "1")
-    try {
-      val wh = Files.createTempDirectory("ncd_gate_").toString
-      val ing = new NcdIngest(spark, wh, db = "ncd_gate")
-      ing.loadZip(Fixtures.tempZip().toString)
+  test("a global_LIONS.txt with CRLF or CR line ends loads the LF tables") {
+    for ((eol, db) <- Seq("\r\n" -> "ncd_crlf", "\r" -> "ncd_cr")) {
+      val zip = fixtureZipWith("global_LIONS.txt",
+        Fixtures.globalLions.replace("\n", eol).getBytes(StandardCharsets.UTF_8))
+      val ing = new NcdIngest(spark,
+        Files.createTempDirectory(s"${db}_wh_").toString, db = db)
+      ing.loadZip(zip.toString)
       assert(ing.loaded.toSeq === ingest.loaded.toSeq)
-      val a = spark.table("ncd_gate.GS_DISTRICT").orderBy("CODE").collect()
-      val b = spark.table("ncd.GS_DISTRICT").orderBy("CODE").collect()
-      assert(a.toSeq === b.toSeq)
-    } finally System.clearProperty("graft.globalfile.driver.gate.bytes")
+      for (table <- Seq("GS_DISTRICT", "GS_OFFENSE"))
+        assert(spark.table(s"$db.$table").orderBy("CODE").collect().toSeq ===
+          spark.table(s"ncd.$table").orderBy("CODE").collect().toSeq, table)
+    }
   }
 }

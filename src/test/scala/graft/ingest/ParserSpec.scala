@@ -1,5 +1,10 @@
 package graft.ingest
 
+import java.io.{BufferedReader, StringReader}
+
+import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
+
 import org.scalatest.funsuite.AnyFunSuite
 
 class SchemaParserSpec extends AnyFunSuite {
@@ -65,8 +70,65 @@ class RulerParserSpec extends AnyFunSuite {
 
 class GlobalSplitterSpec extends AnyFunSuite {
 
+  /** Lines as `ZipSource.withMemberLines` yields them: ended by `\n`,
+    * `\r\n` or `\r`, without the terminator.
+    */
+  private def linesOf(text: String): Iterator[String] =
+    new BufferedReader(new StringReader(text)).lines().iterator().asScala
+
+  // duplicate name (first occurrence wins), a bare name line NOT followed
+  // by a blank (ends the previous fragment but starts nothing), trailing
+  // blank lines (trimmed)
+  private val nasty = Seq(
+    "preamble junk", "",
+    "GS_ALPHA", "",
+    "Code Name", "---- ----", "A1 First", "",
+    "EMBEDDED",
+    "GS_BETA", "",
+    "Code Desc", "---- ----", "B1 Second", "", "",
+    "GS_ALPHA", "",
+    "Code Name", "---- ----", "A2 Duplicate", "").mkString("\n")
+
+  private val NameLine: Regex = "(?m)^([A-Z]\\S+)$".r
+  private val NextName: Regex = "(?m)\\n*^[A-Z]\\S+$\\s*".r
+
+  /** The earlier whole-string regex split, kept verbatim as the oracle for
+    * LF text.
+    */
+  private def regexSplit(content: String): Map[String, String] = {
+    val names = NameLine.findAllMatchIn(content).map(_.group(1)).toVector
+    if (names.isEmpty) return Map.empty
+
+    val starts = names.distinct.map { name =>
+      val headerRe = ("(?m)^" + Regex.quote(name) + "\\n\\n").r
+      headerRe.findFirstMatchIn(content) match {
+        case Some(m) => Some(name -> m.end)
+        case None    => None // name line not followed by blank line: skip
+      }
+    }.flatten
+
+    val sortedByPos = starts.sortBy(_._2)
+    sortedByPos.zipWithIndex.map { case ((name, start), i) =>
+      val hardEnd =
+        if (i + 1 < sortedByPos.size) {
+          // end at the *name line* of the next table, not its content start
+          val nextName = sortedByPos(i + 1)._1
+          val nameRe = ("(?m)^" + Regex.quote(nextName) + "$").r
+          nameRe.findAllMatchIn(content)
+            .find(m => m.start > start).map(_.start).getOrElse(content.length)
+        } else content.length
+      var fragment = content.substring(start, hardEnd)
+      // defensively truncate at any embedded bare name line (reference does
+      // the same second-pass trim, ncd/global_file.py:159-162)
+      NextName.findFirstMatchIn(fragment).foreach { m =>
+        fragment = fragment.substring(0, m.start)
+      }
+      name -> fragment.trim
+    }.toMap
+  }
+
   test("splits stacked tables on bare name lines") {
-    val tables = GlobalSplitter.split(Fixtures.globalLions)
+    val tables = GlobalSplitter.split(linesOf(Fixtures.globalLions))
     assert(tables.keySet === Set("GS_DISTRICT", "GS_OFFENSE"))
     assert(tables("GS_DISTRICT").startsWith("Code Name"))
     assert(tables("GS_DISTRICT").endsWith("District of Connecticut"))
@@ -74,32 +136,52 @@ class GlobalSplitterSpec extends AnyFunSuite {
   }
 
   test("no name lines -> empty") {
-    assert(GlobalSplitter.split("nothing\nto see\n") === Map.empty)
+    assert(GlobalSplitter.split(linesOf("nothing\nto see\n")) === Map.empty)
   }
 
-  test("executor-side splitDistributed equals the driver-side split") {
-    val spark = graft.TestSpark.spark
-    // the real fixture, plus a nastier synthetic one: duplicate name
-    // (first occurrence wins), a bare name line NOT followed by a blank
-    // (truncates the previous fragment but starts nothing), trailing
-    // blank lines (trimmed)
-    val nasty = Seq(
-      "preamble junk", "",
-      "GS_ALPHA", "",
-      "Code Name", "---- ----", "A1 First", "",
-      "EMBEDDED",
-      "GS_BETA", "",
-      "Code Desc", "---- ----", "B1 Second", "", "",
-      "GS_ALPHA", "",
-      "Code Name", "---- ----", "A2 Duplicate", "").mkString("\n")
-    for (content <- Seq(Fixtures.globalLions, nasty)) {
-      val f = java.nio.file.Files.createTempFile("global_", ".txt")
-      java.nio.file.Files.write(f, content.getBytes("ISO-8859-1"))
-      val driver = GlobalSplitter.split(content)
-      val distributed = GlobalSplitter.splitDistributed(spark, f.toString)
-      assert(distributed === driver)
-      java.nio.file.Files.delete(f)
+  test("pinned fragments for the fixture and the nasty input") {
+    val fixture = Map(
+      "GS_DISTRICT" -> Seq("Code Name", "---- --------------------------",
+        "FLM  Middle District of Florida",
+        "CT   District of Connecticut").mkString("\n"),
+      "GS_OFFENSE" -> Seq("Code Title", "---- -------------------",
+        "0100 Official Corruption", "0200 Narcotics").mkString("\n"))
+    val nastyTables = Map(
+      "GS_ALPHA" -> "Code Name\n---- ----\nA1 First",
+      "GS_BETA" -> "Code Desc\n---- ----\nB1 Second")
+    for ((text, expected) <- Seq(Fixtures.globalLions -> fixture,
+                                 nasty -> nastyTables)) {
+      assert(regexSplit(text) === expected)
+      for (eol <- Seq("\n", "\r\n", "\r"))
+        assert(GlobalSplitter.split(linesOf(text.replace("\n", eol))) ===
+          expected, s"line end ${eol.map(_.toInt)}")
     }
+  }
+
+  test("generated inputs split as the regex split does on LF text") {
+    val names = Seq("GS_A", "GS_B", "GS_C", "XY")
+    val others = Seq("Code Name", "---- ----", "a1 x", "  indented", "x",
+      "   ", "GS_A junk", "\tTab")
+    val rng = new scala.util.Random(8)
+    var nonEmpty = 0
+    for (_ <- 1 to 500) {
+      val lines = Seq.fill(rng.nextInt(24)) {
+        rng.nextInt(10) match {
+          case 0 | 1 | 2 => names(rng.nextInt(names.size))
+          case 3 | 4 | 5 => ""
+          case _         => others(rng.nextInt(others.size))
+        }
+      }
+      val eol = Seq("\n", "\r\n", "\r")(rng.nextInt(3))
+      val text = lines.mkString(eol) + (if (rng.nextBoolean()) eol else "")
+      val lf = text.replace("\r\n", "\n").replace("\r", "\n")
+      val expected = regexSplit(lf)
+      if (expected.nonEmpty) nonEmpty += 1
+      assert(GlobalSplitter.split(linesOf(text)) === expected,
+        s"input ${text.map(_.toInt)}")
+    }
+    // the generator must actually start tables, not just produce noise
+    assert(nonEmpty > 100, s"only $nonEmpty of 500 inputs had a table")
   }
 }
 

@@ -130,6 +130,31 @@ class FixedWidthSourceSpec extends AnyFunSuite {
     assert(rows === Array(("AAA", "1234", "north"), ("BBB", "5678", "south")))
   }
 
+  test("an embedded CR is a space, as in FixedWidth.read, not a line end") {
+    import graft.ingest.{FieldSpec, FixedWidth, OracleType, TableSpec}
+    val dir = Files.createTempDirectory("fw_cr_")
+    Files.write(dir.resolve("d.txt"),
+      "AA\rA 1234 north\nBBB  56\r78south\r\nCCC\n"
+        .getBytes(StandardCharsets.ISO_8859_1))
+    val names = Seq("code", "qty", "region")
+    val connector = spark.read.format("fixedwidth")
+      .option("names", names.mkString(","))
+      .option("widths", "5,5,5")
+      .load(dir.toString)
+      .collect().map(r => names.indices.map(i => Option(r.getString(i))))
+    val spec = TableSpec("T", names.zipWithIndex.map { case (n, i) =>
+      FieldSpec(n, 1 + 5 * i, 5, OracleType.Varchar)
+    })
+    // the connector's null is the ingest's empty cell
+    val ingest = FixedWidth.read(spark, dir.toString, spec)
+      .select(names.map(col): _*).collect()
+      .map(r => names.indices.map(i => Option(r.getString(i)).filter(_.nonEmpty)))
+    assert(connector.length === 3)
+    assert(connector.sortBy(_.head) === ingest.sortBy(_.head))
+    assert(connector.sortBy(_.head).head ===
+      Seq(Some("AA A"), Some("1234"), Some("north")))
+  }
+
   test("typed conversion composes downstream via FixedWidth.convert") {
     import graft.ingest.{FixedWidth, OracleType}
     val df = spark.read.format("fixedwidth")
