@@ -17,8 +17,8 @@ object Verify {
       only.forall(_.exists(name.startsWith))
     SparkEntry.queries.filter { case (n, _) => selected(n) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try graft.fs.NioLocalFs.writer(fn(spark, sfDir).coalesce(1))
+        .mode("overwrite").parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

@@ -1,6 +1,8 @@
 package graft.ingest
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
+
+import graft.fs.NioLocalFs
 
 /** A10-A12 + A17-A20: gzipped JSON-lines sink with Hive-style district
   * partitions, plus catalog DDL.
@@ -25,6 +27,12 @@ import org.apache.spark.sql.DataFrame
   * first and its JSON table from the mirror, so its text is parsed once.
   * The DDL builders only build strings: NcdIngest runs them on its
   * calling thread, in table order, once every write has landed.
+  *
+  * The JSON table and both mirrors are written through
+  * [[graft.fs.NioLocalFs.writer]]: a local write makes its directories,
+  * part files and `.crc` sidecars without a `chmod` child process. Only
+  * [[writeBucketed]] keeps the default file system, because
+  * `saveAsTable` stores writer options in the catalog table.
   */
 object Sink {
 
@@ -64,26 +72,34 @@ object Sink {
        |LOCATION '$location'""".stripMargin
   }
 
+  /** The one spelling of a district table write, through the fork-free
+    * [[graft.fs.NioLocalFs.writer]]: overwrite, and when partitioned, by
+    * `filename_district` with dynamic partition overwrite — the
+    * reference's per-district object key (athena.py:92-111). A later zip
+    * carrying district D replaces ONLY `filename_district=D` and leaves
+    * every other district's data in place, so multi-zip loads ACCUMULATE
+    * districts; static overwrite would wipe the whole table location on
+    * each zip. Unpartitioned tables upload a single `<table>.json.gz`
+    * object in the reference, so whole-location overwrite is exactly
+    * right there.
+    */
+  private def districtWriter(df: DataFrame,
+                             partitioned: Boolean): DataFrameWriter[Row] = {
+    val writer = NioLocalFs.writer(df).mode("overwrite")
+    if (partitioned) writer
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("filename_district")
+    else writer
+  }
+
   /** A12: write the converted rows as gzipped JSON-lines in the reference's
     * partition layout. One file per district partition (`coalesce` per the
     * reference's one-object-per-district upload would bottleneck at scale,
     * so we let Spark keep its natural per-split parallelism).
     */
   def writeJson(df: DataFrame, location: String,
-                partitioned: Boolean): Unit = {
-    val writer = df.write.mode("overwrite").option("compression", "gzip")
-    // dynamic partition overwrite = the reference's per-district object
-    // key (athena.py:92-111): a later zip carrying district D replaces
-    // ONLY filename_district=D, leaving every other district's data in
-    // place — multi-zip loads ACCUMULATE districts. Static overwrite
-    // would wipe the whole table location on each zip. Unpartitioned
-    // tables upload a single `<table>.json.gz` object in the reference,
-    // so whole-location overwrite is exactly right there.
-    if (partitioned) writer
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("filename_district").json(location)
-    else writer.json(location)
-  }
+                partitioned: Boolean): Unit =
+    districtWriter(df, partitioned).option("compression", "gzip").json(location)
 
   /** The 100-TB-scale mirror: identical rows, columnar + splittable.
     *
@@ -100,32 +116,27 @@ object Sink {
     val laid = zorder.fold(df) { case (dimA, dimB, numFiles) =>
       graft.operators.ZOrder.layout(df, df.col(dimA), df.col(dimB), numFiles)
     }
-    val writer = laid.write.mode("overwrite")
-    // same per-district overwrite contract as [[writeJson]]
-    if (partitioned) writer
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("filename_district").parquet(location)
-    else writer.parquet(location)
+    districtWriter(laid, partitioned).parquet(location)
   }
 
   /** ORC mirror — the same analytical-mirror contract as
     * [[writeParquetMirror]] for deployments standardized on ORC (both are
     * splittable columnar formats with predicate pushdown and column
-    * pruning; OrcMirrorSpec proves the roundtrip and that filters reach
-    * the ORC scan).
+    * pruning; OrcMirrorSpec proves the roundtrip, that filters reach
+    * the ORC scan, and that a second district leaves the first in place).
     */
   def writeOrcMirror(df: DataFrame, location: String,
-                     partitioned: Boolean = false): Unit = {
-    val writer = df.write.mode("overwrite")
-    if (partitioned) writer.partitionBy("filename_district").orc(location)
-    else writer.orc(location)
-  }
+                     partitioned: Boolean = false): Unit =
+    districtWriter(df, partitioned).orc(location)
 
   /** Bucketed catalog table for shuffle-free equi-joins: co-locates rows of
     * repeatedly-joined fact tables on the join key (e.g. CASEID between
     * GS_CASE and GS_COURT_HIST) so the sort-merge join reads pre-shuffled,
     * pre-sorted buckets. Bucketing requires `saveAsTable` (the bucket
-    * metadata lives in the catalog, not the files).
+    * metadata lives in the catalog, not the files). `saveAsTable` copies
+    * writer options into the table's storage properties, so this write
+    * does not go through [[graft.fs.NioLocalFs.writer]]: its file-system
+    * binding would outlive the write in the catalog.
     */
   def writeBucketed(df: DataFrame, table: String, bucketCol: String,
                     buckets: Int): Unit =

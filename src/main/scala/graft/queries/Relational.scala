@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables.table
+import graft.fs.NioLocalFs
 import graft.operators.IntervalJoin
 
 /** Relational query surface (SURVEY.md §2-B).
@@ -80,12 +81,12 @@ object Relational {
       val sets = graft.operators.Materialize(coSets(li))
       // pair-count files are read by every graph query's FIRST join;
       // 8 files keeps local scan setup cheap while staying parallel
-      pairsFromSets(sets).groupBy("pa", "pb")
+      NioLocalFs.writer(pairsFromSets(sets).groupBy("pa", "pb")
         .agg(count(lit(1)).as("n_ab"))
-        .coalesce(8).write.mode("overwrite").parquet(s"$out/pairs")
-      sets.select(explode(col("pks")).as("pk"))
+        .coalesce(8)).mode("overwrite").parquet(s"$out/pairs")
+      NioLocalFs.writer(sets.select(explode(col("pks")).as("pk"))
         .groupBy("pk").agg(count(lit(1)).as("n"))
-        .coalesce(4).write.mode("overwrite").parquet(s"$out/items")
+        .coalesce(4)).mode("overwrite").parquet(s"$out/items")
       sets.unpersist()
       out
     })

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables.{table, tableParallel}
+import graft.fs.NioLocalFs
 import graft.functions.FloatVectorDot
 import graft.operators.Materialize
 
@@ -307,7 +308,8 @@ object SimilarityQueries {
       val coarseM = Materialize(hashSample(e, IvfNlist)
         .select(col("vec_id").as("ccid"), col("v").as("cv")))
       val coarse = broadcast(coarseM)
-      coarse.coalesce(1).write.mode("overwrite").parquet(s"$out/coarse")
+      NioLocalFs.writer(coarse.coalesce(1)).mode("overwrite")
+        .parquet(s"$out/coarse")
 
       // coarse assignment + residual, one pass over the corpus
       val wAssign = Window.partitionBy("vec_id")
@@ -333,17 +335,18 @@ object SimilarityQueries {
           .select(col("vec_id").as("sid"), col("j"),
             col("rsub").as("bsub")))
       val book = broadcast(bookM)
-      book.coalesce(1).write.mode("overwrite").parquet(s"$out/book")
+      NioLocalFs.writer(book.coalesce(1)).mode("overwrite")
+        .parquet(s"$out/book")
 
       // encode: per (vector, subspace), code = argmin over the codebook
-      sub.join(book, "j")
+      NioLocalFs.writer(sub.join(book, "j")
         .withColumn("bd2s", floor(rd2(col("rsub"), col("bsub")) * 1e6)
           .cast("long"))
         .groupBy("vec_id", "ccid", "j")
         .agg(min(struct(col("bd2s"), col("sid"))).as("m"))
         .select(col("vec_id"), col("ccid"), col("j"),
           col("m.sid").as("code"))
-        .coalesce(2).write.mode("overwrite").parquet(s"$out/codes")
+        .coalesce(2)).mode("overwrite").parquet(s"$out/codes")
       assign.unpersist()
       coarseM.unpersist()
       bookM.unpersist()

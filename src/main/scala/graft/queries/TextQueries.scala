@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables.{table, tableParallel}
+import graft.fs.NioLocalFs
 import graft.functions.{MinhashBandKeys, NGrams, NfcNormalize, ShingleHashes, SimhashSig, TextOps, WindowHashes, WinnowFingerprints}
 import graft.functions.TextOps._
 import graft.operators.{ConnectedComponents, Materialize, SkewTools, StopShingles}
@@ -102,20 +103,20 @@ object TextQueries {
         .select(col("doc_id"), col("source"),
           ShingleHashes.of(tokens(col("text"))).as("hs"))
         .filter(size(col("hs")) > 0))
-      hs.coalesce(8).write.mode("overwrite").parquet(s"$out/hs")
-      hs.select(col("doc_id"), col("source"),
+      NioLocalFs.writer(hs.coalesce(8)).mode("overwrite").parquet(s"$out/hs")
+      NioLocalFs.writer(hs.select(col("doc_id"), col("source"),
           posexplode(MinhashBandKeys.of(col("hs"))))
         .toDF("doc_id", "source", "band_id", "key")
-        .coalesce(8).write.mode("overwrite").parquet(s"$out/bands")
+        .coalesce(8)).mode("overwrite").parquet(s"$out/bands")
       hs.unpersist()
       val bands = s.read.parquet(s"$out/bands")
-      bands.as("a").join(bands.as("b"),
+      NioLocalFs.writer(bands.as("a").join(bands.as("b"),
           col("a.band_id") === col("b.band_id") &&
             col("a.key") === col("b.key") &&
             col("a.doc_id") < col("b.doc_id"))
         .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
         .distinct()
-        .coalesce(4).write.mode("overwrite").parquet(s"$out/cand")
+        .coalesce(4)).mode("overwrite").parquet(s"$out/cand")
       out
     })
 
@@ -186,9 +187,9 @@ object TextQueries {
         Materialize(StopShingles.filter(base, "sh", t)))
       val minJ = if (cut.isEmpty || cut.contains(5L)) 0.8 else 0.0
       val salt = if (cut.isEmpty) Some(8) else None
-      jaccardPairs(sh, minJ, saltBuckets = salt)
+      NioLocalFs.writer(jaccardPairs(sh, minJ, saltBuckets = salt)
         .select("doc_a", "doc_b", "i", "na", "nb")
-        .coalesce(4).write.mode("overwrite").parquet(s"$out/pairs")
+        .coalesce(4)).mode("overwrite").parquet(s"$out/pairs")
       sh.unpersist()
       base.unpersist()
       out
@@ -574,7 +575,8 @@ object TextQueries {
         s"bgscores@${new java.io.File(dir).getName}") {
       val out = graft.operators.StagedArtifacts.tempDir("graft-bgscores-")
       val (scored, bg) = charBigramScoresInline(s, dir)
-      scored.coalesce(4).write.mode("overwrite").parquet(s"$out/scored")
+      NioLocalFs.writer(scored.coalesce(4)).mode("overwrite")
+        .parquet(s"$out/scored")
       bg.unpersist()
       out
     })

@@ -6,6 +6,8 @@ import scala.concurrent.{ExecutionContext, Future}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.fs.NioLocalFs
+
 /** A21: the generic SQL execution client — the drop-in for the reference's
   * `Athena.execute_query` (ncd/athena.py:57-79, :119-174).
   *
@@ -19,6 +21,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - cancellation on failure: each query runs in its own job group, and
   *     any exception cancels the group (the `stop_query_execution` analog);
   *   - an async variant mirroring the reference's submit-then-wait shape.
+  *
+  * The result CSV is written through [[graft.fs.NioLocalFs.writer]], so a
+  * local result location gets its directories, CSV and `.crc` sidecar
+  * without a `chmod` child process.
   */
 final class QueryClient(spark: SparkSession, resultsDir: String) {
 
@@ -35,9 +41,8 @@ final class QueryClient(spark: SparkSession, resultsDir: String) {
     spark.sparkContext.setJobGroup(group, sqlText, interruptOnCancel = true)
     try {
       val location = s"$resultsDir/$queryId"
-      spark.sql(sqlText)
-        .coalesce(1)
-        .write.option("header", "true").csv(location)
+      NioLocalFs.writer(spark.sql(sqlText).coalesce(1))
+        .option("header", "true").csv(location)
       location
     } catch {
       case e: Throwable =>

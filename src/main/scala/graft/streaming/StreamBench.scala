@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.Tables
+import graft.fs.NioLocalFs
 
 /** Streaming bench family (round-9 verdict #8 / round-10 #9): the two
   * heaviest stateful twins — CDC upsert and sessionize — timed at the
@@ -64,20 +65,20 @@ object StreamBench {
                  b: org.apache.spark.sql.DataFrame) =
         SnapshotDiff.diff(a, b, Seq("key"))
           .filter(col("change_type") =!= "unchanged")
-      sparse(old, mid).withColumn("seq", lit(1L))
+      NioLocalFs.writer(sparse(old, mid).withColumn("seq", lit(1L))
         .unionByName(sparse(mid, cur).withColumn("seq", lit(2L)))
         .select("key", "status", "price", "change_type", "seq")
-        .repartition(8).write.mode("overwrite").parquet(out)
+        .repartition(8)).mode("overwrite").parquet(out)
       out
     })
 
   private def sessionFeedDir(spark: SparkSession, sfDir: String): String =
     prepared.computeIfAbsent(s"sess|$sfDir", _ => {
       val out = graft.operators.StagedArtifacts.tempDir("graft-sbench-sess-")
-      Tables.table(spark, sfDir, "events")
+      NioLocalFs.writer(Tables.table(spark, sfDir, "events")
         .select(col("user_id"), col("ts"), col("value"))
         .filter(col("user_id").isNotNull && col("ts").isNotNull)
-        .repartition(8).write.mode("overwrite").parquet(out)
+        .repartition(8)).mode("overwrite").parquet(out)
       out
     })
 

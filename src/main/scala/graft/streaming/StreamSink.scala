@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.fs.NioLocalFs
+
 /** Streaming SINK side of the compaction story: an idempotent keyed
   * parquet upsert driven by `foreachBatch`.
   *
@@ -67,7 +69,7 @@ object StreamSink {
         .map(c => col(s"__m.$c").as(c)): _*)
     val tmp = new Path(path + ".__tmp")
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    compacted.write.mode("overwrite").parquet(tmp.toString)
+    NioLocalFs.writer(compacted).mode("overwrite").parquet(tmp.toString)
     if (fs.exists(old)) fs.delete(old, true) // stale backup from a crash
     if (fs.exists(cur)) renameOrThrow(cur, old)
     renameOrThrow(tmp, cur) // commit; .__old is recoverable until here

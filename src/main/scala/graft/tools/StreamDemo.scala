@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.{GraftSession, Tables}
+import graft.fs.NioLocalFs
 import graft.streaming.{StreamSessionize, StreamStart}
 
 /** End-to-end Structured Streaming drive: replay the events table through
@@ -23,7 +24,8 @@ object StreamDemo {
 
     // stage as a folder of parquet files the stream will pick up in batches
     val stageDir = Files.createTempDirectory("stream_events_").toString
-    events.repartition(8).write.mode("overwrite").parquet(stageDir)
+    NioLocalFs.writer(events.repartition(8)).mode("overwrite")
+      .parquet(stageDir)
 
     val stream = spark.readStream
       .schema(events.schema)

@@ -20,6 +20,17 @@ class OrcMirrorSpec extends AnyFunSuite {
     assert(back.exceptAll(src).isEmpty && src.exceptAll(back).isEmpty)
   }
 
+  test("a partitioned orc mirror keeps the districts an earlier load wrote") {
+    val dir = Files.createTempDirectory("orc_districts_").toString
+    def district(d: String) =
+      spark.range(3).selectExpr("id", s"'$d' AS filename_district")
+    Sink.writeOrcMirror(district("A"), dir, partitioned = true)
+    Sink.writeOrcMirror(district("B"), dir, partitioned = true)
+    val counts = spark.read.orc(dir).groupBy("filename_district").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(counts === Map("A" -> 3L, "B" -> 3L))
+  }
+
   test("filters and projection push down to the ORC scan") {
     val dir = Files.createTempDirectory("orc_push_").toString
     Sink.writeOrcMirror(Tables.table(spark, sf, "events"), dir)
