@@ -9,14 +9,7 @@ object Verify {
     val spark = GraftSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // local-iteration aid (unset in the driver): run only queries whose
-    // name starts with one of the comma-separated prefixes
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(',').toSeq.filter(_.nonEmpty))
-    def selected(name: String): Boolean =
-      only.forall(_.exists(name.startsWith))
-    SparkEntry.queries.filter { case (n, _) => selected(n) }
-      .foreach { case (name, fn) =>
+    SparkEntry.queries.foreach { case (name, fn) =>
       try graft.fs.NioLocalFs.writer(fn(spark, sfDir).coalesce(1))
         .mode("overwrite").parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -1,5 +1,8 @@
 package graft.ingest
 
+import java.nio.charset.Charset
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -85,14 +88,20 @@ object FixedWidth {
            partitionColumns: Seq[String] = Nil): DataFrame = {
     val schema = StructType(
       ("value" +: partitionColumns).map(StructField(_, StringType)))
+    // the text source ignores `encoding` on read: it hands each line's
+    // bytes over as UTF-8, so a latin-1 byte >= 0x80 would come out as
+    // U+FFFD. Any other charset is decoded from those bytes here.
+    val raw = col("value")
+    val decoded =
+      if (Charset.forName(encoding) == UTF_8) raw
+      else decode(raw.cast(BinaryType), encoding)
     val lines = spark.read
       .schema(schema)
       .option("lineSep", "\n")
-      .option("encoding", encoding)
       .text(path)
       // translate, not regexp_replace: same single-char mapping without
       // regex-engine cost on every line of a 100 TB scan
-      .select(translate(col("value"), "\r", " ").as("value") +:
+      .select(translate(decoded, "\r", " ").as("value") +:
         partitionColumns.map(col): _*)
     project(lines, spec, keep = partitionColumns)
   }

@@ -105,8 +105,14 @@ final class NcdIngest(spark: SparkSession, warehouseDir: String,
     }
   }
 
-  private def repairDdl(table: String, isPartitioned: Boolean): Seq[String] =
-    if (isPartitioned) Seq(s"MSCK REPAIR TABLE $db.$table") else Nil
+  /** The DDL that registers a written table, built from the schema of the
+    * frame that was written, then `MSCK REPAIR` when it is partitioned.
+    */
+  private def registerDdl(table: String, schema: StructType,
+                          format: String, isPartitioned: Boolean,
+                          location: String): Seq[String] =
+    Sink.tableDdl(db, table, schema, format, isPartitioned, location) +:
+      (if (isPartitioned) Seq(s"MSCK REPAIR TABLE $db.$table") else Nil)
 
   /** One normal table: discover district files, extract them under one
     * directory per table, convert them with one text scan, write
@@ -154,33 +160,15 @@ final class NcdIngest(spark: SparkSession, warehouseDir: String,
       }
     Sink.writeJson(json, location, isPartitioned)
 
-    val ddl = Sink.normalTableDdl(db, spec, isPartitioned, location) +:
-      repairDdl(spec.name, isPartitioned)
+    // the mirror is registered as `<table>_parquet`, the splittable
+    // columnar twin analytical queries should scan at scale
     val mirrorDdl =
-      if (parquetMirror)
-        mirrorTableDdl(spec.name, parsed.schema, isPartitioned, mirrorLocation)
+      if (parquetMirror) registerDdl(s"${spec.name}_parquet", parsed.schema,
+        "parquet", isPartitioned, mirrorLocation)
       else Nil
-    Some(Written(spec.name, ddl ++ mirrorDdl))
-  }
-
-  /** DDL of the splittable columnar twin of a loaded table, registered as
-    * `<table>_parquet` — the format analytical queries should scan at
-    * scale (gzip JSON-lines exists for reference layout fidelity; it is
-    * non-splittable and row-oriented).
-    */
-  private def mirrorTableDdl(table: String, schema: StructType,
-                             isPartitioned: Boolean,
-                             location: String): Seq[String] = {
-    val cols = schema.map(f => s"    ${f.name} ${f.dataType.sql}")
-      .mkString(",\n")
-    val partitionClause =
-      if (isPartitioned) "\nPARTITIONED BY (filename_district)" else ""
-    s"""CREATE TABLE IF NOT EXISTS $db.${table}_parquet (
-       |$cols
-       |)
-       |USING parquet$partitionClause
-       |LOCATION '$location'""".stripMargin +:
-      repairDdl(s"${table}_parquet", isPartitioned)
+    Some(Written(spec.name,
+      registerDdl(spec.name, json.schema, "json", isPartitioned, location) ++
+        mirrorDdl))
   }
 
   /** A13/A14: one unit per table of the stacked global file, if present.
@@ -222,7 +210,8 @@ final class NcdIngest(spark: SparkSession, warehouseDir: String,
 
     val location = tableLocation(name)
     Sink.writeJson(df, location, partitioned = false)
-    Written(name, Seq(Sink.stringTableDdl(db, name, table.allColumns, location)))
+    Written(name, registerDdl(name, df.schema, "json", isPartitioned = false,
+      location))
   }
 }
 

@@ -27,15 +27,12 @@ object RulerParser {
     else underscored
   }
 
-  /** One parsed string-typed table: normalized column names (data columns
-    * then redacted flags) and rows of (dataCells, redactedFlags).
+  /** One parsed string-typed table: normalized data column names and rows
+    * of (dataCells, redactedFlags).
     */
   final case class StringTable(
       dataColumns: Seq[String],
-      rows: Seq[(Seq[String], Seq[Boolean])]) {
-    def allColumns: Seq[String] =
-      dataColumns ++ dataColumns.map(c => s"redacted_$c")
-  }
+      rows: Seq[(Seq[String], Seq[Boolean])])
 
   private def slice(row: String, start: Int, end: Int): String = {
     val s = math.min(start, row.length)

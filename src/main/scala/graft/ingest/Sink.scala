@@ -1,6 +1,7 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
+import org.apache.spark.sql.types.StructType
 
 import graft.fs.NioLocalFs
 
@@ -25,14 +26,12 @@ import graft.fs.NioLocalFs
   * each call writes only its own table's location, so they need no
   * coordination. With the mirror on, a normal table is written mirror
   * first and its JSON table from the mirror, so its text is parsed once.
-  * The DDL builders only build strings: NcdIngest runs them on its
-  * calling thread, in table order, once every write has landed.
+  * [[tableDdl]] only builds a statement: NcdIngest runs the statements on
+  * its calling thread, in table order, once every write has landed.
   *
-  * The JSON table and both mirrors are written through
+  * The JSON table and the mirror are written through
   * [[graft.fs.NioLocalFs.writer]]: a local write makes its directories,
-  * part files and `.crc` sidecars without a `chmod` child process. Only
-  * [[writeBucketed]] keeps the default file system, because
-  * `saveAsTable` stores writer options in the catalog table.
+  * part files and `.crc` sidecars without a `chmod` child process.
   */
 object Sink {
 
@@ -40,35 +39,24 @@ object Sink {
   def createDatabaseSql(db: String): String =
     s"CREATE DATABASE IF NOT EXISTS $db"
 
-  /** A18: normal-table DDL (2N columns, optional district partition). */
-  def normalTableDdl(db: String, spec: TableSpec, isPartitioned: Boolean,
-                     location: String): String = {
-    val dataCols = spec.fields.map(f => s"    ${f.name} ${f.oracleType.ddlType}")
-    val flagCols = spec.fields.map(f => s"    redacted_${f.name} BOOLEAN")
+  /** A18/A19: the DDL that registers a written table, one column per field
+    * of `schema` (the schema of the frame that was written) in order, each
+    * typed with its Spark SQL name. A normal table's `filename_district` is
+    * the last field of its schema; `partitioned` adds the PARTITIONED BY
+    * clause naming it. A `json` table is gzip-compressed
+    * (ncd/normal_table.py:184-196, ncd/global_file.py:192-203).
+    */
+  def tableDdl(db: String, name: String, schema: StructType, format: String,
+               partitioned: Boolean, location: String): String = {
+    val cols = schema.map(f => s"    ${f.name} ${f.dataType.sql}")
+    val options =
+      if (format == "json") "\nOPTIONS (compression 'gzip')" else ""
     val partitionClause =
-      if (isPartitioned) "\nPARTITIONED BY (filename_district)" else ""
-    val partitionCol =
-      if (isPartitioned) ",\n    filename_district STRING" else ""
-    s"""CREATE TABLE IF NOT EXISTS $db.${spec.name} (
-       |${(dataCols ++ flagCols).mkString(",\n")}$partitionCol
-       |)
-       |USING json
-       |OPTIONS (compression 'gzip')$partitionClause
-       |LOCATION '$location'""".stripMargin
-  }
-
-  /** A19: global/lookup DDL — all STRING data columns + BOOLEAN flags. */
-  def stringTableDdl(db: String, name: String, columns: Seq[String],
-                     location: String): String = {
-    val cols = columns.map { c =>
-      val tpe = if (c.startsWith("redacted_")) "BOOLEAN" else "STRING"
-      s"    $c $tpe"
-    }
+      if (partitioned) "\nPARTITIONED BY (filename_district)" else ""
     s"""CREATE TABLE IF NOT EXISTS $db.$name (
        |${cols.mkString(",\n")}
        |)
-       |USING json
-       |OPTIONS (compression 'gzip')
+       |USING $format$options$partitionClause
        |LOCATION '$location'""".stripMargin
   }
 
@@ -118,31 +106,4 @@ object Sink {
     }
     districtWriter(laid, partitioned).parquet(location)
   }
-
-  /** ORC mirror — the same analytical-mirror contract as
-    * [[writeParquetMirror]] for deployments standardized on ORC (both are
-    * splittable columnar formats with predicate pushdown and column
-    * pruning; OrcMirrorSpec proves the roundtrip, that filters reach
-    * the ORC scan, and that a second district leaves the first in place).
-    */
-  def writeOrcMirror(df: DataFrame, location: String,
-                     partitioned: Boolean = false): Unit =
-    districtWriter(df, partitioned).orc(location)
-
-  /** Bucketed catalog table for shuffle-free equi-joins: co-locates rows of
-    * repeatedly-joined fact tables on the join key (e.g. CASEID between
-    * GS_CASE and GS_COURT_HIST) so the sort-merge join reads pre-shuffled,
-    * pre-sorted buckets. Bucketing requires `saveAsTable` (the bucket
-    * metadata lives in the catalog, not the files). `saveAsTable` copies
-    * writer options into the table's storage properties, so this write
-    * does not go through [[graft.fs.NioLocalFs.writer]]: its file-system
-    * binding would outlive the write in the catalog.
-    */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-                    buckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(buckets, bucketCol)
-      .sortBy(bucketCol)
-      .format("parquet")
-      .saveAsTable(table)
 }

@@ -17,24 +17,13 @@ import org.apache.spark.sql.types._
   *     `\d\d\d\d`; year 0 is below `datetime.MINYEAR` and also rejected).
   *   - unknown tokens fail fast (reference raises NotImplementedError).
   */
-sealed trait OracleType {
-  def sparkType: DataType
-  def ddlType: String
-}
+sealed abstract class OracleType(val sparkType: DataType)
 
 object OracleType {
-  case object Varchar extends OracleType {
-    val sparkType: DataType = StringType; val ddlType = "STRING"
-  }
-  case object Number extends OracleType {
-    val sparkType: DataType = LongType; val ddlType = "BIGINT"
-  }
-  case object OracleDate extends OracleType {
-    val sparkType: DataType = DateType; val ddlType = "DATE"
-  }
-  case object OracleFloat extends OracleType {
-    val sparkType: DataType = DoubleType; val ddlType = "DOUBLE"
-  }
+  case object Varchar extends OracleType(StringType)
+  case object Number extends OracleType(LongType)
+  case object OracleDate extends OracleType(DateType)
+  case object OracleFloat extends OracleType(DoubleType)
 
   /** Parse a raw type token like `VARCHAR2(4)` / `NUMBER(10,2)` / `DATE`.
     * Mirrors the reference's `re.match(r'(?P<type>[^(]+)...')` dispatch.

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Snapshot comparison — the reference's actual analytic workload: DOJ
   * publishes cumulative monthly dumps, and the question is always "what
-  * changed since the last one" (`DistributedZip.readTableAcrossZips` loads
-  * the snapshots; this classifies the delta).
+  * changed since the last one" (`graft.ingest.NcdIngest.loadZip` loads
+  * each snapshot's tables; this classifies the delta).
   *
   * One full-outer equi-join on the key: rows only in the new snapshot are
   * `added`, only in the old are `removed`, present in both with any

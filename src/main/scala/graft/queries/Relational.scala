@@ -1175,7 +1175,7 @@ object Relational {
           .select(explode(sequence(col("lo"), col("hi"),
             expr("interval 1 month"))).as("mon"))
         val nations = o.select("nation").distinct()
-        val spine = broadcast(nations.crossJoin(broadcast(months)))
+        val spine = nations.crossJoin(broadcast(months))
         val act = o.groupBy("nation", "mon")
           .agg(count(lit(1)).as("n_orders"),
                sum(floor(col("o_totalprice") * 100).cast("long"))

@@ -308,7 +308,7 @@ object SimilarityQueries {
       val coarseM = Materialize(hashSample(e, IvfNlist)
         .select(col("vec_id").as("ccid"), col("v").as("cv")))
       val coarse = broadcast(coarseM)
-      NioLocalFs.writer(coarse.coalesce(1)).mode("overwrite")
+      NioLocalFs.writer(coarseM.coalesce(1)).mode("overwrite")
         .parquet(s"$out/coarse")
 
       // coarse assignment + residual, one pass over the corpus
@@ -335,7 +335,7 @@ object SimilarityQueries {
           .select(col("vec_id").as("sid"), col("j"),
             col("rsub").as("bsub")))
       val book = broadcast(bookM)
-      NioLocalFs.writer(book.coalesce(1)).mode("overwrite")
+      NioLocalFs.writer(bookM.coalesce(1)).mode("overwrite")
         .parquet(s"$out/book")
 
       // encode: per (vector, subspace), code = argmin over the codebook

@@ -2,8 +2,6 @@ package graft.query
 
 import java.util.UUID
 
-import scala.concurrent.{ExecutionContext, Future}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.fs.NioLocalFs
@@ -19,8 +17,7 @@ import graft.fs.NioLocalFs
   *   - arbitrary SQL in → tabular results out, also materialized as a CSV
   *     at a result location (`resultsDir/<queryId>/`);
   *   - cancellation on failure: each query runs in its own job group, and
-  *     any exception cancels the group (the `stop_query_execution` analog);
-  *   - an async variant mirroring the reference's submit-then-wait shape.
+  *     any exception cancels the group (the `stop_query_execution` analog).
   *
   * The result CSV is written through [[graft.fs.NioLocalFs.writer]], so a
   * local result location gets its directories, CSV and `.crc` sidecar
@@ -76,15 +73,4 @@ final class QueryClient(spark: SparkSession, resultsDir: String) {
       .option("header", "true")
       .schema(schema)
       .csv(location)
-
-  /** Async submit — the reference's start-then-poll shape without the poll
-    * (completion is the Future's resolution).
-    */
-  def executeQueryAsync(sqlText: String)(
-      implicit ec: ExecutionContext): Future[String] =
-    Future(executeQuery(sqlText))
-
-  /** A17: ensure a database exists (create_db analog). */
-  def createDb(db: String): Unit =
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
 }

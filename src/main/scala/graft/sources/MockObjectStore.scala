@@ -239,9 +239,6 @@ object MockObjectStore {
   private def bucket(name: String): Bucket =
     buckets.computeIfAbsent(name, _ => new Bucket)
 
-  /** Test hook: drop a bucket's contents. */
-  def clearBucket(name: String): Unit = buckets.remove(name)
-
   /** Byte-array input with the seek/pread surface FSDataInputStream
     * requires.
     */

@@ -16,11 +16,10 @@ import graft.Tables.table
   * exchange, the plain-parquet twin of the same join shuffles BOTH
   * sides, and the two joins return identical results.
   *
-  * Complements [[graft.operators]]' BucketedSinkSpec (Sink.writeBucketed
-  * on synthetic rows): this one runs the real TPC-H tables through a
-  * join-PLUS-aggregation pipeline (the groupBy reuses the bucket
-  * partitioning too) and counts exchanges by recursive AQE-stage
-  * traversal instead of a plan-string match.
+  * It runs the real TPC-H tables through a join-PLUS-aggregation
+  * pipeline (the groupBy reuses the bucket partitioning too) and counts
+  * exchanges by recursive AQE-stage traversal instead of a plan-string
+  * match.
   */
 class BucketedJoinSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark

@@ -115,7 +115,7 @@ class NioLocalFsWriterSpec extends AnyFunSuite {
   }
 
   test("saveAsTable stores writer options in the catalog table, so " +
-      "Sink.writeBucketed stays on the default file system") {
+      "src/main/scala has no saveAsTable write") {
     val table = "niowrite_bucketed"
     NioLocalFs.writer(spark.range(10).toDF("k")).mode("overwrite")
       .bucketBy(2, "k").format("parquet").saveAsTable(table)
@@ -132,9 +132,7 @@ class NioLocalFsWriterSpec extends AnyFunSuite {
   private val Exempt = Map(
     ("Bench.scala", "noop") -> "the noop sink writes no file",
     ("Probe.scala", "noop") -> "the noop sink writes no file",
-    ("Relational.scala", "noop") -> "the noop sink writes no file",
-    ("Sink.scala", "saveAsTable") ->
-      "saveAsTable would store the binding in the catalog table (test above)")
+    ("Relational.scala", "noop") -> "the noop sink writes no file")
 
   test("every DataFrame file write in src/main/scala goes through " +
       "NioLocalFs.writer") {

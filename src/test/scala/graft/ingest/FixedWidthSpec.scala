@@ -1,5 +1,7 @@
 package graft.ingest
 
+import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
+import java.nio.file.Files
 import java.sql.Date
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -76,5 +78,56 @@ class FixedWidthSpec extends AnyFunSuite {
       Fixtures.f("5-OCT-0099", 11) + Fixtures.f("", 20) + Fixtures.f("", 12))
       .collect().head
     assert(ok.getAs[Date]("FILE_DATE") === Date.valueOf("0099-10-05"))
+  }
+
+  // FixedWidth.read on member files: decode, line split and CR scrub are
+  // read's own, so these write the bytes and read them back
+  private val fileSpec = TableSpec("T", Seq(
+    FieldSpec("code", 1, 5, OracleType.Varchar),
+    FieldSpec("qty", 6, 5, OracleType.Number),
+    FieldSpec("region", 11, 5, OracleType.Varchar)))
+
+  /** (code, qty, region) per line of a member file holding `bytes`. */
+  private def readBack(bytes: Array[Byte],
+                       encoding: String = "ISO-8859-1") = {
+    val dir = Files.createTempDirectory("fw_read_")
+    Files.write(dir.resolve("t.txt"), bytes)
+    FixedWidth.read(spark, dir.toString, fileSpec, encoding)
+      .select("code", "qty", "region").as[(String, Option[Long], String)]
+      .collect().toSeq
+  }
+
+  test("read: latin-1 bytes >= 0x80 decode under the default encoding") {
+    // 0xE9 ('é') and 0xF1 ('ñ') are not valid UTF-8: a UTF-8 default
+    // would decode them to U+FFFD
+    assert(readBack("café 1234 peña \n".getBytes(ISO_8859_1)) ===
+      Seq(("café", Some(1234L), "peña")))
+  }
+
+  test("read: an embedded CR and a CRLF ending each become a space " +
+      "inside one record") {
+    // Spark's trim strips spaces only: an unscrubbed CR would stay in
+    // the cell, and "\r" as a line end would split the first record
+    assert(readBack("AA\rA 12   north\nBBB  56   ab\r\n".getBytes(ISO_8859_1))
+      .sortBy(_._1) === Seq(("AA A", Some(12L), "north"),
+        ("BBB", Some(56L), "ab")))
+  }
+
+  test("read: a short line gives short cells and no error") {
+    assert(readBack("DDD\n".getBytes(ISO_8859_1)) ===
+      Seq(("DDD", None, "")))
+  }
+
+  test("read: a blank line gives one row") {
+    // the phantom element after the trailing newline is not a row
+    assert(readBack("AAA\n\nBBB\n".getBytes(ISO_8859_1)).sortBy(_._1) ===
+      Seq(("", None, ""), ("AAA", None, ""), ("BBB", None, "")))
+  }
+
+  test("read: cells are sliced by character, not byte, offsets") {
+    // 'é' is 2 bytes in UTF-8 and 'あ' is 3: byte slicing would shear both
+    assert(readBack("ééé  1234 north\nあaあ  5678 south\n".getBytes(UTF_8),
+      "UTF-8").sortBy(_._2) === Seq(("ééé", Some(1234L), "north"),
+        ("あaあ", Some(5678L), "south")))
   }
 }

@@ -257,9 +257,7 @@ class NcdIngestSpec extends AnyFunSuite with Eventually {
     */
   private def fixtureDdl(db: String, wh: String,
                          mirror: Boolean): Seq[String] = {
-    val specs = SchemaParser.parse(Fixtures.readme)
     def loc(table: String) = s"$wh/$db/$table"
-    def flags(cols: String*) = cols ++ cols.map(c => s"redacted_$c")
     val caseMirror = Seq(
       s"""CREATE TABLE IF NOT EXISTS $db.GS_CASE_parquet (
          |    CASEID BIGINT,
@@ -289,20 +287,70 @@ class NcdIngestSpec extends AnyFunSuite with Eventually {
          |)
          |USING parquet
          |LOCATION '${loc("GS_COURT_HIST")}__parquet'""".stripMargin)
-    Seq(Sink.createDatabaseSql(db),
-      Sink.normalTableDdl(db, specs("GS_CASE"), true, loc("GS_CASE")),
+    val caseJson =
+      s"""CREATE TABLE IF NOT EXISTS $db.GS_CASE (
+         |    CASEID BIGINT,
+         |    DISTRICT STRING,
+         |    FILE_DATE DATE,
+         |    LEAD_CHARGE STRING,
+         |    TOTAL_LOSS DOUBLE,
+         |    redacted_CASEID BOOLEAN,
+         |    redacted_DISTRICT BOOLEAN,
+         |    redacted_FILE_DATE BOOLEAN,
+         |    redacted_LEAD_CHARGE BOOLEAN,
+         |    redacted_TOTAL_LOSS BOOLEAN,
+         |    filename_district STRING
+         |)
+         |USING json
+         |OPTIONS (compression 'gzip')
+         |PARTITIONED BY (filename_district)
+         |LOCATION '${loc("GS_CASE")}'""".stripMargin
+    val histJson =
+      s"""CREATE TABLE IF NOT EXISTS $db.GS_COURT_HIST (
+         |    CASEID BIGINT,
+         |    EVENT_DATE DATE,
+         |    EVENT_TYPE STRING,
+         |    redacted_CASEID BOOLEAN,
+         |    redacted_EVENT_DATE BOOLEAN,
+         |    redacted_EVENT_TYPE BOOLEAN
+         |)
+         |USING json
+         |OPTIONS (compression 'gzip')
+         |LOCATION '${loc("GS_COURT_HIST")}'""".stripMargin
+    val strings = Seq(
+      s"""CREATE TABLE IF NOT EXISTS $db.GS_DISTRICT (
+         |    CODE STRING,
+         |    NAME STRING,
+         |    redacted_CODE BOOLEAN,
+         |    redacted_NAME BOOLEAN
+         |)
+         |USING json
+         |OPTIONS (compression 'gzip')
+         |LOCATION '${loc("GS_DISTRICT")}'""".stripMargin,
+      s"""CREATE TABLE IF NOT EXISTS $db.GS_OFFENSE (
+         |    CODE STRING,
+         |    TITLE STRING,
+         |    redacted_CODE BOOLEAN,
+         |    redacted_TITLE BOOLEAN
+         |)
+         |USING json
+         |OPTIONS (compression 'gzip')
+         |LOCATION '${loc("GS_OFFENSE")}'""".stripMargin,
+      s"""CREATE TABLE IF NOT EXISTS $db.GS_POSITION (
+         |    POSITION_CODE STRING,
+         |    DESCRIPTION STRING,
+         |    ACTIVE_FLAG STRING,
+         |    redacted_POSITION_CODE BOOLEAN,
+         |    redacted_DESCRIPTION BOOLEAN,
+         |    redacted_ACTIVE_FLAG BOOLEAN
+         |)
+         |USING json
+         |OPTIONS (compression 'gzip')
+         |LOCATION '${loc("GS_POSITION")}'""".stripMargin)
+    Seq(s"CREATE DATABASE IF NOT EXISTS $db", caseJson,
       s"MSCK REPAIR TABLE $db.GS_CASE") ++
-      (if (mirror) caseMirror else Nil) ++
-      Seq(Sink.normalTableDdl(db, specs("GS_COURT_HIST"), false,
-        loc("GS_COURT_HIST"))) ++
-      (if (mirror) histMirror else Nil) ++ Seq(
-      Sink.stringTableDdl(db, "GS_DISTRICT", flags("CODE", "NAME"),
-        loc("GS_DISTRICT")),
-      Sink.stringTableDdl(db, "GS_OFFENSE", flags("CODE", "TITLE"),
-        loc("GS_OFFENSE")),
-      Sink.stringTableDdl(db, "GS_POSITION",
-        flags("POSITION_CODE", "DESCRIPTION", "ACTIVE_FLAG"),
-        loc("GS_POSITION")))
+      (if (mirror) caseMirror else Nil) ++ Seq(histJson) ++
+      (if (mirror) histMirror else Nil) ++ strings
   }
 
   private val fixtureTables =

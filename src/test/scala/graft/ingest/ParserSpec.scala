@@ -56,7 +56,6 @@ class RulerParserSpec extends AnyFunSuite {
         |*    Redacted""".stripMargin
     val t = RulerParser.parse(fragment)
     assert(t.dataColumns === Seq("CODE", "NAME"))
-    assert(t.allColumns === Seq("CODE", "NAME", "redacted_CODE", "redacted_NAME"))
     assert(t.rows(0) === (Seq("FLM", "Middle District of Florida"),
       Seq(false, false)))
     assert(t.rows(1) === (Seq("", "Redacted"), Seq(true, false)))

@@ -3,7 +3,6 @@ package graft.operators
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.ingest.{DistributedZip, Fixtures, SchemaParser, Sink}
 
 class SkewToolsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -193,81 +192,5 @@ class SkewToolsSpec extends AnyFunSuite {
     assert(rows.map(_.getDouble(2)).toSeq === Seq(6000.0, 3000.0, 100.0))
     assert(rows.head.getLong(3) === 12L)              // distinct keys
     assert(rows.head.getDouble(4) === 7.2)            // max/avg = 60/(100/12)
-  }
-}
-
-class DistributedZipSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
-  test("reads one table across many zips, one task per archive") {
-    import java.nio.file.{Files, StandardCopyOption}
-    val dir = Files.createTempDirectory("multi_zip_")
-    val base = Fixtures.writeZip(dir)
-    Files.copy(base, dir.resolve("dump_2017_01.zip"),
-      StandardCopyOption.REPLACE_EXISTING)
-    Files.copy(base, dir.resolve("dump_2017_02.zip"),
-      StandardCopyOption.REPLACE_EXISTING)
-    Files.delete(base)
-    val spec = SchemaParser.parse(Fixtures.readme)("GS_CASE")
-
-    val df = DistributedZip.readTableAcrossZips(spark, s"$dir/*.zip", spec)
-    import spark.implicits._
-    // 5 GS_CASE rows per zip (4 FLM + 1 CT)
-    val perZip = df.groupBy("source_zip").count()
-      .as[(String, Long)].collect().toMap
-    assert(perZip === Map("dump_2017_01.zip" -> 5L, "dump_2017_02.zip" -> 5L))
-    // typed semantics identical to the single-zip path
-    assert(df.filter($"CASEID" === 1L).count() === 2)
-    assert(df.filter($"redacted_FILE_DATE").count() === 2)
-  }
-
-  test("blank lines produce rows, matching the driver-side ingest path") {
-    import java.io.FileOutputStream
-    import java.nio.file.Files
-    import java.util.zip.{ZipEntry, ZipOutputStream}
-    val dir = Files.createTempDirectory("blank_zip_")
-    val zipPath = dir.resolve("blanks.zip")
-    val out = new ZipOutputStream(new FileOutputStream(zipPath.toFile))
-    out.putNextEntry(new ZipEntry("gs_case_CT.txt"))
-    // row, blank line, row, trailing newline
-    out.write("AAA\n\nBBB\n".getBytes("ISO-8859-1"))
-    out.closeEntry()
-    out.close()
-
-    val lines = DistributedZip
-      .memberLines(spark, zipPath.toString, "gs_case.*\\.txt")
-      .select("value").collect().map(_.getString(0)).toSeq
-    // driver-side twin: spark.read.text emits ("AAA", "", "BBB") — a blank
-    // line is an (all-null once converted) row, and the phantom element
-    // after the trailing newline is NOT a row. Executor-side must agree.
-    val driverSide = spark.read.text(
-      Files.write(dir.resolve("plain.txt"),
-        "AAA\n\nBBB\n".getBytes("ISO-8859-1")).toString)
-      .collect().map(_.getString(0)).toSeq
-    assert(lines === driverSide)
-    assert(lines === Seq("AAA", "", "BBB"))
-  }
-}
-
-class BucketedSinkSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
-  test("bucketed write enables shuffle-free sort-merge join") {
-    import spark.implicits._
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val a = (1 to 5000).map(i => (i.toLong, s"a$i")).toDF("id", "va")
-      val b = (1 to 5000).map(i => (i.toLong, s"b$i")).toDF("id", "vb")
-      Sink.writeBucketed(a, "bkt_a", "id", 4)
-      Sink.writeBucketed(b, "bkt_b", "id", 4)
-      val joined = spark.table("bkt_a").join(spark.table("bkt_b"), "id")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"expected no shuffle:\n$plan")
-      assert(joined.count() === 5000)
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql("DROP TABLE IF EXISTS bkt_a")
-      spark.sql("DROP TABLE IF EXISTS bkt_b")
-    }
   }
 }

@@ -125,12 +125,4 @@ class QueryClientSpec extends AnyFunSuite with Eventually
       assert(!exchanges.exists(_.isInstanceOf[RangePartitioning]))
     }
   }
-
-  test("createDb is idempotent") {
-    val client = new QueryClient(spark,
-      Files.createTempDirectory("qc_results_").toString)
-    client.createDb("qc_db")
-    client.createDb("qc_db")
-    assert(spark.catalog.databaseExists("qc_db"))
-  }
 }
