@@ -89,21 +89,8 @@ object Sink {
                 partitioned: Boolean): Unit =
     districtWriter(df, partitioned).option("compression", "gzip").json(location)
 
-  /** The 100-TB-scale mirror: identical rows, columnar + splittable.
-    *
-    * `zorder = Some((dimA, dimB, numFiles))` lays the mirror out along the
-    * Morton curve of the two dimensions ([[graft.operators.ZOrder.layout]])
-    * before writing: each file (and row group) then carries tight min/max
-    * ranges on BOTH dimensions, so a 2-D range predicate prunes most of
-    * the scan instead of reading every file. Row contents are unchanged —
-    * only their file placement.
-    */
+  /** The 100-TB-scale mirror: identical rows, columnar + splittable. */
   def writeParquetMirror(df: DataFrame, location: String,
-                         partitioned: Boolean,
-                         zorder: Option[(String, String, Int)] = None): Unit = {
-    val laid = zorder.fold(df) { case (dimA, dimB, numFiles) =>
-      graft.operators.ZOrder.layout(df, df.col(dimA), df.col(dimB), numFiles)
-    }
-    districtWriter(laid, partitioned).parquet(location)
-  }
+                         partitioned: Boolean): Unit =
+    districtWriter(df, partitioned).parquet(location)
 }

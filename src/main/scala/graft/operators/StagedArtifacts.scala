@@ -1,24 +1,65 @@
 package graft.operators
 
-/** Registry for the per-JVM staged-artifact ("mirror") pattern: every
-  * mirror family's one-time build is timed here so the bench can report
-  * `mirror_build_sec` per family, and every staged temp dir is deleted
-  * at JVM exit (repeated bench/test JVMs used to accumulate parquet
-  * copies of corpus-derived artifacts under /tmp).
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.fs.NioLocalFs
+
+/** The one spelling of the per-JVM staged-artifact ("mirror") pattern:
+  * an artifact derived from one SF's inputs is built once per JVM into a
+  * temp dir as parquet parts, and every consumer reads the parts back.
   *
-  * Contract (asserted by MirrorContractSpec): staged dirs come from
-  * [[tempDir]] ONLY, which is `Files.createTempDirectory` — a path
-  * unique per JVM by construction, with NO env/property override. A
-  * second JVM can never find or reuse a first JVM's artifact bytes:
-  * every bench/verify invocation rebuilds each mirror from the parquet
-  * inputs inside its own process (cross-run result caching is
-  * prohibited and this object is the choke point that keeps it so).
+  * Contract:
+  *  - [[staged]] builds each `(family, sfDir, variant)` at most once per
+  *    JVM; concurrent callers of one key wait for the one build. The
+  *    build runs under that key's own once-holder, never under a map
+  *    lock, so a build may stage another family first (shpairs reads
+  *    the lsh artifact). A build that throws leaves no entry: the next
+  *    call builds again.
+  *  - The build is timed under `family@<basename(sfDir)>[:variant]`;
+  *    [[buildSeconds]] reports the seconds per label for the bench.
+  *  - Its dir is `graft-<family>-*` from [[tempDir]], the only dir
+  *    source for staged data: `Files.createTempDirectory`, unique per
+  *    JVM by construction, with no env/property override, and deleted
+  *    at JVM exit. A second JVM can never find or reuse a first JVM's
+  *    artifact bytes: every bench/verify invocation rebuilds each mirror
+  *    from its inputs inside its own process (cross-run result caching
+  *    is prohibited and this object is the choke point that keeps it
+  *    so; MirrorContractSpec asserts it).
+  *  - [[Staged]] owns the format: a part is written as parquet,
+  *    overwrite, through the fork-free [[graft.fs.NioLocalFs.writer]],
+  *    and read back as parquet.
   */
 object StagedArtifacts {
 
+  /** One staged artifact's dir: named parquet parts under it. */
+  final class Staged private[StagedArtifacts] (
+      private[operators] val dir: String) {
+    def write(part: String, df: DataFrame): Unit =
+      NioLocalFs.writer(df).mode("overwrite").parquet(s"$dir/$part")
+
+    def read(spark: SparkSession, part: String): DataFrame =
+      spark.read.parquet(s"$dir/$part")
+
+    /** A file-replay stream over the part: one file per micro-batch. */
+    def readStream(spark: SparkSession, part: String): DataFrame =
+      spark.readStream
+        .schema(read(spark, part).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(s"$dir/$part")
+  }
+
+  /** Builds its artifact on first `value`; a build that throws leaves
+    * the lazy val unset.
+    */
+  private final class Once(build: () => Staged) {
+    lazy val value: Staged = build()
+  }
+
+  private val artifacts = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, Option[String]), Once]()
   private val buildSec =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
-  private val dirs =
+  private[operators] val dirs =
     java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
 
   locally {
@@ -41,7 +82,7 @@ object StagedArtifacts {
     } catch { case _: Throwable => () } // exit-time cleanup is best-effort
 
   /** Create a fresh per-JVM temp dir and register it for exit-time
-    * deletion. The only permitted dir source for staged mirrors.
+    * deletion. The only permitted dir source for staged data.
     */
   def tempDir(prefix: String): String = {
     val p = java.nio.file.Files.createTempDirectory(prefix)
@@ -49,19 +90,38 @@ object StagedArtifacts {
     p.toString
   }
 
-  /** Time one mirror family's build; seconds accumulate per key (a
-    * family built at several SFs or variants records each under its own
-    * key). Purely additive accounting — the caller's result is returned
-    * unchanged and the timed work still happens exactly once per JVM.
+  /** The `(family, sfDir, variant)` artifact, built by `build` on the
+    * first call in this JVM and shared by every later one.
     */
-  def timed[T](family: String)(build: => T): T = {
+  def staged(family: String, sfDir: String, variant: Option[String] = None)(
+      build: Staged => Unit): Staged = {
+    val key = (family, sfDir, variant)
+    val once = artifacts.computeIfAbsent(key, _ => new Once(() => {
+      val out = new Staged(tempDir(s"graft-$family-"))
+      timed(label(family, sfDir, variant))(build(out))
+      out
+    }))
+    try once.value
+    catch {
+      case e: Throwable =>
+        artifacts.remove(key, once)
+        throw e
+    }
+  }
+
+  private def label(family: String, sfDir: String,
+                    variant: Option[String]): String =
+    s"$family@${new java.io.File(sfDir).getName}" + variant.fold("")(":" + _)
+
+  /** Time one build; seconds accumulate per label. */
+  private[operators] def timed[T](label: String)(build: => T): T = {
     val t0 = System.nanoTime()
     try build
-    finally buildSec.merge(family, Double.box((System.nanoTime() - t0) / 1e9),
+    finally buildSec.merge(label, Double.box((System.nanoTime() - t0) / 1e9),
       (a, b) => Double.box(a + b))
   }
 
-  /** Accumulated build seconds per family key, for the bench JSON line. */
+  /** Accumulated build seconds per label, for the bench JSON line. */
   def buildSeconds: Map[String, Double] = {
     val b = Map.newBuilder[String, Double]
     buildSec.forEach((k, v) => b += (k -> v.doubleValue()))

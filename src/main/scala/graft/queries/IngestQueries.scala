@@ -1,12 +1,13 @@
 package graft.queries
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, StringType}
 
 import graft.ingest.{Fixtures, NcdIngest}
+import graft.operators.StagedArtifacts
 
 /** §2-A ingest chain under the DuckDB oracle (round-8 verdict #1).
   *
@@ -36,8 +37,9 @@ object IngestQueries {
     * warehouse immutable afterwards, so repeated invocations of the
     * catalog fn (Bench warm-up + timed passes, plan-walking specs that
     * only want `.queryExecution`) reuse the first ingest instead of
-    * re-running the drop/ingest/MSCK chain and leaking a temp dir + zip
-    * per call. The DROP on first touch keeps a stale same-name catalog
+    * re-running the drop/ingest/MSCK chain per call. The warehouse and
+    * zip dirs come from [[StagedArtifacts.tempDir]], so they are deleted
+    * at JVM exit. The DROP on first touch keeps a stale same-name catalog
     * entry from a previous JVM from shadowing the fresh warehouse.
     */
   private val ingested = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
@@ -45,10 +47,15 @@ object IngestQueries {
     ingested.computeIfAbsent(
       s"${System.identityHashCode(spark.sparkContext)}_$db", _ => {
         spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
-        val wh = Files.createTempDirectory(s"${db}_wh_").toString
-        new NcdIngest(spark, wh, db = db).loadZip(Fixtures.tempZip().toString)
+        val wh = StagedArtifacts.tempDir(s"${db}_wh_")
+        new NcdIngest(spark, wh, db = db)
+          .loadZip(fixtureZip(db, Fixtures.writeZip).toString)
         true
       })
+
+  /** `write` a fixture zip into a temp dir deleted at JVM exit. */
+  private def fixtureZip(db: String, write: Path => Path): Path =
+    write(Paths.get(StagedArtifacts.tempDir(s"${db}_zip_")))
 
   val defs: Seq[(String, QueryDef)] = Seq(
 
@@ -205,8 +212,8 @@ object IngestQueries {
     ingested.computeIfAbsent(
       s"${System.identityHashCode(spark.sparkContext)}_$db", _ => {
         spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
-        val zipA = Files.readAllBytes(Fixtures.tempZip())
-        val zipB = Files.readAllBytes(Fixtures.tempZipB())
+        val zipA = Files.readAllBytes(fixtureZip(db, Fixtures.writeZip))
+        val zipB = Files.readAllBytes(fixtureZip(db, Fixtures.writeZipB))
         val server = com.sun.net.httpserver.HttpServer.create(
           new java.net.InetSocketAddress("127.0.0.1", 0), 0)
         def serve(path: String, bytes: Array[Byte]): Unit =
@@ -227,7 +234,7 @@ object IngestQueries {
           serve("/dumps/listing.html", listing.getBytes("UTF-8"))
           serve("/dumps/release_a.zip", zipA)
           serve("/dumps/release_b.zip", zipB)
-          val wh = Files.createTempDirectory(s"${db}_wh_").toString
+          val wh = StagedArtifacts.tempDir(s"${db}_wh_")
           val ingest = new NcdIngest(spark, wh, db = db)
           val client = java.net.http.HttpClient.newHttpClient()
           // zipUrls forces https (production contract); the loopback

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables.table
-import graft.fs.NioLocalFs
 import graft.operators.IntervalJoin
 
 /** Relational query surface (SURVEY.md §2-B).
@@ -66,36 +65,27 @@ object Relational {
     * each carrying (pa, pb, n_ab) plus a sibling per-item order-count
     * table (pk, n) from the same single scan.
     */
-  private val coMirror =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def coMirrorBase(s: SparkSession, dir: String,
-                           capped: Boolean): String = {
-    val key = s"$dir|${if (capped) "lt800" else "full"}"
-    coMirror.computeIfAbsent(key, _ => graft.operators.StagedArtifacts.timed(
-      s"copairs@${new java.io.File(dir).getName}:" +
-        s"${if (capped) "lt800" else "full"}") {
+  private def coMirror(s: SparkSession, dir: String, capped: Boolean) =
+    graft.operators.StagedArtifacts.staged("copairs", dir,
+      Some(if (capped) "lt800" else "full")) { out =>
       val base = table(s, dir, "lineitem")
       val li = if (capped) base.filter(col("l_partkey") < 800) else base
-      val out = graft.operators.StagedArtifacts.tempDir("graft-copairs-")
       val sets = graft.operators.Materialize(coSets(li))
       // pair-count files are read by every graph query's FIRST join;
       // 8 files keeps local scan setup cheap while staying parallel
-      NioLocalFs.writer(pairsFromSets(sets).groupBy("pa", "pb")
+      out.write("pairs", pairsFromSets(sets).groupBy("pa", "pb")
         .agg(count(lit(1)).as("n_ab"))
-        .coalesce(8)).mode("overwrite").parquet(s"$out/pairs")
-      NioLocalFs.writer(sets.select(explode(col("pks")).as("pk"))
+        .coalesce(8))
+      out.write("items", sets.select(explode(col("pks")).as("pk"))
         .groupBy("pk").agg(count(lit(1)).as("n"))
-        .coalesce(4)).mode("overwrite").parquet(s"$out/items")
+        .coalesce(4))
       sets.unpersist()
-      out
-    })
-  }
+    }
 
   /** (pa, pb, n_ab) — distinct co-purchase pairs with order counts. */
   private[graft] def coPairCounts(s: SparkSession, dir: String,
                                   capped: Boolean): DataFrame =
-    s.read.parquet(s"${coMirrorBase(s, dir, capped)}/pairs")
+    coMirror(s, dir, capped).read(s, "pairs")
 
   /** (pa, pb) — the distinct co-purchase edge list (== coPairs(li)
     * .distinct(), via the mirror).
@@ -107,7 +97,7 @@ object Relational {
   /** (pk, n) — per-item order counts from the same mirrored scan. */
   private[graft] def coItemCounts(s: SparkSession, dir: String,
                                   capped: Boolean): DataFrame =
-    s.read.parquet(s"${coMirrorBase(s, dir, capped)}/items")
+    coMirror(s, dir, capped).read(s, "items")
 
   /** Shared by q115 and its forced-rank-join twin q167: the PageRank
     * trajectory as statically-unrolled CTEs (both execution paths are

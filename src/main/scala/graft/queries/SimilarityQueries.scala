@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables.{table, tableParallel}
-import graft.fs.NioLocalFs
-import graft.functions.FloatVectorDot
+import graft.functions.{DoubleVectorDot, FloatVectorDot}
 import graft.operators.Materialize
 
 /** Embedding similarity + sessionization operators (SURVEY.md §2-C).
@@ -262,16 +261,19 @@ object SimilarityQueries {
       .orderBy("query_id")
   }
 
-  /** The IVF-PQ retrieval pipeline (q170's plan), parameterized on the
-    * query predicate and the candidate depth `m` so the composed
-    * retrieval→selection queries (q179) reuse the IDENTICAL index build,
-    * probe, and ADC machinery rather than a re-derivation. Returns
-    * (query_id, neighbor_id, adc_d2_scaled, rnk ≤ m). All broadcast sides
-    * are fixed-cardinality (IvfNlist coarse centroids, PqCodebookSize·8
-    * codebook rows, the query set, the per-query LUT of 3·8·codebook
-    * rows); the corpus is touched by the budgeted assign/encode scans
-    * only — candidate depth changes the final filter, never the shape.
+  /** IVF-PQ distances: `rd2` the double squared L2 of two residuals,
+    * `fd2` the float squared L2 of two vector columns, `residual` v − c
+    * in doubles.
     */
+  private def ddot(a: Column, b: Column): Column = DoubleVectorDot.dot(a, b)
+  private def rd2(a: Column, b: Column): Column =
+    ddot(a, a) - lit(2.0) * ddot(a, b) + ddot(b, b)
+  private def fd2(a: String, b: String): Column =
+    dot(col(a), col(a)) - lit(2.0) * dot(col(a), col(b)) +
+      dot(col(b), col(b))
+  private def residual(v: Column, c: Column): Column =
+    zip_with(v, c, (x, y) => x.cast("double") - y.cast("double"))
+
   /** Per-process parquet mirror of the IVF-PQ INDEX (coarse centroids,
     * PQ codebook, corpus codes) — the fourth staged artifact: exactly
     * the bytes a production ANN service persists once per corpus
@@ -283,23 +285,8 @@ object SimilarityQueries {
     * round-trip parquet bit-exactly; codes are integers), so probe/LUT/
     * ADC results are unchanged.
     */
-  private val ivfPqMirror =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def ivfPqIndexBase(s: SparkSession, dir: String): String =
-    ivfPqMirror.computeIfAbsent(dir, _ => graft.operators.StagedArtifacts.timed(
-      s"ivfpq@${new java.io.File(dir).getName}") {
-      import graft.functions.DoubleVectorDot
-      def ddot(a: Column, b: Column): Column = DoubleVectorDot.dot(a, b)
-      def rd2(a: Column, b: Column): Column =
-        ddot(a, a) - lit(2.0) * ddot(a, b) + ddot(b, b)
-      def fd2(a: String, b: String): Column =
-        dot(col(a), col(a)) - lit(2.0) * dot(col(a), col(b)) +
-          dot(col(b), col(b))
-      def residual(v: Column, c: Column): Column =
-        zip_with(v, c, (x, y) => x.cast("double") - y.cast("double"))
-
-      val out = graft.operators.StagedArtifacts.tempDir("graft-ivfpq-")
+  private def ivfPqIndex(s: SparkSession, dir: String) =
+    graft.operators.StagedArtifacts.staged("ivfpq", dir) { out =>
       val e = tableParallel(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").as("v"))
       // coarse centroids (IvfNlist rows) and the corpus assignment are
@@ -308,8 +295,7 @@ object SimilarityQueries {
       val coarseM = Materialize(hashSample(e, IvfNlist)
         .select(col("vec_id").as("ccid"), col("v").as("cv")))
       val coarse = broadcast(coarseM)
-      NioLocalFs.writer(coarseM.coalesce(1)).mode("overwrite")
-        .parquet(s"$out/coarse")
+      out.write("coarse", coarseM.coalesce(1))
 
       // coarse assignment + residual, one pass over the corpus
       val wAssign = Window.partitionBy("vec_id")
@@ -335,18 +321,17 @@ object SimilarityQueries {
           .select(col("vec_id").as("sid"), col("j"),
             col("rsub").as("bsub")))
       val book = broadcast(bookM)
-      NioLocalFs.writer(bookM.coalesce(1)).mode("overwrite")
-        .parquet(s"$out/book")
+      out.write("book", bookM.coalesce(1))
 
       // encode: per (vector, subspace), code = argmin over the codebook
-      NioLocalFs.writer(sub.join(book, "j")
+      out.write("codes", sub.join(book, "j")
         .withColumn("bd2s", floor(rd2(col("rsub"), col("bsub")) * 1e6)
           .cast("long"))
         .groupBy("vec_id", "ccid", "j")
         .agg(min(struct(col("bd2s"), col("sid"))).as("m"))
         .select(col("vec_id"), col("ccid"), col("j"),
           col("m.sid").as("code"))
-        .coalesce(2)).mode("overwrite").parquet(s"$out/codes")
+        .coalesce(2))
       assign.unpersist()
       coarseM.unpersist()
       bookM.unpersist()
@@ -354,37 +339,36 @@ object SimilarityQueries {
       // bounds with .limit() at read, which would silently select an
       // arbitrary subset of an OVERSIZED artifact — fail loudly here
       // instead, once per JVM, while the build is on the stack
-      val nCoarse = s.read.parquet(s"$out/coarse").count()
+      val nCoarse = out.read(s, "coarse").count()
       require(nCoarse <= IvfNlist,
         s"staged IVF-PQ coarse list has $nCoarse rows > nlist=$IvfNlist")
-      val nBook = s.read.parquet(s"$out/book").count()
+      val nBook = out.read(s, "book").count()
       require(nBook <= PqCodebookSize * 8,
         s"staged PQ codebook has $nBook rows > ${PqCodebookSize * 8}")
-      out
-    })
+    }
 
+  /** The IVF-PQ retrieval pipeline (q170's plan), parameterized on the
+    * query predicate and the candidate depth `m` so the composed
+    * retrieval→selection queries (q179) reuse the IDENTICAL index build,
+    * probe, and ADC machinery rather than a re-derivation. Returns
+    * (query_id, neighbor_id, adc_d2_scaled, rnk ≤ m). All broadcast sides
+    * are fixed-cardinality (IvfNlist coarse centroids, PqCodebookSize·8
+    * codebook rows, the query set, the per-query LUT of 3·8·codebook
+    * rows); the corpus is touched by the budgeted assign/encode scans
+    * only — candidate depth changes the final filter, never the shape.
+    */
   private def ivfPqTopM(s: SparkSession, dir: String,
                         queryPred: Column, m: Int): DataFrame = {
-    import graft.functions.DoubleVectorDot
-    def ddot(a: Column, b: Column): Column = DoubleVectorDot.dot(a, b)
-    def rd2(a: Column, b: Column): Column =
-      ddot(a, a) - lit(2.0) * ddot(a, b) + ddot(b, b)
-    def fd2(a: String, b: String): Column =
-      dot(col(a), col(a)) - lit(2.0) * dot(col(a), col(b)) +
-        dot(col(b), col(b))
-    def residual(v: Column, c: Column): Column =
-      zip_with(v, c, (x, y) => x.cast("double") - y.cast("double"))
-
-    val base = ivfPqIndexBase(s, dir)
+    val index = ivfPqIndex(s, dir)
     // the .limit() re-asserts each artifact's index-parameter
     // cardinality bound at plan level (GlobalLimit), keeping the
     // ANN-family fixed-cardinality broadcast invariant provable; the
     // files hold at most that many rows, so it selects everything
     val coarse = broadcast(
-      s.read.parquet(s"$base/coarse").limit(IvfNlist.toInt))
+      index.read(s, "coarse").limit(IvfNlist.toInt))
     val book = broadcast(
-      s.read.parquet(s"$base/book").limit(PqCodebookSize.toInt * 8))
-    val codes = s.read.parquet(s"$base/codes")
+      index.read(s, "book").limit(PqCodebookSize.toInt * 8))
+    val codes = index.read(s, "codes")
 
     val e = tableParallel(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").as("v"))
@@ -1483,7 +1467,7 @@ object SimilarityQueries {
         // while the index's stored codes rank by the scaled-long
         // floor(d2·1e6) — a different tie-break contract.
         val cent = broadcast(
-          s.read.parquet(s"${ivfPqIndexBase(s, dir)}/coarse")
+          ivfPqIndex(s, dir).read(s, "coarse")
             .limit(IvfNlist.toInt)
             .select(col("ccid").as("cid"), col("cv")))
         def l2(a: String, b: String) =

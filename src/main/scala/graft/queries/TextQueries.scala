@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables.{table, tableParallel}
-import graft.fs.NioLocalFs
 import graft.functions.{MinhashBandKeys, NGrams, NfcNormalize, ShingleHashes, SimhashSig, TextOps, WindowHashes, WinnowFingerprints}
 import graft.functions.TextOps._
 import graft.operators.{ConnectedComponents, Materialize, SkewTools, StopShingles}
@@ -92,45 +91,39 @@ object TextQueries {
     * Contents are exactly what the inline derivations produced —
     * consumer hashes unchanged.
     */
-  private val lshMirror =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def lshMirrorBase(s: SparkSession, dir: String): String =
-    lshMirror.computeIfAbsent(dir, _ => graft.operators.StagedArtifacts.timed(
-      s"lsh@${new java.io.File(dir).getName}") {
-      val out = graft.operators.StagedArtifacts.tempDir("graft-lsh-")
+  private def lshMirror(s: SparkSession, dir: String) =
+    graft.operators.StagedArtifacts.staged("lsh", dir) { out =>
       val hs = Materialize(tableParallel(s, dir, "documents")
         .select(col("doc_id"), col("source"),
           ShingleHashes.of(tokens(col("text"))).as("hs"))
         .filter(size(col("hs")) > 0))
-      NioLocalFs.writer(hs.coalesce(8)).mode("overwrite").parquet(s"$out/hs")
-      NioLocalFs.writer(hs.select(col("doc_id"), col("source"),
+      out.write("hs", hs.coalesce(8))
+      out.write("bands", hs.select(col("doc_id"), col("source"),
           posexplode(MinhashBandKeys.of(col("hs"))))
         .toDF("doc_id", "source", "band_id", "key")
-        .coalesce(8)).mode("overwrite").parquet(s"$out/bands")
+        .coalesce(8))
       hs.unpersist()
-      val bands = s.read.parquet(s"$out/bands")
-      NioLocalFs.writer(bands.as("a").join(bands.as("b"),
+      val bands = out.read(s, "bands")
+      out.write("cand", bands.as("a").join(bands.as("b"),
           col("a.band_id") === col("b.band_id") &&
             col("a.key") === col("b.key") &&
             col("a.doc_id") < col("b.doc_id"))
         .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
         .distinct()
-        .coalesce(4)).mode("overwrite").parquet(s"$out/cand")
-      out
-    })
+        .coalesce(4))
+    }
 
   /** (doc_id, source, hs) — per-doc distinct hashed 3-gram shingles. */
   private[graft] def hsMirror(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${lshMirrorBase(s, dir)}/hs")
+    lshMirror(s, dir).read(s, "hs")
 
   /** (doc_id, source, band_id, key) — the persisted LSH band index. */
   private[graft] def bandsMirror(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${lshMirrorBase(s, dir)}/bands")
+    lshMirror(s, dir).read(s, "bands")
 
   /** (doc_a < doc_b) — distinct band-collision candidate pairs. */
   private[graft] def candMirror(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${lshMirrorBase(s, dir)}/cand")
+    lshMirror(s, dir).read(s, "cand")
 
   /** (doc_id, sh) — the exploded hashed-shingle table, derived from the
     * LSH mirror's per-doc sets: the per-doc explode of a compact parquet
@@ -171,30 +164,22 @@ object TextQueries {
     * hashed sets, so ONE corpus text scan feeds the whole shingle
     * family (signatures, bands, LSH candidates, and exact pairs).
     */
-  private val shPairs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def shPairsBase(s: SparkSession, dir: String,
-                          cut: Option[Long]): String = {
-    val key = s"$dir|${cut.fold("none")(d => s"df$d")}"
-    shPairs.computeIfAbsent(key, _ => graft.operators.StagedArtifacts.timed(
-      s"shpairs@${new java.io.File(dir).getName}:" +
-        cut.fold("none")(d => s"df$d")) {
-      val out = graft.operators.StagedArtifacts.tempDir("graft-shpairs-")
+                          cut: Option[Long]) =
+    graft.operators.StagedArtifacts.staged("shpairs", dir,
+      Some(cut.fold("none")(d => s"df$d"))) { out =>
       val base = Materialize(hsMirror(s, dir)
         .select(col("doc_id"), explode(col("hs")).as("sh")))
       val sh = cut.fold(base)(t =>
         Materialize(StopShingles.filter(base, "sh", t)))
       val minJ = if (cut.isEmpty || cut.contains(5L)) 0.8 else 0.0
       val salt = if (cut.isEmpty) Some(8) else None
-      NioLocalFs.writer(jaccardPairs(sh, minJ, saltBuckets = salt)
+      out.write("pairs", jaccardPairs(sh, minJ, saltBuckets = salt)
         .select("doc_a", "doc_b", "i", "na", "nb")
-        .coalesce(4)).mode("overwrite").parquet(s"$out/pairs")
+        .coalesce(4))
       sh.unpersist()
       base.unpersist()
-      out
-    })
-  }
+    }
 
   /** (doc_a, doc_b, i, na, nb, jaccard) with jaccard ≥ `minJ` — the
     * staged exact-Jaccard pair set for one stop-shingle variant. `minJ`
@@ -209,7 +194,7 @@ object TextQueries {
     val stored = if (cut.isEmpty || cut.contains(5L)) 0.8 else 0.0
     require(minJ >= stored,
       s"shPairsMirror stores jaccard >= $stored for cut=$cut; asked $minJ")
-    s.read.parquet(s"${shPairsBase(s, dir, cut)}/pairs")
+    shPairsBase(s, dir, cut).read(s, "pairs")
       .withColumn("jaccard",
         col("i") * 1.0 / (col("na") + col("nb") - col("i")))
       .filter(col("jaccard") >= minJ)
@@ -566,22 +551,12 @@ object TextQueries {
     * (floor(ln·1e6) per TYPE summed per doc), hence bit-identical
     * through the parquet roundtrip.
     */
-  private val bgScores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def charBigramScores(s: SparkSession, dir: String): DataFrame = {
-    val base = bgScores.computeIfAbsent(dir,
-      _ => graft.operators.StagedArtifacts.timed(
-        s"bgscores@${new java.io.File(dir).getName}") {
-      val out = graft.operators.StagedArtifacts.tempDir("graft-bgscores-")
+  private def charBigramScores(s: SparkSession, dir: String): DataFrame =
+    graft.operators.StagedArtifacts.staged("bgscores", dir) { out =>
       val (scored, bg) = charBigramScoresInline(s, dir)
-      NioLocalFs.writer(scored.coalesce(4)).mode("overwrite")
-        .parquet(s"$out/scored")
+      out.write("scored", scored.coalesce(4))
       bg.unpersist()
-      out
-    })
-    s.read.parquet(s"$base/scored")
-  }
+    }.read(s, "scored")
 
   /** The DuckDB twin of [[charBigramScores]] — CTEs ending in
     * `scored(doc_id, n_bigrams, lps)`.

@@ -25,9 +25,6 @@ import graft.fs.NioLocalFs
   */
 final class QueryClient(spark: SparkSession, resultsDir: String) {
 
-  /** Execute SQL, return the DataFrame (no materialization). */
-  def query(sqlText: String): DataFrame = spark.sql(sqlText)
-
   /** Execute SQL and write results as a single CSV with header under
     * `resultsDir/<queryId>/`, returning the result location. Mirrors the
     * reference's "CSV of query output at an OutputLocation" contract.
@@ -62,15 +59,5 @@ final class QueryClient(spark: SparkSession, resultsDir: String) {
     spark.read
       .option("header", "true")
       .option("inferSchema", "true")
-      .csv(location)
-
-  /** [[readResults]] with exact caller-supplied typing (no inference —
-    * the variant to use when the consumer knows the result schema).
-    */
-  def readResults(location: String,
-                  schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read
-      .option("header", "true")
-      .schema(schema)
       .csv(location)
 }

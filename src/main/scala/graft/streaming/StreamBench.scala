@@ -1,14 +1,11 @@
 package graft.streaming
 
-import java.nio.file.Files
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.Tables
-import graft.fs.NioLocalFs
+import graft.operators.StagedArtifacts
 
 /** Streaming bench family (round-9 verdict #8 / round-10 #9): the two
   * heaviest stateful twins — CDC upsert and sessionize — timed at the
@@ -40,17 +37,14 @@ object StreamBench {
     "qs01_stream_cdc_upsert" -> (runCdcUpsert(_, _)),
     "qs02_stream_sessionize" -> (runSessionize(_, _)))
 
-  private val prepared = new ConcurrentHashMap[String, String]()
-
   /** The q79-shape change feed: three snapshot generations of orders
     * diffed into two tagged delta generations, shuffled round-robin into
     * 8 replay files so superseding events arrive out of order within and
     * across micro-batches — the compaction has real last-wins work.
     */
-  private def cdcFeedDir(spark: SparkSession, sfDir: String): String =
-    prepared.computeIfAbsent(s"cdc|$sfDir", _ => {
+  private def cdcFeed(spark: SparkSession, sfDir: String) =
+    StagedArtifacts.staged("sbench-cdc", sfDir) { out =>
       import graft.operators.SnapshotDiff
-      val out = graft.operators.StagedArtifacts.tempDir("graft-sbench-cdc-")
       val base = Tables.table(spark, sfDir, "orders")
         .select(col("o_orderkey").as("key"),
           col("o_orderstatus").as("status"),
@@ -65,22 +59,19 @@ object StreamBench {
                  b: org.apache.spark.sql.DataFrame) =
         SnapshotDiff.diff(a, b, Seq("key"))
           .filter(col("change_type") =!= "unchanged")
-      NioLocalFs.writer(sparse(old, mid).withColumn("seq", lit(1L))
+      out.write("feed", sparse(old, mid).withColumn("seq", lit(1L))
         .unionByName(sparse(mid, cur).withColumn("seq", lit(2L)))
         .select("key", "status", "price", "change_type", "seq")
-        .repartition(8)).mode("overwrite").parquet(out)
-      out
-    })
+        .repartition(8))
+    }
 
-  private def sessionFeedDir(spark: SparkSession, sfDir: String): String =
-    prepared.computeIfAbsent(s"sess|$sfDir", _ => {
-      val out = graft.operators.StagedArtifacts.tempDir("graft-sbench-sess-")
-      NioLocalFs.writer(Tables.table(spark, sfDir, "events")
+  private def sessionFeed(spark: SparkSession, sfDir: String) =
+    StagedArtifacts.staged("sbench-sess", sfDir) { out =>
+      out.write("feed", Tables.table(spark, sfDir, "events")
         .select(col("user_id"), col("ts"), col("value"))
         .filter(col("user_id").isNotNull && col("ts").isNotNull)
-        .repartition(8)).mode("overwrite").parquet(out)
-      out
-    })
+        .repartition(8))
+    }
 
   private def runToEnd(name: String,
                        q: org.apache.spark.sql.streaming.StreamingQuery)
@@ -93,14 +84,8 @@ object StreamBench {
   def runCdcUpsert(spark: SparkSession, sfDir: String): Unit = {
     import spark.implicits._
     import StreamSessionize.CdcEvent
-    val dir = cdcFeedDir(spark, sfDir)
-    val ckpt =
-      graft.operators.StagedArtifacts.tempDir("graft-sbench-cdc-ck-")
-    val stream = spark.readStream
-      .schema(spark.read.parquet(dir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dir)
-      .as[CdcEvent]
+    val ckpt = StagedArtifacts.tempDir("graft-sbench-cdc-ck-")
+    val stream = cdcFeed(spark, sfDir).readStream(spark, "feed").as[CdcEvent]
     runToEnd("qs01_stream_cdc_upsert",
       StreamStart(StreamSessionize.cdcUpsertStream(stream))(
         _.format("noop").outputMode("update")
@@ -111,14 +96,8 @@ object StreamBench {
   def runSessionize(spark: SparkSession, sfDir: String): Unit = {
     import spark.implicits._
     import StreamSessionize.Event
-    val dir = sessionFeedDir(spark, sfDir)
-    val ckpt =
-      graft.operators.StagedArtifacts.tempDir("graft-sbench-sess-ck-")
-    val stream = spark.readStream
-      .schema(spark.read.parquet(dir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dir)
-      .as[Event]
+    val ckpt = StagedArtifacts.tempDir("graft-sbench-sess-ck-")
+    val stream = sessionFeed(spark, sfDir).readStream(spark, "feed").as[Event]
     runToEnd("qs02_stream_sessionize",
       StreamStart(StreamSessionize.statefulSessionize(stream))(
         _.format("noop").outputMode("append")

@@ -1,12 +1,11 @@
 package graft.tools
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.{GraftSession, Tables}
 import graft.fs.NioLocalFs
+import graft.operators.StagedArtifacts
 import graft.streaming.{StreamSessionize, StreamStart}
 
 /** End-to-end Structured Streaming drive: replay the events table through
@@ -23,7 +22,7 @@ object StreamDemo {
       .select("user_id", "ts", "value")
 
     // stage as a folder of parquet files the stream will pick up in batches
-    val stageDir = Files.createTempDirectory("stream_events_").toString
+    val stageDir = StagedArtifacts.tempDir("stream_events_")
     NioLocalFs.writer(events.repartition(8)).mode("overwrite")
       .parquet(stageDir)
 

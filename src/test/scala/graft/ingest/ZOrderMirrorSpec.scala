@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.operators.ZOrder
 
 /** The Z-ordered parquet mirror must actually SKIP data under a 2-D range
   * predicate — not just sort rows. Small files here mean one row group per
@@ -29,6 +30,10 @@ class ZOrderMirrorSpec extends AnyFunSuite {
     scans.map(_.metrics("numOutputRows").value).sum
   }
 
+  // the mirror laid out along the Morton curve of (a, b)
+  private def zLayout(df: DataFrame, numFiles: Int): DataFrame =
+    ZOrder.layout(df, df.col("a"), df.col("b"), numFiles)
+
   test("z-ordered mirror prunes a 2-D range predicate; plain layout cannot") {
     val n = 40000
     val numFiles = 16
@@ -42,8 +47,7 @@ class ZOrderMirrorSpec extends AnyFunSuite {
 
     val zDir = Files.createTempDirectory("zmirror_").toString
     val plainDir = Files.createTempDirectory("plainmirror_").toString
-    Sink.writeParquetMirror(df, zDir, partitioned = false,
-      zorder = Some(("a", "b", numFiles)))
+    Sink.writeParquetMirror(zLayout(df, numFiles), zDir, partitioned = false)
     Sink.writeParquetMirror(
       df.repartition(numFiles), plainDir, partitioned = false)
 
@@ -86,8 +90,7 @@ class ZOrderMirrorSpec extends AnyFunSuite {
     import spark.implicits._
     val df = (0 until 5000).map(i => (i.toLong, i % 97, i % 89)).toDF("id", "a", "b")
     val dir = Files.createTempDirectory("zmirror_rt_").toString
-    Sink.writeParquetMirror(df, dir, partitioned = false,
-      zorder = Some(("a", "b", 8)))
+    Sink.writeParquetMirror(zLayout(df, 8), dir, partitioned = false)
     val back = spark.read.parquet(dir)
     assert(back.count() === 5000)
     assert(back.select("id").collect().map(_.getLong(0)).toSet ===

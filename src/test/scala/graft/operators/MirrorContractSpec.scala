@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The staged-mirror no-reuse contract (round-12 verdict #2): every
@@ -29,26 +31,35 @@ class MirrorContractSpec extends AnyFunSuite {
   }
 
   test("every mirror build site allocates through StagedArtifacts.tempDir") {
+    // each family stages through StagedArtifacts.staged, which allocates
+    // its dir with tempDir and times its build
     val sites = Seq(
-      "src/main/scala/graft/queries/Relational.scala" -> "graft-copairs-",
-      "src/main/scala/graft/queries/TextQueries.scala" -> "graft-lsh-",
-      "src/main/scala/graft/queries/TextQueries.scala" -> "graft-shpairs-",
-      "src/main/scala/graft/queries/TextQueries.scala" -> "graft-bgscores-",
-      "src/main/scala/graft/queries/SimilarityQueries.scala" -> "graft-ivfpq-")
-    sites.foreach { case (file, prefix) =>
-      val src = read(file)
-      assert(src.contains(s"""StagedArtifacts.tempDir("$prefix")"""),
-        s"$file no longer stages '$prefix' through StagedArtifacts.tempDir")
+      "src/main/scala/graft/queries/Relational.scala" -> "copairs",
+      "src/main/scala/graft/queries/TextQueries.scala" -> "lsh",
+      "src/main/scala/graft/queries/TextQueries.scala" -> "shpairs",
+      "src/main/scala/graft/queries/TextQueries.scala" -> "bgscores",
+      "src/main/scala/graft/queries/SimilarityQueries.scala" -> "ivfpq",
+      "src/main/scala/graft/streaming/StreamBench.scala" -> "sbench-cdc",
+      "src/main/scala/graft/streaming/StreamBench.scala" -> "sbench-sess")
+    sites.foreach { case (file, family) =>
+      assert(read(file).contains(s"""staged("$family""""),
+        s"$file no longer stages '$family' through StagedArtifacts.staged")
     }
-    // no mirror dir may bypass the registry (unregistered dirs escape
-    // both the build timer and the exit-time cleanup)
-    Seq("src/main/scala/graft/queries/Relational.scala",
-        "src/main/scala/graft/queries/TextQueries.scala",
-        "src/main/scala/graft/queries/SimilarityQueries.scala")
-      .foreach { file =>
-        assert(!read(file).contains("createTempDirectory"),
-          s"$file allocates a temp dir outside StagedArtifacts")
-      }
+    // no temp dir may bypass the registry (unregistered dirs escape the
+    // exit-time cleanup)
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val files =
+      try walk.iterator.asScala.map(_.toString).filter(_.endsWith(".scala"))
+        .toList
+      finally walk.close()
+    val scanned = files.filter(f =>
+      Seq("queries", "streaming", "tools")
+        .exists(d => f.startsWith(s"src/main/scala/graft/$d/")))
+    assert(scanned.size > 3)
+    scanned.foreach { file =>
+      assert(!read(file).contains("createTempDirectory"),
+        s"$file allocates a temp dir outside StagedArtifacts")
+    }
   }
 
   test("mirror sources read no environment (no reuse side-channel)") {

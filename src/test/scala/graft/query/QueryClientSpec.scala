@@ -83,13 +83,6 @@ class QueryClientSpec extends AnyFunSuite with Eventually
     val back = client.readResults(location)
       .as[(Long, String, Boolean)].collect().toSeq.sortBy(_._1)
     assert(back === Seq((1L, "a", true), (2L, "b", false), (3L, "c", true)))
-    // explicit-schema variant: exact typing, no inference
-    val typed = client.readResults(location,
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "caseid BIGINT, v STRING, redacted_v BOOLEAN"))
-    assert(typed.schema.map(_.dataType.sql) ===
-      Seq("BIGINT", "STRING", "BOOLEAN"))
-    assert(typed.count() === 3)
   }
 
   test("bad SQL raises (after cancelling the job group) instead of hanging") {
