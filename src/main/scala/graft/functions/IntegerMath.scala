@@ -14,10 +14,10 @@ package graft.functions
   *   sdl(v, d) = sign(v) * (|v| / d)        (d > 0)
   *
   * Scala-side replays (driver-held fixpoints like q296's power
-  * iteration) use [[sdl]]; SQL emitted to BOTH engines uses [[sdlSql]],
-  * which expands to the CASE WHEN spelling with `DIV` (Spark) — the
-  * DuckDB twin's `//` on the same CASE produces identical values
-  * because the inner operands are non-negative.
+  * iteration) use [[sdl]]; Spark SQL uses [[sdlSql]], which expands to
+  * the CASE WHEN spelling with `DIV` — the DuckDB twin's `//` on the same
+  * CASE produces identical values because the inner operands are
+  * non-negative.
   *
   * Property-spec'd in IntegerMathSpec: for all (v, d>0),
   * sdl(v,d) == -sdl(-v,d), sdl matches BigInt reference, and the SQL
@@ -36,10 +36,10 @@ object IntegerMath {
   def sdl(v: BigInt, d: BigInt): BigInt =
     if (v.signum >= 0) v / d else -((-v) / d)
 
-  /** SQL spelling of the same contract, safe to embed in expressions
-    * emitted to Spark (`DIV`) — mirror it with `//` on a DuckDB oracle
-    * side, or reuse this string verbatim there (DuckDB accepts the
-    * CASE; its `//` on non-negative operands equals `DIV`).
+  /** Spark SQL spelling of the same contract (`DIV`), for expressions
+    * run by Spark only. DuckDB 1.0 rejects `DIV` with a parser error, so
+    * a DuckDB oracle spells the same CASE with `//`, which on the
+    * non-negative inner operands equals `DIV`.
     */
   def sdlSql(v: String, d: String): String =
     s"CASE WHEN ($v) >= 0 THEN ($v) DIV ($d) ELSE -((-($v)) DIV ($d)) END"

@@ -1,18 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
 
 /** Signed-random-projection signature for embedding LSH (q47).
   *
   * Hyperplanes are md5-derived pseudo-randoms — `((md5Head8("p_d") % 2001)
   * - 1000) / 1000.0` — exactly the formula the DuckDB oracle evaluates, so
-  * signatures agree bit-for-bit. The expression emits the 4 banded 4-bit
+  * signatures agree bit-for-bit. The kernel ([[Kernels.SrpBandKeys]]) emits the 4 banded 4-bit
   * keys directly (one dot-product loop per plane, float promoted to double
   * left-to-right), replacing 16 interpreted zip_with/aggregate chains.
   */
@@ -57,32 +51,4 @@ object SrpUtil {
     }
     new GenericArrayData(keys)
   }
-}
-
-case class SrpBandKeys(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float>, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "srp_band_keys"
-
-  override def nullSafeEval(v: Any): Any =
-    SrpUtil.bandKeys(v.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SrpUtil.bandKeys($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SrpBandKeys =
-    copy(child = newChild)
-}
-
-object SrpBandKeys {
-
-  val FunctionName = "srp_band_keys"
-
-  def of(v: Column): Column = call_function(FunctionName, v)
 }

@@ -45,11 +45,11 @@ object FixedWidth {
     case OracleType.OracleFloat =>
       when(raw.rlike(FloatRe), raw.cast(DoubleType))
     case OracleType.OracleDate =>
-      // native single-scan parser (graft.functions.OracleDateParse): the
-      // equivalent regex + try_to_timestamp formulation costs ~80x more
-      // per cell and dominated the ingest profile. Resolved through
+      // native single-scan parser (graft.functions.Kernels.OracleDateParse):
+      // the equivalent regex + try_to_timestamp formulation costs ~80x
+      // more per cell and dominated the ingest profile. Resolved through
       // graft.plans.GraftExtensions, which every GraftSession installs.
-      graft.functions.OracleDateParse.of(raw)
+      graft.functions.Kernels.OracleDateParse(raw)
   }
 
   /** Project one raw-line DataFrame (single `value` string column) into the

@@ -2,8 +2,10 @@ package graft.ingest
 
 import java.io.FileOutputStream
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path}
+import java.nio.file.{Path, Paths}
 import java.util.zip.{ZipEntry, ZipOutputStream}
+
+import graft.operators.StagedArtifacts
 
 /** Synthetic NCD-shaped fixture zip per FIXTURES.md §1. Built
   * programmatically so fixed-width column positions are exact.
@@ -107,7 +109,7 @@ object Fixtures {
     zipPath
   }
 
-  def tempZip(): Path = writeZip(Files.createTempDirectory("ncd_fixture_"))
+  def tempZip(): Path = writeZip(Paths.get(StagedArtifacts.tempDir("ncd_fixture_")))
 
   // -------------------------------------------------------------------
   // Second-release zip: the multi-zip accumulation fixture. Carries a
@@ -141,5 +143,5 @@ object Fixtures {
     zipPath
   }
 
-  def tempZipB(): Path = writeZipB(Files.createTempDirectory("ncd_fixture_b_"))
+  def tempZipB(): Path = writeZipB(Paths.get(StagedArtifacts.tempDir("ncd_fixture_b_")))
 }

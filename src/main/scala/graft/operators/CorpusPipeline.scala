@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.{ShingleHashes, TextOps}
+import graft.functions.TextOps
+import graft.functions.Kernels.ShingleHashes
 import graft.functions.TextOps.{hash32, tokens}
 
 /** End-to-end training-corpus preparation: the operator families composed
@@ -135,7 +136,7 @@ object CorpusPipeline {
           .join(exact.select("doc_id"), Seq("doc_id"), "left_semi")
           .select(col("doc_id"), col("sh"))
         case None => exact.select(col("doc_id"),
-          explode(ShingleHashes.of(tokens(col("text")))).as("sh"))
+          explode(ShingleHashes(tokens(col("text")))).as("sh"))
       }
       // materialize BEFORE the cut so the shingle explode runs once even
       // though the df aggregation and anti-join both consume it

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.ZValue
+import graft.functions.Kernels.ZValue
 
 /** Z-order (Morton-curve) data layout: range-partition and sort a table by
   * the interleaved bits of two dimension keys before writing, so files AND
@@ -13,9 +13,10 @@ import graft.functions.ZValue
   * `repartitionByRange` + `sortWithinPartitions` is the write-side shape:
   * one range shuffle (sampled boundaries), then an in-partition sort that
   * parquet turns into per-row-group statistics. The curve value is the
-  * native codegen'd [[ZValue]]; dimensions are reduced mod 2^16, which
-  * preserves locality for keys up to 65536 and hashes beyond (callers with
-  * wider domains should pre-bucket, e.g. `col / width`).
+  * native codegen'd [[graft.functions.Kernels.ZValue]]; dimensions are
+  * reduced mod 2^16, which preserves locality for keys up to 65536 and
+  * hashes beyond (callers with wider domains should pre-bucket, e.g.
+  * `col / width`).
   */
 object ZOrder {
 
@@ -24,7 +25,7 @@ object ZOrder {
     * [[graft.GraftSession]]).
     */
   def zkey(dimA: Column, dimB: Column): Column =
-    ZValue.of(pmod(dimA.cast("long"), lit(65536L)),
+    ZValue(pmod(dimA.cast("long"), lit(65536L)),
       pmod(dimB.cast("long"), lit(65536L)))
 
   /** Lay `df` out along the Z-curve of (dimA, dimB) into `numFiles`

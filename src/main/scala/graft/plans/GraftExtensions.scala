@@ -6,14 +6,17 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.functions.call_function
 
 /** Session extension installer: the one registry of the native
-  * expressions, plus the whole-plan operators. Every native function is
+  * functions, plus the whole-plan operators. Every native function is
   * an entry of [[GraftExtensions.Functions]] and reaches a session only
   * through it, so `spark.sql`, `QueryClient` and the Column helpers
-  * (`of`/`dot`, which call the function by name) see the same set in
-  * every session; without the extension a call fails with
-  * `UNRESOLVED_ROUTINE` naming the function. `GraftSessionSpec` fails on
-  * a per-session temp-function registration in the library and on a
-  * declared `FunctionName` missing from the list.
+  * (each [[graft.functions.Kernel]] row's `apply`, which calls the
+  * function by name) see the same set in every session; without the
+  * extension a call fails with `UNRESOLVED_ROUTINE` naming the function.
+  * The scalar functions are the rows of [[graft.functions.Kernels]], each
+  * planned as a [[graft.functions.KernelCall]]; `ngrams` and `asof_le`
+  * are the two hand-written expressions. `GraftSessionSpec` fails on a
+  * per-session temp-function registration in the library and on any other
+  * hand-written expression under `graft/functions`.
   *
   * Install with `withExtensions(new GraftExtensions)` on a session builder
   * or `--conf spark.sql.extensions=graft.plans.GraftExtensions` (the config
@@ -47,27 +50,14 @@ object GraftExtensions {
 
   import graft.functions._
 
-  /** Every native expression: SQL name, expression class, builder. */
+  /** Every native function: SQL name, expression class, builder. */
   val Functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
     (AsofLE.FunctionName, classOf[AsofLE],
-      e => AsofLE(e.head, e(1), e.drop(2).headOption)),
-    (ShingleHashes.FunctionName, classOf[ShingleHashes], e => ShingleHashes(e.head)),
-    (MinhashBandKeys.FunctionName, classOf[MinhashBandKeys], e => MinhashBandKeys(e.head)),
-    (SimhashSig.FunctionName, classOf[SimhashSig], e => SimhashSig(e.head)),
-    (SrpBandKeys.FunctionName, classOf[SrpBandKeys], e => SrpBandKeys(e.head)),
-    (NfcNormalize.FunctionName, classOf[NfcNormalize], e => NfcNormalize(e.head)),
-    (OracleDateParse.FunctionName, classOf[OracleDateParse], e => OracleDateParse(e.head)),
-    (NGrams.FunctionName, classOf[NGrams], e => NGrams(e.head, e(1))),
-    (WindowHashes.FunctionName, classOf[WindowHashes],
-      e => WindowHashes(e.head, e(1), e(2))),
-    (WinnowFingerprints.FunctionName, classOf[WinnowFingerprints],
-      e => WinnowFingerprints(e.head, e(1), e(2))),
-    (FloatVectorDot.FunctionName, classOf[FloatVectorDot], e => FloatVectorDot(e.head, e(1))),
-    (DoubleVectorDot.FunctionName, classOf[DoubleVectorDot], e => DoubleVectorDot(e.head, e(1))),
-    (LongVectorDot.FunctionName, classOf[LongVectorDot], e => LongVectorDot(e.head, e(1))),
-    (LongVectorL2.FunctionName, classOf[LongVectorL2], e => LongVectorL2(e.head, e(1))),
-    (MaxSimMilli.FunctionName, classOf[MaxSimMilli], e => MaxSimMilli(e.head, e(1))),
-    (ZValue.FunctionName, classOf[ZValue], e => ZValue(e.head, e(1))))
+      (e: Seq[Expression]) => AsofLE(e.head, e(1), e.drop(2).headOption)),
+    (NGrams.FunctionName, classOf[NGrams],
+      (e: Seq[Expression]) => NGrams(e.head, e(1)))) ++
+    Kernels.All.map(k => (k.name, classOf[KernelCall],
+      (e: Seq[Expression]) => KernelCall(k, e)))
 }
 
 /** Public DataFrame-level API for the native as-of join. */

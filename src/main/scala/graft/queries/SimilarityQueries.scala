@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables.{table, tableParallel}
-import graft.functions.{DoubleVectorDot, FloatVectorDot}
+import graft.functions.Kernels.{DoubleVectorDot, FloatVectorDot}
 import graft.operators.Materialize
 
 /** Embedding similarity + sessionization operators (SURVEY.md §2-C).
@@ -26,7 +26,7 @@ object SimilarityQueries {
     * (FloatVectorDot — ~3x the throughput of the zip_with/aggregate fold on
     * pairwise workloads, bit-identical results).
     */
-  private def dot(a: Column, b: Column): Column = FloatVectorDot.dot(a, b)
+  private def dot(a: Column, b: Column): Column = FloatVectorDot(a, b)
   private def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** FIXED index cardinalities — deliberately independent of corpus size.
@@ -265,7 +265,7 @@ object SimilarityQueries {
     * `fd2` the float squared L2 of two vector columns, `residual` v − c
     * in doubles.
     */
-  private def ddot(a: Column, b: Column): Column = DoubleVectorDot.dot(a, b)
+  private def ddot(a: Column, b: Column): Column = DoubleVectorDot(a, b)
   private def rd2(a: Column, b: Column): Column =
     ddot(a, a) - lit(2.0) * ddot(a, b) + ddot(b, b)
   private def fd2(a: String, b: String): Column =
@@ -512,7 +512,7 @@ object SimilarityQueries {
     */
   def ivfKmeans(s: SparkSession, dir: String, maxIters: Int = 40)
       : (org.apache.spark.sql.DataFrame, Int) = {
-    import graft.functions.LongVectorL2
+    import graft.functions.Kernels.LongVectorL2
     import graft.operators.Materialize
     import s.implicits._
     val e = Materialize(tableParallel(s, dir, "embeddings")
@@ -531,7 +531,7 @@ object SimilarityQueries {
     // (lowest cid) matches the struct's lexicographic order.
     def assign(cent: org.apache.spark.sql.DataFrame) =
       e.join(cent)
-        .withColumn("d2", LongVectorL2.l2(col("vq"), col("cq")))
+        .withColumn("d2", LongVectorL2(col("vq"), col("cq")))
         .groupBy("vec_id")
         .agg(min(struct(col("d2"), col("cid"))).as("m"),
              min_by(col("vq"), struct(col("d2"), col("cid"))).as("vq"))
@@ -837,14 +837,14 @@ object SimilarityQueries {
     // pairwise scan of q44; survivors get the exact cosine check.
     "q47_embed_lsh_srp" -> QueryDef(
       (s, dir) => {
-        import graft.functions.SrpBandKeys
+        import graft.functions.Kernels.SrpBandKeys
         val e = tableParallel(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding").as("v"))
         // native signature: one loop over (plane, dim) per vector emits the
         // 4 banded 4-bit keys — same md5-derived planes and fold order as
         // the SQL oracle, ~16x fewer interpreted expression evaluations.
         val bands = e.select(col("vec_id"), col("v"),
-            posexplode(SrpBandKeys.of(col("v"))))
+            posexplode(SrpBandKeys(col("v"))))
           .toDF("vec_id", "v", "band_id", "bkey")
         val cand = bands.as("a")
           .join(bands.as("b"),
@@ -902,7 +902,7 @@ object SimilarityQueries {
     // any corpus scale.
     "q64_lsh_recall" -> QueryDef(
       (s, dir) => {
-        import graft.functions.SrpBandKeys
+        import graft.functions.Kernels.SrpBandKeys
         val e = tableParallel(s, dir, "embeddings")
           .filter(col("vec_id") < 300)
           .select(col("vec_id"), col("embedding").as("v"))
@@ -912,7 +912,7 @@ object SimilarityQueries {
             >= 0.4)
           .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
         val bands = e.select(col("vec_id"), col("v"), col("nrm"),
-            posexplode(SrpBandKeys.of(col("v"))))
+            posexplode(SrpBandKeys(col("v"))))
           .toDF("vec_id", "v", "nrm", "band_id", "bkey")
         val lsh = bands.as("a")
           .join(bands.as("b"),
@@ -1216,7 +1216,7 @@ object SimilarityQueries {
     // Residuals are double-precision differences of the float embeddings
     // (bit-identical in both engines: float→double widening is exact,
     // IEEE double subtract is deterministic), subspace distances go
-    // through the native DoubleVectorDot expression and are floor-scaled
+    // through the native DoubleVectorDot kernel and are floor-scaled
     // to longs before any ranking, so every argmin/top-k is integer math.
     // Scale shape: coarse assign is corpus × nlist (broadcast dims);
     // encode is corpus × codebook per subspace (broadcast codebook, one
@@ -2172,7 +2172,7 @@ object SimilarityQueries {
     // two disjoint pushed assignment slices.
     "q196_ivf_incremental_assign" -> QueryDef(
       (s, dir) => {
-        import graft.functions.LongVectorL2
+        import graft.functions.Kernels.LongVectorL2
         import org.apache.spark.sql.DataFrame
         val e = tableParallel(s, dir, "embeddings")
           .select(col("vec_id"),
@@ -2186,7 +2186,7 @@ object SimilarityQueries {
           hashSample(base, IvfNlist)
             .select(col("vec_id").as("cid"), col("vq").as("cq"))))
         def perCell(x: DataFrame, n: String, mean: String) = x.join(cent)
-          .withColumn("d2", LongVectorL2.l2(col("vq"), col("cq")))
+          .withColumn("d2", LongVectorL2(col("vq"), col("cq")))
           .groupBy("vec_id")
           .agg(min(struct(col("d2"), col("cid"))).as("m"))
           .select(col("m.cid").as("cid"), col("m.d2").as("d2"))
@@ -2352,7 +2352,7 @@ object SimilarityQueries {
     // strategies bit-for-bit with recall in integer bp.
     "q217_multiprobe_lsh_recall" -> QueryDef(
       (s, dir) => {
-        import graft.functions.SrpBandKeys
+        import graft.functions.Kernels.SrpBandKeys
         val e = Materialize(tableParallel(s, dir, "embeddings")
           .filter(col("vec_id") < 300)
           .select(col("vec_id"), col("embedding").as("v"))
@@ -2363,7 +2363,7 @@ object SimilarityQueries {
             (col("a.nrm") * col("b.nrm")) >= 0.4)
           .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b")))
         val bands = Materialize(e
-          .select(col("vec_id"), posexplode(SrpBandKeys.of(col("v"))))
+          .select(col("vec_id"), posexplode(SrpBandKeys(col("v"))))
           .toDF("vec_id", "band_id", "bkey"))
         def strategyRow(name: String, nBands: Int,
                         multi: Boolean): DataFrame = {
@@ -2755,8 +2755,7 @@ object SimilarityQueries {
     "q247_power_iteration_pca" -> QueryDef(
       (s, dir) => {
         def sd(v: String, d: String) =
-          s"CASE WHEN $v >= 0 THEN ($v) DIV ($d) " +
-            s"ELSE -((-($v)) DIV ($d)) END"
+          graft.functions.IntegerMath.sdlSql(v, d)
         val comps = Materialize(tableParallel(s, dir, "embeddings")
           .select(col("vec_id"), posexplode(col("embedding"))
             .as(Seq("i", "x")))
@@ -2857,8 +2856,7 @@ object SimilarityQueries {
     "q249_lloyd_kmeans_rounds" -> QueryDef(
       (s, dir) => {
         def sdiv(v: String, d: String) =
-          s"CASE WHEN $v >= 0 THEN ($v) DIV ($d) " +
-            s"ELSE -((-($v)) DIV ($d)) END"
+          graft.functions.IntegerMath.sdlSql(v, d)
         val comps = Materialize(tableParallel(s, dir, "embeddings")
           .select(col("vec_id"), posexplode(col("embedding"))
             .as(Seq("i", "x")))
@@ -3061,8 +3059,7 @@ object SimilarityQueries {
     "q274_ridge_normal_eq" -> QueryDef(
       (s, dir) => {
         def sd(v: String, d: String) =
-          s"CASE WHEN $v >= 0 THEN ($v) DIV ($d) " +
-            s"ELSE -((-($v)) DIV ($d)) END"
+          graft.functions.IntegerMath.sdlSql(v, d)
         def dec(x: String) = s"CAST($x AS DECIMAL(38,0))"
         // det of [[a,b,c],[d,e,f],[g,h,i]] — entries already DECIMAL
         def det3(a: String, b: String, c: String, d: String, e: String,
@@ -3276,8 +3273,7 @@ object SimilarityQueries {
     "q283_kfold_cv_moments" -> QueryDef(
       (s, dir) => {
         def sd(v: String, d: String) =
-          s"CASE WHEN $v >= 0 THEN ($v) DIV ($d) " +
-            s"ELSE -((-($v)) DIV ($d)) END"
+          graft.functions.IntegerMath.sdlSql(v, d)
         def dec(x: String) = s"CAST($x AS DECIMAL(38,0))"
         def det3(a: String, b: String, c: String, d: String, e: String,
             f: String, g: String, h: String, i: String) =
@@ -3766,7 +3762,7 @@ object SimilarityQueries {
         val scores = vecs.crossJoin(q)
           .filter(col("vec_id") =!= col("qid"))
           .select(col("qid"), col("vec_id"),
-            graft.functions.MaxSimMilli.of(col("qv"), col("xv"))
+            graft.functions.Kernels.MaxSimMilli(col("qv"), col("xv"))
               .as("maxsim_milli2"))
         scores
           .withColumn("rnk", row_number().over(
@@ -4082,7 +4078,7 @@ object SimilarityQueries {
         val pd = Materialize(vecs.as("a").join(broadcast(vecs.as("b")),
             col("a.vec_id") =!= col("b.vec_id"))
           .select(col("a.vec_id").as("va"), col("b.vec_id").as("vb"),
-            graft.functions.LongVectorL2.l2(col("a.xv"), col("b.xv"))
+            graft.functions.Kernels.LongVectorL2(col("a.xv"), col("b.xv"))
               .as("d2"))
           .withColumn("r", row_number().over(Window.partitionBy("va")
             .orderBy(col("d2"), col("vb")))))
@@ -4207,7 +4203,7 @@ object SimilarityQueries {
         val pd = Materialize(vecs.filter(col("side") === 0).as("a")
           .crossJoin(broadcast(vecs.filter(col("side") === 1).as("b")))
           .select(col("a.vec_id").as("xa"), col("b.vec_id").as("yb"),
-            graft.functions.LongVectorDot.dot(col("a.xv"), col("b.xv"))
+            graft.functions.Kernels.LongVectorDot(col("a.xv"), col("b.xv"))
               .as("d"))
           .withColumn("rb", row_number().over(Window.partitionBy("xa")
             .orderBy(col("d").desc, col("yb"))))

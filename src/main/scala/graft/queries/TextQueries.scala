@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables.{table, tableParallel}
-import graft.functions.{MinhashBandKeys, NGrams, NfcNormalize, ShingleHashes, SimhashSig, TextOps, WindowHashes, WinnowFingerprints}
+import graft.functions.{NGrams, TextOps}
+import graft.functions.Kernels.{MinhashBandKeys, NfcNormalize, ShingleHashes, SimhashSig, WindowHashes, WinnowFingerprints}
 import graft.functions.TextOps._
 import graft.operators.{ConnectedComponents, Materialize, SkewTools, StopShingles}
 
@@ -35,7 +36,7 @@ object TextQueries {
        | ELSE CAST([] AS VARCHAR[]) END""".stripMargin
 
   /** Distinct md5-hashed 3-gram shingles — the SQL twin of the native
-    * [[ShingleHashes]] expression (distinct applied AFTER hashing on both
+    * [[ShingleHashes]] kernel (distinct applied AFTER hashing on both
     * sides so 32-bit collisions can never desynchronize the engines).
     */
   private val duckHs =
@@ -95,11 +96,11 @@ object TextQueries {
     graft.operators.StagedArtifacts.staged("lsh", dir) { out =>
       val hs = Materialize(tableParallel(s, dir, "documents")
         .select(col("doc_id"), col("source"),
-          ShingleHashes.of(tokens(col("text"))).as("hs"))
+          ShingleHashes(tokens(col("text"))).as("hs"))
         .filter(size(col("hs")) > 0))
       out.write("hs", hs.coalesce(8))
       out.write("bands", hs.select(col("doc_id"), col("source"),
-          posexplode(MinhashBandKeys.of(col("hs"))))
+          posexplode(MinhashBandKeys(col("hs"))))
         .toDF("doc_id", "source", "band_id", "key")
         .coalesce(8))
       hs.unpersist()
@@ -767,7 +768,7 @@ object TextQueries {
                                   stopShingleDf: Option[Long]): DataFrame = {
     val sh = tableParallel(s, dir, "documents")
       .select(col("doc_id"),
-        explode(ShingleHashes.of(tokens(col("text")))).as("sh"))
+        explode(ShingleHashes(tokens(col("text")))).as("sh"))
     // with the cut engaged, materialize the exploded table FIRST: the df
     // aggregation and the anti-join probe side both consume it, and the
     // tokenize+shingle+explode pass is the most expensive projection in
@@ -1044,7 +1045,7 @@ object TextQueries {
         // aggregation this replaces shuffled every (doc, shingle) row
         // corpus-wide
         val sim = hsMirror(s, dir)
-          .select(col("doc_id"), SimhashSig.of(col("hs")).as("sh"))
+          .select(col("doc_id"), SimhashSig(col("hs")).as("sh"))
         // multi-index blocking instead of an O(n^2) pair join: split the 32
         // bits into 5 chunks — any pair within hamming distance 4 must agree
         // on at least one whole chunk (pigeonhole), so candidates come from
@@ -1560,7 +1561,7 @@ object TextQueries {
     // ---- unicode + whitespace normalization -------------------------------
     // Canonical text cleanup, stage zero of every dedup pipeline (NFC
     // makes visually-equal strings byte-equal, so fingerprints match):
-    // lowercase -> NFC (native [[NfcNormalize]] expression — Spark has no
+    // lowercase -> NFC (native [[NfcNormalize]] kernel — Spark has no
     // normalization built-in, and an Expression keeps it inside codegen)
     // -> control chars to spaces -> whitespace collapse -> trim. Pure
     // map-side projection; the per-source checksum hashes every CLEANED
@@ -1571,7 +1572,7 @@ object TextQueries {
       (s, dir) => {
         tableParallel(s, dir, "documents")
           .withColumn("ct", trim(regexp_replace(
-            regexp_replace(NfcNormalize.of(lower(col("text"))),
+            regexp_replace(NfcNormalize(lower(col("text"))),
               "[\\x00-\\x1f]", " "),
             "\\s+", " ")))
           .groupBy("source")
@@ -1613,7 +1614,7 @@ object TextQueries {
             .select(col("doc_id"), tokens(col("text")).as("ws"))
             .filter(size(col("ws")) >= 8)
             .select(col("doc_id"),
-              posexplode(WindowHashes.of(col("ws"), lit(8), lit(1)))
+              posexplode(WindowHashes(col("ws"), lit(8), lit(1)))
                 .as(Seq("pos", "fp"))))
         val dupFps = spans.groupBy("fp")
           .agg(countDistinct("doc_id").as("nd"))
@@ -3680,7 +3681,7 @@ object TextQueries {
           .select(col("doc_id"), col("source"),
             // native one-pass window hasher — bit-identical to the old
             // interpreted transform(md5(concat_ws(...))) chain
-            explode(WindowHashes.of(col("ws"), lit(5), lit(1)))
+            explode(WindowHashes(col("ws"), lit(5), lit(1)))
               .as("wh")))
         val dup = win.groupBy("wh")
           .agg(countDistinct("doc_id").as("nd"))
@@ -4507,7 +4508,7 @@ object TextQueries {
           .filter(length(col("lt")) >= k + w - 1)
           .withColumn("nw", length(col("lt")) - lit(k + w - 2))
           .withColumn("fps",
-            WinnowFingerprints.of(col("lt"), lit(k), lit(w)))
+            WinnowFingerprints(col("lt"), lit(k), lit(w)))
           .select("doc_id", "source", "nw", "fps"))
         val st = fp.groupBy("source")
           .agg(count(lit(1)).as("n_docs"), sum("nw").as("n_windows"),
@@ -4785,7 +4786,7 @@ object TextQueries {
           .filter(size(col("ws")) >= 10)
           // native strided window hasher (stride = n = 10: disjoint
           // segments) — bit-identical to the old interpreted chain
-          .withColumn("segs", WindowHashes.of(col("ws"), lit(10), lit(10)))
+          .withColumn("segs", WindowHashes(col("ws"), lit(10), lit(10)))
           .select(col("doc_id"), col("source"),
             posexplode(col("segs")).as(Seq("seg_idx", "h")))
           .withColumn("owner",
@@ -5245,7 +5246,7 @@ object TextQueries {
         val hs = Materialize(tableParallel(s, dir, "documents")
           .filter(col("doc_id") < 40)
           .select(col("doc_id"),
-            ShingleHashes.of(tokens(col("text"))).as("hs"))
+            ShingleHashes(tokens(col("text"))).as("hs"))
           .filter(size(col("hs")) > 0))
         val mhArr = (0 until 32).map { i =>
           val a = graft.functions.TextOps.minhashA(i)
@@ -5748,7 +5749,7 @@ object TextQueries {
       (s, dir) => {
         val hs = Materialize(hsMirror(s, dir).select("doc_id", "hs"))
         val pa = Materialize(candMirror(s, dir))
-        val sim = hs.select(col("doc_id"), SimhashSig.of(col("hs")).as("sh"))
+        val sim = hs.select(col("doc_id"), SimhashSig(col("hs")).as("sh"))
         val chunks = Materialize(sim.select(col("doc_id"), col("sh"),
           posexplode(array((0 until 5).map { c =>
             val width = if (c < 4) 7 else 4

@@ -535,7 +535,7 @@ object TrainingQueries {
         table(s, dir, "events")
           .select(pmod(col("user_id"), lit(65536L)).as("um"),
             pmod(expr("unix_micros(ts) DIV 1000000"), lit(65536L)).as("sm"))
-          .withColumn("z", graft.functions.ZValue.of(col("um"), col("sm")))
+          .withColumn("z", graft.functions.Kernels.ZValue(col("um"), col("sm")))
           .withColumn("zbucket", shiftright(col("z"), 26).cast("int"))
           .groupBy("zbucket")
           .agg(count(lit(1)).as("n"),
@@ -4007,8 +4007,7 @@ object TrainingQueries {
     "q276_cuped" -> QueryDef(
       (s, dir) => {
         def sd(v: String, d: String) =
-          s"CASE WHEN $v >= 0 THEN ($v) DIV ($d) " +
-            s"ELSE -((-($v)) DIV ($d)) END"
+          graft.functions.IntegerMath.sdlSql(v, d)
         val cut = "TIMESTAMP '2024-01-16 00:00:00'"
         val users = table(s, dir, "events")
           .groupBy("user_id")
@@ -4099,8 +4098,7 @@ object TrainingQueries {
     "q285_shapley_data_value" -> QueryDef(
       (s, dir) => {
         def sd(v: String, d: String) =
-          s"CASE WHEN $v >= 0 THEN ($v) DIV ($d) " +
-            s"ELSE -((-($v)) DIV ($d)) END"
+          graft.functions.IntegerMath.sdlSql(v, d)
         def dec(x: String) = s"CAST($x AS DECIMAL(38,0))"
         def det3(a: String, b: String, c: String, d: String, e: String,
             f: String, g: String, h: String, i: String) =
@@ -5481,8 +5479,7 @@ object TrainingQueries {
     "q312_loo_influence" -> QueryDef(
       (s, dir) => {
         def sdiv(a: String, b: String) =
-          s"CASE WHEN ($a) >= 0 THEN ($a) DIV ($b) " +
-            s"ELSE -((-($a)) DIV ($b)) END"
+          graft.functions.IntegerMath.sdlSql(a, b)
         val rows = Materialize(table(s, dir, "orders")
           .select(col("o_orderkey"),
             expr("CAST(substring(o_orderpriority, 1, 1) AS BIGINT)")
@@ -6388,8 +6385,7 @@ object TrainingQueries {
     "q326_stratified_ate" -> QueryDef(
       (s, dir) => {
         def sdiv(a: String, b: String) =
-          s"CASE WHEN ($a) >= 0 THEN ($a) DIV ($b) " +
-            s"ELSE -((-($a)) DIV ($b)) END"
+          graft.functions.IntegerMath.sdlSql(a, b)
         val users = Materialize(table(s, dir, "events")
           .groupBy("user_id")
           .agg(count(lit(1)).as("n_ev"),

@@ -47,15 +47,13 @@ class CatalogContractSpec extends AnyFunSuite {
   // predicate below the join. Source-level so it catches the
   // regression at `sbt test` time, before any plan is built.
   test("no catalog query builds an uncut corpus-wide shingle self-join inline") {
-    val queryFiles = new java.io.File("src/main/scala/graft/queries")
-      .listFiles().filter(_.getName.endsWith(".scala"))
     val marker = """"(q\d+_[a-z0-9_]+)"\s*->\s*QueryDef\(""".r
     def read(f: java.io.File): String = {
       val src = scala.io.Source.fromFile(f, "UTF-8")
       try src.mkString finally src.close()
     }
-    val offenders = queryFiles.flatMap { f =>
-      val text = read(f)
+    val queries = graft.SpecFiles.sources("src/main/scala/graft/queries")
+    val offenders = queries.flatMap { case (_, text) =>
       val starts = marker.findAllMatchIn(text).toVector
       starts.zipWithIndex.flatMap { case (m, i) =>
         val end = if (i + 1 < starts.size) starts(i + 1).start else text.length

@@ -1,27 +1,15 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.AbstractFileSystem
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.fs.NioLocalFs
-import graft.functions.ShingleHashes
+import graft.SpecFiles.sources
+import graft.functions.Kernels.ShingleHashes
 import graft.plans.GraftExtensions
 
 class GraftSessionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  /** Every `.scala` file under `root`, with its text. */
-  private def sources(root: String): Seq[(Path, String)] = {
-    val files = Files.walk(Paths.get(root))
-    try files.iterator.asScala
-      .filter(_.toString.endsWith(".scala")).toList
-      .map(p => p -> Files.readString(p))
-    finally files.close()
-  }
 
   test("the test session carries the factory's settings") {
     assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
@@ -49,7 +37,7 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(wrong.isEmpty,
       s"not resolved to their expression in a fresh session: ${wrong.mkString(", ")}")
     val n = fresh.sql(
-      s"SELECT size(${ShingleHashes.FunctionName}(array('a', 'b', 'c', 'd')))")
+      s"SELECT size(${ShingleHashes.name}(array('a', 'b', 'c', 'd')))")
       .head().getInt(0)
     assert(n === 2)
   }
@@ -61,15 +49,22 @@ class GraftSessionSpec extends AnyFunSuite {
     }
     assert(tempFns.isEmpty,
       s"inject native functions through GraftExtensions, not per session: ${tempFns.mkString(", ")}")
-    val declared = main.flatMap { case (_, src) =>
-      "val FunctionName\\s*=\\s*\"([^\"]+)\"".r.findAllMatchIn(src).map(_.group(1))
+  }
+
+  test("no scalar function in graft/functions is a hand-written expression") {
+    // a scalar function is a Kernels row, planned as KernelCall; the only
+    // other expression is the NGrams generator
+    val decl = ("(?:class|object|trait)\\s+(\\w+)[^{]*?\\b(?:extends|with)\\s+" +
+      "[\\w.]*(?:Expression|Generator|Replaceable|Aggregate|CodegenFallback)\\b").r
+    val functions = sources("src/main/scala/graft/functions")
+    val declared = functions.flatMap { case (_, src) =>
+      decl.findAllMatchIn(src).map(_.group(1))
     }
-    val injected = GraftExtensions.Functions.map(_._1).toSet
-    // the pattern must still match the declarations it guards
-    assert(declared.contains(ShingleHashes.FunctionName))
-    val missing = declared.filterNot(injected)
-    assert(missing.isEmpty,
-      s"declared but missing from GraftExtensions.Functions: ${missing.mkString(", ")}")
+    assert(declared.sorted === Seq("KernelCall", "NGrams"),
+      "add a scalar function as a row of graft.functions.Kernels")
+    val codegen = functions.collect { case (p, src) if src.contains("doGenCode") => p }
+    assert(codegen.isEmpty,
+      s"a kernel is one Scala method, planned through StaticInvoke: ${codegen.mkString(", ")}")
   }
 
   test("lineage cuts go through Materialize") {

@@ -14,6 +14,8 @@ import org.apache.hadoop.fs.local.LocalFs
 import org.apache.hadoop.fs.permission.FsPermission
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SpecFiles.tempPath
+
 /** [[NioRawLocalFileSystem]] against Hadoop's `RawLocalFileSystem`, whose
   * `chmod`/`readlink` child processes it replaces: every outcome must be
   * the one Hadoop's shell commands produce.
@@ -36,7 +38,7 @@ class NioLocalFsSpec extends AnyFunSuite {
 
   test("setPermission leaves the same mode as Hadoop's chmod for every " +
       "non-sticky mode, on files and directories") {
-    val dir = Files.createTempDirectory("niofs_chmod_")
+    val dir = tempPath("niofs_chmod_")
     val pairs = Seq(
       Files.createFile(dir.resolve("a")) -> Files.createFile(dir.resolve("b")),
       Files.createDirectory(dir.resolve("da")) ->
@@ -52,7 +54,7 @@ class NioLocalFsSpec extends AnyFunSuite {
   }
 
   test("sticky modes and setgid directories keep Hadoop's chmod result") {
-    val dir = Files.createTempDirectory("niofs_special_")
+    val dir = tempPath("niofs_special_")
     val (a, b) = (Files.createDirectory(dir.resolve("a")),
       Files.createDirectory(dir.resolve("b")))
     val sticky = new FsPermission(Integer.parseInt("1755", 8).toShort)
@@ -74,7 +76,7 @@ class NioLocalFsSpec extends AnyFunSuite {
 
   test("getFileLinkStatus equals Hadoop's for a file, a directory and a " +
       "missing path") {
-    val dir = Files.createTempDirectory("niofs_status_")
+    val dir = tempPath("niofs_status_")
     val file = Files.write(dir.resolve("f"), "abc".getBytes)
     for (p <- Seq(file, dir); path <- Seq(new Path(p.toString),
         new Path(p.toUri.toString))) {
@@ -88,7 +90,7 @@ class NioLocalFsSpec extends AnyFunSuite {
   }
 
   test("a symlink goes through Hadoop and keeps its qualified target") {
-    val dir = Files.createTempDirectory("niofs_link_")
+    val dir = tempPath("niofs_link_")
     val target = Files.write(dir.resolve("target"), "abc".getBytes)
     val link = Files.createSymbolicLink(dir.resolve("link"), target)
     val dangling = Files.createSymbolicLink(dir.resolve("dangling"),
@@ -112,7 +114,7 @@ class NioLocalFsSpec extends AnyFunSuite {
       assert(AbstractFileSystem.get(URI.create("file:///"), conf).getClass ===
         impl)
       val fc = FileContext.getFileContext(URI.create("file:///"), conf)
-      val dir = Files.createTempDirectory("niofs_fc_")
+      val dir = tempPath("niofs_fc_")
       val sub = new Path(dir.resolve("sub").toUri)
       fc.mkdir(sub, FsPermission.getDirDefault, true)
       def write(name: String): Path = {

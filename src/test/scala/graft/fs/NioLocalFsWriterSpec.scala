@@ -1,7 +1,7 @@
 package graft.fs
 
 import java.net.URI
-import java.nio.file.{Files, Path => JPath, Paths}
+import java.nio.file.{Files, Path => JPath}
 import java.security.MessageDigest
 
 import scala.jdk.CollectionConverters._
@@ -11,6 +11,7 @@ import org.apache.spark.sql.{AnalysisException, DataFrame, DataFrameWriter,
   Row}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SpecFiles.tempPath
 import graft.TestSpark
 
 /** [[NioLocalFs.writer]] against a plain `df.write`, whose `chmod` child
@@ -70,7 +71,7 @@ class NioLocalFsWriterSpec extends AnyFunSuite {
     * rows read back, for one format and scenario written through `bind`. */
   private def outcome(bind: DataFrame => DataFrameWriter[Row], f: Format,
                       s: Scenario) = {
-    val dir = Files.createTempDirectory("niowrite_").resolve("t")
+    val dir = tempPath("niowrite_").resolve("t")
     def write(df: DataFrame, conf: Conf): Unit =
       conf(bind(df).format(f.name).options(f.options)).save(dir.toString)
     write(rows(0, "A", "B"), s.first)
@@ -105,7 +106,7 @@ class NioLocalFsWriterSpec extends AnyFunSuite {
   }
 
   test("the helper binds no file system beyond its own write") {
-    val dir = Files.createTempDirectory("niowrite_scope_").resolve("t")
+    val dir = tempPath("niowrite_scope_").resolve("t")
     NioLocalFs.writer(rows(0, "A")).parquet(dir.toString)
     val conf = spark.sparkContext.hadoopConfiguration
     assert(conf.get("fs.file.impl") === null)
@@ -139,13 +140,9 @@ class NioLocalFsWriterSpec extends AnyFunSuite {
     // `ds.write`, not `out.write(bytes)` or `writeStream`
     val access = "\\.write\\b(?!\\s*\\()".r
     val sink = "\\.(json|parquet|csv|orc|text|save|saveAsTable|insertInto)\\s*\\(".r
-    val walk = Files.walk(Paths.get("src/main/scala"))
-    val files =
-      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
     val sites = for {
-      p <- files if p.getFileName.toString != "NioLocalFs.scala"
-      src = Files.readString(p)
+      (p, src) <- graft.SpecFiles.sources("src/main/scala")
+      if p.getFileName.toString != "NioLocalFs.scala"
       m <- access.findAllMatchIn(src)
     } yield {
       val rest = src.substring(m.end)

@@ -17,7 +17,7 @@ class DoubleVectorDotSpec extends AnyFunSuite {
       .toDF("a", "b")
     val out = df.select(
       VectorOps.dot(col("a"), col("b")).as("hof"),
-      DoubleVectorDot.dot(col("a"), col("b")).as("native")).collect()
+      Kernels.DoubleVectorDot(col("a"), col("b")).as("native")).collect()
     out.foreach { r =>
       assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ===
         java.lang.Double.doubleToLongBits(r.getDouble(1)))
@@ -29,11 +29,11 @@ class DoubleVectorDotSpec extends AnyFunSuite {
     import spark.implicits._
     val nulls = Seq((Some(Array(1.0)), Option.empty[Array[Double]]))
       .toDF("a", "b")
-    assert(nulls.select(DoubleVectorDot.dot(col("a"), col("b")))
+    assert(nulls.select(Kernels.DoubleVectorDot(col("a"), col("b")))
       .collect().head.isNullAt(0))
     val ragged = Seq((Array(2.0, 3.0, 9.0), Array(4.0, 5.0)))
       .toDF("a", "b")
-    assert(ragged.select(DoubleVectorDot.dot(col("a"), col("b")))
+    assert(ragged.select(Kernels.DoubleVectorDot(col("a"), col("b")))
       .collect().head.getDouble(0) === 23.0)
   }
 
@@ -46,7 +46,7 @@ class DoubleVectorDotSpec extends AnyFunSuite {
         zip_with(col("embedding"), col("embedding"),
           (x, y) => x.cast("double") - y.cast("double") * 0.5).as("res"))
       .select(col("vec_id"),
-        DoubleVectorDot.dot(col("res"), col("res")).as("d2"))
+        Kernels.DoubleVectorDot(col("res"), col("res")).as("d2"))
     val codegenStages = emb.queryExecution.executedPlan.collect {
       case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
     }

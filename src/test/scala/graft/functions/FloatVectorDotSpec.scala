@@ -17,7 +17,7 @@ class FloatVectorDotSpec extends AnyFunSuite {
       .toDF("a", "b")
     val out = df.select(
       VectorOps.dot(col("a"), col("b")).as("hof"),
-      FloatVectorDot.dot(col("a"), col("b")).as("native")).collect()
+      Kernels.FloatVectorDot(col("a"), col("b")).as("native")).collect()
     out.foreach { r =>
       assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ===
         java.lang.Double.doubleToLongBits(r.getDouble(1)))
@@ -29,7 +29,7 @@ class FloatVectorDotSpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq((Some(Array(1.0f)), Option.empty[Array[Float]]))
       .toDF("a", "b")
-    val r = df.select(FloatVectorDot.dot(col("a"), col("b"))).collect().head
+    val r = df.select(Kernels.FloatVectorDot(col("a"), col("b"))).collect().head
     assert(r.isNullAt(0))
   }
 
@@ -39,7 +39,7 @@ class FloatVectorDotSpec extends AnyFunSuite {
     val emb = spark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"),
-        FloatVectorDot.dot(col("embedding"), col("embedding")).as("d2"))
+        Kernels.FloatVectorDot(col("embedding"), col("embedding")).as("d2"))
     val codegenStages = emb.queryExecution.executedPlan.collect {
       case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
     }

@@ -36,7 +36,7 @@ class MaxSimSpec extends AnyFunSuite {
         .toDF("qid", "qv")
       val native = d.crossJoin(broadcast(q))
         .select(col("qid"), col("vec_id"),
-          MaxSimMilli.of(col("qv"), col("xv")).as("m"))
+          Kernels.MaxSimMilli(col("qv"), col("xv")).as("m"))
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
         .toMap
       // the exploded q305 formulation this replaced
@@ -61,7 +61,7 @@ class MaxSimSpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq((Seq.fill(64)(1L), Seq.fill(56)(1L)))
       .toDF("a", "b")
-      .select(MaxSimMilli.of(col("a"), col("b")))
+      .select(Kernels.MaxSimMilli(col("a"), col("b")))
     val e = intercept[Exception](df.collect())
     assert(e.getMessage != null)
   }

@@ -17,7 +17,7 @@ class NfcNormalizeSpec extends AnyFunSuite {
     val composedA = "\u00c5"
     val got = Seq(decomposedE, composedE, decomposedA, "plain ascii", "")
       .toDF("s")
-      .select(NfcNormalize.of(col("s")).as("n"))
+      .select(Kernels.NfcNormalize(col("s")).as("n"))
       .collect().map(_.getString(0)).toSeq
     assert(got === Seq(composedE, composedE, composedA, "plain ascii", ""))
   }
@@ -25,11 +25,11 @@ class NfcNormalizeSpec extends AnyFunSuite {
   test("null passes through; non-string input is rejected at analysis") {
     import spark.implicits._
     val nulls = Seq[Option[String]](None, Some("x"))
-      .toDF("s").select(NfcNormalize.of(col("s")).as("n"))
+      .toDF("s").select(Kernels.NfcNormalize(col("s")).as("n"))
       .collect().map(r => Option(r.getString(0))).toSeq
     assert(nulls === Seq(None, Some("x")))
     assertThrows[AnalysisException] {
-      Seq(1L).toDF("i").select(NfcNormalize.of(col("i"))).collect()
+      Seq(1L).toDF("i").select(Kernels.NfcNormalize(col("i"))).collect()
     }
   }
 
@@ -40,7 +40,7 @@ class NfcNormalizeSpec extends AnyFunSuite {
     val messy = "  Cafe\u0301 du\tmonde   " // decomposed e-acute
     val got = Seq(messy).toDF("text")
       .select(trim(regexp_replace(
-        regexp_replace(NfcNormalize.of(lower(col("text"))),
+        regexp_replace(Kernels.NfcNormalize(lower(col("text"))),
           "[\\x00-\\x1f]", " "),
         "\\s+", " ")).as("ct"))
       .collect().head.getString(0)

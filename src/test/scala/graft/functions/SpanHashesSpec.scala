@@ -34,7 +34,7 @@ class SpanHashesSpec extends AnyFunSuite {
       val df = texts.zipWithIndex.toDF("text", "id")
         .select(col("id"), TextOps.tokens(col("text")).as("ws"))
         .filter(size(col("ws")) >= 5)
-        .withColumn("native", WindowHashes.of(col("ws"), lit(5), lit(1)))
+        .withColumn("native", Kernels.WindowHashes(col("ws"), lit(5), lit(1)))
         .withColumn("interp", expr(
           """transform(sequence(0, size(ws) - 5), i ->
             | CAST(conv(substring(md5(concat_ws(' ', ws[i], ws[i+1],
@@ -53,7 +53,7 @@ class SpanHashesSpec extends AnyFunSuite {
       val df = texts.zipWithIndex.toDF("text", "id")
         .select(col("id"), TextOps.tokens(col("text")).as("ws"))
         .filter(size(col("ws")) >= 10)
-        .withColumn("native", WindowHashes.of(col("ws"), lit(10), lit(10)))
+        .withColumn("native", Kernels.WindowHashes(col("ws"), lit(10), lit(10)))
         .withColumn("interp", expr(
           """transform(sequence(0, size(ws) DIV 10 - 1),
             | j -> CAST(conv(substring(md5(
@@ -80,7 +80,7 @@ class SpanHashesSpec extends AnyFunSuite {
         .select(col("id"), lower(trim(col("text"))).as("lt"))
         .filter(length(col("lt")) >= k + w - 1)
         .withColumn("native",
-          WinnowFingerprints.of(col("lt"), lit(k), lit(w)))
+          Kernels.WinnowFingerprints(col("lt"), lit(k), lit(w)))
         .withColumn("hs", expr(
           s"""transform(sequence(1, length(lt) - ${k - 1}),
              | i -> CAST(conv(substring(md5(substring(lt, i, $k)),
@@ -102,9 +102,9 @@ class SpanHashesSpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq("", "a", "aa bb", "abcdefg").toDF("text")
       .select(
-        WindowHashes.of(TextOps.tokens(col("text")), lit(5), lit(1))
+        Kernels.WindowHashes(TextOps.tokens(col("text")), lit(5), lit(1))
           .as("wh"),
-        WinnowFingerprints.of(col("text"), lit(5), lit(4)).as("fp"))
+        Kernels.WinnowFingerprints(col("text"), lit(5), lit(4)).as("fp"))
     df.collect().foreach { r =>
       assert(r.getSeq[Long](0).isEmpty)
       assert(r.getSeq[Long](1).isEmpty)

@@ -21,7 +21,7 @@ class TextOpsSpec extends AnyFunSuite {
     import spark.implicits._
     val df = texts.toDF("text")
     val rows = df.select(
-      ShingleHashes.of(TextOps.tokens(col("text"))).as("native"),
+      Kernels.ShingleHashes(TextOps.tokens(col("text"))).as("native"),
       transform(TextOps.shingles3(TextOps.tokens(col("text"))),
         s => TextOps.hash32(s)).as("declarative")).collect()
     rows.foreach { r =>
@@ -38,9 +38,9 @@ class TextOpsSpec extends AnyFunSuite {
   test("MinhashBandKeys equals affine minhash over the hash array") {
     import spark.implicits._
     val df = texts.filter(_.split(" ").length >= 3).toDF("text")
-      .select(ShingleHashes.of(TextOps.tokens(col("text"))).as("hs"))
+      .select(Kernels.ShingleHashes(TextOps.tokens(col("text"))).as("hs"))
     val rows = df.select(
-      MinhashBandKeys.of(col("hs")).as("native"),
+      Kernels.MinhashBandKeys(col("hs")).as("native"),
       array((0 until 4).map { b =>
         concat(TextOps.minhash(col("hs"), 2 * b).cast("string"), lit(","),
                TextOps.minhash(col("hs"), 2 * b + 1).cast("string"))
@@ -53,9 +53,9 @@ class TextOpsSpec extends AnyFunSuite {
   test("SimhashSig equals the 32-column conditional-sum formulation") {
     import spark.implicits._
     val hs = texts.filter(_.split(" ").length >= 3).toDF("text")
-      .select(ShingleHashes.of(TextOps.tokens(col("text"))).as("hs"))
+      .select(Kernels.ShingleHashes(TextOps.tokens(col("text"))).as("hs"))
     val rows = hs.select(
-      SimhashSig.of(col("hs")).as("native"),
+      Kernels.SimhashSig(col("hs")).as("native"),
       // per-doc replay of the relational per-bit conditional sum
       expr("""aggregate(sequence(0, 31), CAST(0 AS BIGINT), (acc, i) ->
              |  acc + IF(aggregate(hs, CAST(0 AS BIGINT),

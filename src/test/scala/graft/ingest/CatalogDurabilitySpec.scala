@@ -1,10 +1,10 @@
 package graft.ingest
 
-import java.nio.file.Files
-
 import scala.sys.process._
 
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SpecFiles.tempPath
 
 /** True catalog durability: ingest in one JVM, read `spark.table` from a
   * SECOND JVM attached to the same warehouse + Derby metastore, with no
@@ -38,7 +38,7 @@ class CatalogDurabilitySpec extends AnyFunSuite {
   }
 
   test("ingested tables survive a full JVM restart via the Hive metastore") {
-    val base = Files.createTempDirectory("ncd_durable_")
+    val base = tempPath("ncd_durable_")
     val warehouse = base.resolve("warehouse").toString
     val metastore = base.resolve("metastore").toString
     val zip = Fixtures.writeZip(base).toString

@@ -7,6 +7,8 @@ import java.nio.file.Files
 import com.sun.net.httpserver.HttpServer
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SpecFiles.tempPath
+
 /** A2 under a REAL HTTP exchange: a loopback HttpServer serves a fixture
   * zip; `Listing.download` streams it to a temp file; `NcdIngest` loads
   * the downloaded archive end-to-end. Closes the "network path untested"
@@ -33,7 +35,7 @@ class DownloadSpec extends AnyFunSuite {
         assert(Files.readAllBytes(dest) === zipBytes)
 
         val spark = graft.TestSpark.spark
-        val wh = Files.createTempDirectory("dl_wh_").toString
+        val wh = tempPath("dl_wh_").toString
         val ingest = new NcdIngest(spark, wh, db = "dl")
         val loaded = ingest.loadZip(dest.toString)
         assert(loaded.contains("GS_CASE"))

@@ -6,6 +6,7 @@ import java.sql.Date
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SpecFiles.tempPath
 import graft.TestSpark
 
 class FixedWidthSpec extends AnyFunSuite {
@@ -90,7 +91,7 @@ class FixedWidthSpec extends AnyFunSuite {
   /** (code, qty, region) per line of a member file holding `bytes`. */
   private def readBack(bytes: Array[Byte],
                        encoding: String = "ISO-8859-1") = {
-    val dir = Files.createTempDirectory("fw_read_")
+    val dir = tempPath("fw_read_")
     Files.write(dir.resolve("t.txt"), bytes)
     FixedWidth.read(spark, dir.toString, fileSpec, encoding)
       .select("code", "qty", "region").as[(String, Option[Long], String)]

@@ -2,7 +2,6 @@ package graft.ingest
 
 import java.io.{File, FileOutputStream}
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.zip.{ZipEntry, ZipFile, ZipOutputStream}
 
@@ -17,6 +16,7 @@ import org.scalatest.concurrent.Eventually
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.{Seconds, Span}
 
+import graft.SpecFiles.tempPath
 import graft.TestSpark
 
 /** End-to-end: fixture zip → distributed convert → partitioned gzip JSON →
@@ -27,7 +27,7 @@ class NcdIngestSpec extends AnyFunSuite with Eventually {
   private lazy val spark = TestSpark.spark
 
   private lazy val warehouse =
-    Files.createTempDirectory("ncd_out_").toString
+    tempPath("ncd_out_").toString
   private lazy val ingest = {
     val ing = new NcdIngest(spark, warehouse, db = "ncd")
     ing.loadZip(Fixtures.tempZip().toString)
@@ -147,7 +147,7 @@ class NcdIngestSpec extends AnyFunSuite with Eventually {
   }
 
   test("parquet mirror registers a splittable columnar twin") {
-    val wh = Files.createTempDirectory("ncd_mirror_").toString
+    val wh = tempPath("ncd_mirror_").toString
     val ing = new NcdIngest(spark, wh, db = "ncdm", parquetMirror = true)
     ing.loadZip(Fixtures.tempZip().toString)
     import spark.implicits._
@@ -167,7 +167,7 @@ class NcdIngestSpec extends AnyFunSuite with Eventually {
     // same code path a real bucket takes: the warehouse is an arbitrary
     // Hadoop FS URI string (here file://, on a cluster s3a://) — writes,
     // DDL LOCATION, and MSCK all go through the Hadoop FileSystem API
-    val dir = Files.createTempDirectory("ncd_uri_")
+    val dir = tempPath("ncd_uri_")
     val wh = s"file://$dir"
     val ing = new NcdIngest(spark, wh, db = "ncduri")
     ing.loadZip(Fixtures.tempZip().toString)
@@ -189,7 +189,7 @@ class NcdIngestSpec extends AnyFunSuite with Eventually {
     // FLM must be exactly zip B's revision, NY must appear, and
     // GS_COURT_HIST must be untouched.
     import spark.implicits._
-    val wh = Files.createTempDirectory("ncd_multi_").toString
+    val wh = tempPath("ncd_multi_").toString
     val ing = new NcdIngest(spark, wh, db = "ncdmulti")
     ing.loadZip(Fixtures.tempZip().toString)
     ing.loadZip(Fixtures.tempZipB().toString)
@@ -223,7 +223,7 @@ class NcdIngestSpec extends AnyFunSuite with Eventually {
     * fixed-width text).
     */
   private lazy val (mirrored, mirroredWh, mirroredWrites) = {
-    val wh = Files.createTempDirectory("ncd_on_").toString
+    val wh = tempPath("ncd_on_").toString
     val writes = new ConcurrentLinkedQueue[(String, Boolean)]()
     val listener = new QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution,
@@ -400,7 +400,7 @@ class NcdIngestSpec extends AnyFunSuite with Eventually {
   test("second zip with the mirror on: JSON and mirror agree per district, " +
       "and only the zip's own districts are rewritten") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("ncd_multi_mirror_").toString
+    val wh = tempPath("ncd_multi_mirror_").toString
     val ing = new NcdIngest(spark, wh, db = "ncdmm", parquetMirror = true)
     ing.loadZip(Fixtures.tempZip().toString)
     def partFiles(dir: String): Seq[String] =
@@ -431,7 +431,7 @@ class NcdIngestSpec extends AnyFunSuite with Eventually {
   test("a partitioned table's parsing write is one text scan and no union, " +
       "whatever its district count") {
     // three district members of GS_CASE and the unpartitioned court history
-    val zipPath = Files.createTempDirectory("ncd_three_").resolve("three.zip")
+    val zipPath = tempPath("ncd_three_").resolve("three.zip")
     val out = new ZipOutputStream(new FileOutputStream(zipPath.toFile))
     try Seq("README.TXT" -> Fixtures.readme,
       "gs_case_CT.txt" -> Fixtures.gsCaseCt,
@@ -463,7 +463,7 @@ class NcdIngestSpec extends AnyFunSuite with Eventually {
       def onFailure(funcName: String, qe: QueryExecution,
                     exception: Exception): Unit = ()
     }
-    val wh = Files.createTempDirectory("ncd_three_wh_").toString
+    val wh = tempPath("ncd_three_wh_").toString
     spark.listenerManager.register(listener)
     try {
       new NcdIngest(spark, wh, db = "ncdthree").loadZip(zipPath.toString)
@@ -484,7 +484,7 @@ class NcdIngestSpec extends AnyFunSuite with Eventually {
   /** The fixture zip with `member` added, or replaced if present. */
   private def fixtureZipWith(member: String,
                              content: Array[Byte]): java.nio.file.Path = {
-    val zipPath = Files.createTempDirectory("ncd_variant_").resolve("v.zip")
+    val zipPath = tempPath("ncd_variant_").resolve("v.zip")
     val fixture = new ZipFile(Fixtures.tempZip().toFile)
     val out = new ZipOutputStream(new FileOutputStream(zipPath.toFile))
     try {
@@ -512,7 +512,7 @@ class NcdIngestSpec extends AnyFunSuite with Eventually {
       tmp.listFiles().map(_.getName).filter(_.startsWith("ncd_zip_")).toSet
     val scratchBefore = scratchDirs()
 
-    val wh = Files.createTempDirectory("ncd_bad_wh_").toString
+    val wh = tempPath("ncd_bad_wh_").toString
     val ing = new NcdIngest(spark, wh, db = "ncdbad")
     val e = intercept[IllegalArgumentException](ing.loadZip(zipPath.toString))
     assert(e.getMessage === "no GS_* table name found")
@@ -527,7 +527,7 @@ class NcdIngestSpec extends AnyFunSuite with Eventually {
       val zip = fixtureZipWith("global_LIONS.txt",
         Fixtures.globalLions.replace("\n", eol).getBytes(StandardCharsets.UTF_8))
       val ing = new NcdIngest(spark,
-        Files.createTempDirectory(s"${db}_wh_").toString, db = db)
+        tempPath(s"${db}_wh_").toString, db = db)
       ing.loadZip(zip.toString)
       assert(ing.loaded.toSeq === ingest.loaded.toSeq)
       for (table <- Seq("GS_DISTRICT", "GS_OFFENSE"))

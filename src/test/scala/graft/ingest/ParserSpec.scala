@@ -7,6 +7,8 @@ import scala.util.matching.Regex
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SpecFiles.tempPath
+
 class SchemaParserSpec extends AnyFunSuite {
 
   test("parses README fragments into per-table field specs") {
@@ -302,12 +304,12 @@ class ListingSpec extends AnyFunSuite {
     val html = """<a href="a.zip">a</a> <a href="b.zip">b</a>"""
     val fetched = scala.collection.mutable.Buffer.empty[String]
     val ingest = new NcdIngest(graft.TestSpark.spark,
-      Files.createTempDirectory("pipe_wh_").toString, db = "pipe")
+      tempPath("pipe_wh_").toString, db = "pipe")
     val loaded = Listing.loadAllPipelined(ingest, "https://x.example/ls",
       fetchPage = _ => html,
       fetchZip = { url =>
         fetched.synchronized { fetched += url }
-        val dir = Files.createTempDirectory("pipe_zip_")
+        val dir = tempPath("pipe_zip_")
         Fixtures.writeZip(dir)
       })
     // both zips load all 5 fixture tables, in order, twice

@@ -1,12 +1,11 @@
 package graft.ingest
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SpecFiles.tempPath
 import graft.TestSpark
 import graft.operators.ZOrder
 
@@ -45,8 +44,8 @@ class ZOrderMirrorSpec extends AnyFunSuite {
       (i.toLong, rnd.nextInt(200), rnd.nextInt(200), s"payload$i")
     }.toDF("id", "a", "b", "v")
 
-    val zDir = Files.createTempDirectory("zmirror_").toString
-    val plainDir = Files.createTempDirectory("plainmirror_").toString
+    val zDir = tempPath("zmirror_").toString
+    val plainDir = tempPath("plainmirror_").toString
     Sink.writeParquetMirror(zLayout(df, numFiles), zDir, partitioned = false)
     Sink.writeParquetMirror(
       df.repartition(numFiles), plainDir, partitioned = false)
@@ -89,7 +88,7 @@ class ZOrderMirrorSpec extends AnyFunSuite {
   test("z-ordered mirror round-trips rows identically (full table)") {
     import spark.implicits._
     val df = (0 until 5000).map(i => (i.toLong, i % 97, i % 89)).toDF("id", "a", "b")
-    val dir = Files.createTempDirectory("zmirror_rt_").toString
+    val dir = tempPath("zmirror_rt_").toString
     Sink.writeParquetMirror(zLayout(df, 8), dir, partitioned = false)
     val back = spark.read.parquet(dir)
     assert(back.count() === 5000)

@@ -6,10 +6,12 @@ import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SpecFiles.tempPath
+
 class ZipSourceSpec extends AnyFunSuite {
 
   test("zip-slip entry names are rejected, benign names still extract") {
-    val dir = Files.createTempDirectory("zipslip_")
+    val dir = tempPath("zipslip_")
     val zipPath = dir.resolve("evil.zip")
     val out = new ZipOutputStream(new FileOutputStream(zipPath.toFile))
     def add(name: String, content: String): Unit = {
@@ -22,7 +24,7 @@ class ZipSourceSpec extends AnyFunSuite {
     add("sub/ok.txt", "fine")         // benign nested member
     out.close()
 
-    val scratch = Files.createTempDirectory(dir, "scratch_")
+    val scratch = Files.createDirectory(dir.resolve("scratch"))
     val zs = new ZipSource(zipPath.toString)
     try {
       // entry names come off an untrusted downloaded archive: anything

@@ -66,7 +66,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
       "shingle emits zero candidate pairs instead of df²") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    import graft.functions.ShingleHashes
+    import graft.functions.Kernels.ShingleHashes
     import graft.functions.TextOps.tokens
 
     // the pipeline must be safe-by-default: an explicit opt-IN to the
@@ -83,7 +83,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
         (i.toLong, s"u${i}x u${i}y boiler plate text common to all docs here"))
       .toDF("doc_id", "text")
     val sh = docs.select(col("doc_id"),
-      explode(ShingleHashes.of(tokens(col("text")))).as("sh"))
+      explode(ShingleHashes(tokens(col("text")))).as("sh"))
 
     // the fixture really is hot: max df exceeds the default threshold
     val maxDf = sh.groupBy("sh").agg(count(lit(1)).as("d"))

@@ -1,8 +1,8 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
-
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SpecFiles.sources
 
 /** The staged-mirror no-reuse contract (round-12 verdict #2): every
   * mirror artifact must live in a `Files.createTempDirectory` path
@@ -47,35 +47,40 @@ class MirrorContractSpec extends AnyFunSuite {
     }
     // no temp dir may bypass the registry (unregistered dirs escape the
     // exit-time cleanup)
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-    val files =
-      try walk.iterator.asScala.map(_.toString).filter(_.endsWith(".scala"))
-        .toList
-      finally walk.close()
-    val scanned = files.filter(f =>
+    val scanned = sources("src/main/scala").filter { case (p, _) =>
       Seq("queries", "streaming", "tools")
-        .exists(d => f.startsWith(s"src/main/scala/graft/$d/")))
+        .exists(d => p.toString.startsWith(s"src/main/scala/graft/$d/"))
+    }
     assert(scanned.size > 3)
-    scanned.foreach { file =>
-      assert(!read(file).contains("createTempDirectory"),
+    scanned.foreach { case (file, src) =>
+      assert(!src.contains("createTempDirectory"),
         s"$file allocates a temp dir outside StagedArtifacts")
+    }
+  }
+
+  test("specs allocate temp dirs through StagedArtifacts.tempDir") {
+    // a registered dir is deleted when the test JVM exits; a bare one
+    // stays behind in the temp dir after every run
+    val bare = "createTemp(?:Directory|File)\\s*\\(".r
+    val specs = sources("src/test/scala")
+    assert(specs.exists(_._1.getFileName.toString == "SpecFiles.scala"))
+    specs.foreach { case (file, src) =>
+      assert(bare.findFirstIn(src).isEmpty,
+        s"$file allocates a temp dir outside StagedArtifacts.tempDir " +
+          "(use graft.SpecFiles.tempPath)")
     }
   }
 
   test("mirror sources read no environment (no reuse side-channel)") {
     val dirs = Seq("src/main/scala/graft/queries",
       "src/main/scala/graft/operators")
-    dirs.foreach { d =>
-      new java.io.File(d).listFiles().filter(_.getName.endsWith(".scala"))
-        .foreach { f =>
-          val src = read(f.getPath)
-          Seq("sys.env", "getenv").foreach { needle =>
-            assert(!src.contains(needle),
-              s"${f.getPath} reads '$needle' — query/operator code must " +
-                "take no environment input (mirror paths would become " +
-                "cross-JVM reusable)")
-          }
-        }
+    dirs.flatMap(sources).foreach { case (file, src) =>
+      Seq("sys.env", "getenv").foreach { needle =>
+        assert(!src.contains(needle),
+          s"$file reads '$needle' — query/operator code must " +
+            "take no environment input (mirror paths would become " +
+            "cross-JVM reusable)")
+      }
     }
   }
 

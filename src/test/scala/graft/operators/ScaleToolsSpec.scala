@@ -76,7 +76,7 @@ class SkewToolsSpec extends AnyFunSuite {
       (i.toLong, body)
     }.toDF("doc_id", "text")
     val sh = docs.select(col("doc_id"),
-      explode(graft.functions.ShingleHashes.of(
+      explode(graft.functions.Kernels.ShingleHashes(
         graft.functions.TextOps.tokens(col("text")))).as("sh"))
     val unsalted = graft.queries.TextQueries.jaccardPairs(sh, 0.5)
       .select("doc_a", "doc_b").collect()

@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.functions.{ZValue, ZValueUtil}
+import graft.functions.ZValueUtil
+import graft.functions.Kernels.ZValue
 
 class ZOrderSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -26,7 +27,7 @@ class ZOrderSpec extends AnyFunSuite {
     // the expression evaluates the same helper through codegen
     import spark.implicits._
     val got = cases.toDF("x", "y")
-      .select(ZValue.of(col("x"), col("y"))).collect().map(_.getLong(0))
+      .select(ZValue(col("x"), col("y"))).collect().map(_.getLong(0))
     assert(got.toSeq === cases.map((ref _).tupled))
   }
 

@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SpecFiles.tempPath
 import graft.TestSpark
 
 /** The injected guard must appear in the optimized plan, change no
@@ -17,7 +18,7 @@ class LevenshteinPrefilterSpec extends AnyFunSuite {
   // ConvertToLocalRelation before the plan-shape assertions could look
   private lazy val fixture = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("lev_fix_").toString
+    val dir = tempPath("lev_fix_").toString
     Seq(("kitten", "sitting"), ("abc", "abd"), ("a", "abcdefgh"),
       ("same", "same"), (null, "x"))
       .toDF("a", "b").write.mode("overwrite").parquet(dir)

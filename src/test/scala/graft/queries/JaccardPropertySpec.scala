@@ -5,7 +5,8 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.functions.{HashUtil, ShingleHashes, TextOps}
+import graft.functions.{HashUtil, TextOps}
+import graft.functions.Kernels.ShingleHashes
 import graft.operators.Materialize
 
 /** Property test for the core dedup primitive: the relational
@@ -40,7 +41,7 @@ class JaccardPropertySpec extends AnyFunSuite {
       val docs = texts.zipWithIndex
         .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
       val sh = Materialize(docs.select(col("doc_id"),
-        explode(ShingleHashes.of(TextOps.tokens(col("text")))).as("sh")))
+        explode(ShingleHashes(TextOps.tokens(col("text")))).as("sh")))
       val got = TextQueries.jaccardPairs(sh, 0.5)
         .select("doc_a", "doc_b", "jaccard")
         .collect()

@@ -89,12 +89,12 @@ class PackingDecontamSpec extends AnyFunSuite {
 
   test("decontamination rule agrees across plans at a SECOND flag " +
       "threshold — the machinery is not tuned to one constant") {
-    import graft.functions.ShingleHashes
+    import graft.functions.Kernels.ShingleHashes
     import graft.functions.TextOps.tokens
     import org.apache.spark.sql.functions._
     val docs = Tables.table(spark, sf, "documents")
     def shingled(d: org.apache.spark.sql.DataFrame) =
-      d.select(col("doc_id"), ShingleHashes.of(tokens(col("text"))).as("hs"))
+      d.select(col("doc_id"), ShingleHashes(tokens(col("text"))).as("hs"))
     val evalIdx = shingled(docs.filter(col("doc_id") < 50))
       .filter(size(col("hs")) > 0)
       .select(col("doc_id").as("eval_id"), col("hs").as("eval_hs"),

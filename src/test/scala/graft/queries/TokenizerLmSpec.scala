@@ -5,6 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SpecFiles.tempPath
 import graft.{SparkEntry, TestSpark}
 import graft.Tables.tableParallel
 import graft.functions.TextOps.tokens
@@ -98,8 +99,7 @@ class TokenizerLmSpec extends AnyFunSuite {
       "hex" -> 40, "hey" -> 40, "hem" -> 40)
     val text = weights.flatMap { case (w, n) => Seq.fill(n)(w) }
       .mkString(" ")
-    val dir = java.nio.file.Files
-      .createTempDirectory("bpe_adversarial_").toString
+    val dir = tempPath("bpe_adversarial_").toString
     import spark.implicits._
     Seq((0L, text, "en", "src0", text.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

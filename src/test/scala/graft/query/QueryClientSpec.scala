@@ -1,6 +1,5 @@
 package graft.query
 
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.io.Source
@@ -16,6 +15,7 @@ import org.scalatest.concurrent.Eventually
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.{Seconds, Span}
 
+import graft.SpecFiles.tempPath
 import graft.TestSpark
 import graft.plans.SortInOnePartition
 
@@ -59,7 +59,7 @@ class QueryClientSpec extends AnyFunSuite with Eventually
     Seq((1, "a"), (2, "b"), (3, "a")).toDF("k", "v")
       .createOrReplaceTempView("qc_demo")
     val client = new QueryClient(spark,
-      Files.createTempDirectory("qc_results_").toString)
+      tempPath("qc_results_").toString)
     val location = client.executeQuery(
       "SELECT v, count(*) AS n FROM qc_demo GROUP BY v ORDER BY v")
     val csv = new java.io.File(location).listFiles()
@@ -77,7 +77,7 @@ class QueryClientSpec extends AnyFunSuite with Eventually
       .toDF("caseid", "v", "redacted_v")
       .createOrReplaceTempView("qc_bool_demo")
     val client = new QueryClient(spark,
-      Files.createTempDirectory("qc_results_").toString)
+      tempPath("qc_results_").toString)
     val location = client.executeQuery(
       "SELECT caseid, v, redacted_v FROM qc_bool_demo ORDER BY caseid")
     val back = client.readResults(location)
@@ -87,7 +87,7 @@ class QueryClientSpec extends AnyFunSuite with Eventually
 
   test("bad SQL raises (after cancelling the job group) instead of hanging") {
     val client = new QueryClient(spark,
-      Files.createTempDirectory("qc_results_").toString)
+      tempPath("qc_results_").toString)
     intercept[Exception](client.executeQuery("SELECT * FROM no_such_table"))
   }
 
@@ -98,7 +98,7 @@ class QueryClientSpec extends AnyFunSuite with Eventually
       .toDF("id", "v", "x").repartition(8)
       .createOrReplaceTempView("qc_sorted")
     val client = new QueryClient(spark,
-      Files.createTempDirectory("qc_results_").toString)
+      tempPath("qc_results_").toString)
     val excluded = "spark.sql.optimizer.excludedRules"
     Seq(
       // aggregate under the sort

@@ -1,13 +1,12 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.concurrent.TimeLimits.failAfter
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.{Seconds, Span}
 
+import graft.SpecFiles.tempPath
 import graft.{Tables, TestSpark}
 import graft.streaming.StreamSessionize._
 
@@ -24,14 +23,14 @@ class StreamBatchParitySpec extends AnyFunSuite {
   test("file-replay decontamScreenStream == q182-style explode-join " +
       "screen (cross-plan pair equality)") {
     failAfter(Span(300, Seconds)) {
-      import graft.functions.ShingleHashes
+      import graft.functions.Kernels.ShingleHashes
       import graft.functions.TextOps.tokens
-      val dir = Files.createTempDirectory("decontam_replay_").toString
-      val ckpt = Files.createTempDirectory("decontam_ckpt_").toString
+      val dir = tempPath("decontam_replay_").toString
+      val ckpt = tempPath("decontam_ckpt_").toString
       val docs = Tables.table(spark, sf, "documents")
       def shingled(d: org.apache.spark.sql.DataFrame) =
         d.select(col("doc_id"),
-          ShingleHashes.of(tokens(col("text"))).as("hs"))
+          ShingleHashes(tokens(col("text"))).as("hs"))
       // static benchmark index: the q182 eval slice with per-doc sizes
       val evalIdx = shingled(docs.filter(col("doc_id") < 50))
         .filter(size(col("hs")) > 0)
@@ -81,8 +80,8 @@ class StreamBatchParitySpec extends AnyFunSuite {
       "fingerprint witness)") {
     failAfter(Span(300, Seconds)) {
       import graft.operators.SnapshotDiff
-      val dir = Files.createTempDirectory("cdc_replay_").toString
-      val ckpt = Files.createTempDirectory("cdc_ckpt_").toString
+      val dir = tempPath("cdc_replay_").toString
+      val ckpt = tempPath("cdc_ckpt_").toString
       // three snapshot generations of the q79 fixture shape: old -> mid
       // -> cur exercises adds, updates, AND removes across TWO sparse
       // delta generations — the compaction has real last-wins work to do
@@ -162,8 +161,8 @@ class StreamBatchParitySpec extends AnyFunSuite {
       "provider (the SCALE.md state-store swap is proven, not asserted)") {
     failAfter(Span(300, Seconds)) {
       import graft.operators.SnapshotDiff
-      val dir = Files.createTempDirectory("cdc_rocks_replay_").toString
-      val ckpt = Files.createTempDirectory("cdc_rocks_ckpt_").toString
+      val dir = tempPath("cdc_rocks_replay_").toString
+      val ckpt = tempPath("cdc_rocks_ckpt_").toString
       val base = Tables.table(spark, sf, "orders")
         .select(col("o_orderkey").as("key"),
           col("o_orderstatus").as("status"),
@@ -220,8 +219,8 @@ class StreamBatchParitySpec extends AnyFunSuite {
 
   test("file-replay dedupStream == q40 batch dedup on the same fixture") {
     failAfter(Span(300, Seconds)) {
-      val dir = Files.createTempDirectory("dedup_replay_").toString
-      val ckpt = Files.createTempDirectory("dedup_ckpt_").toString
+      val dir = tempPath("dedup_replay_").toString
+      val ckpt = tempPath("dedup_ckpt_").toString
       // fixture: documents with a synthetic event time whose span (seconds)
       // sits far inside the 1 h watermark, so stream dedup state covers the
       // whole corpus and the semantics match the batch global dedup
@@ -256,8 +255,8 @@ class StreamBatchParitySpec extends AnyFunSuite {
 
   test("file-replay mixingStatsStream + projection == q173 batch mixing") {
     failAfter(Span(300, Seconds)) {
-      val dir = Files.createTempDirectory("mixing_replay_").toString
-      val ckpt = Files.createTempDirectory("mixing_ckpt_").toString
+      val dir = tempPath("mixing_replay_").toString
+      val ckpt = tempPath("mixing_ckpt_").toString
       // fixture: the documents table itself, split into a 3-file replay —
       // per-source counters are order-insensitive, so no event time or
       // watermark is involved (state = source cardinality, complete mode)
@@ -298,8 +297,8 @@ class StreamBatchParitySpec extends AnyFunSuite {
 
   test("file-replay enrichStream == static batch join") {
     failAfter(Span(300, Seconds)) {
-      val dir = Files.createTempDirectory("enrich_replay_").toString
-      val ckpt = Files.createTempDirectory("enrich_ckpt_").toString
+      val dir = tempPath("enrich_replay_").toString
+      val ckpt = tempPath("enrich_ckpt_").toString
       val ev = Tables.table(spark, sf, "events")
         .select(col("event_id"), col("user_id"))
       ev.repartition(2).write.mode("overwrite").parquet(dir)
@@ -331,8 +330,8 @@ class StreamBatchParitySpec extends AnyFunSuite {
 
   test("file-replay funnelStream == q80 batch funnel step counts") {
     failAfter(Span(300, Seconds)) {
-      val dir = Files.createTempDirectory("funnel_replay_").toString
-      val ckpt = Files.createTempDirectory("funnel_ckpt_").toString
+      val dir = tempPath("funnel_replay_").toString
+      val ckpt = tempPath("funnel_ckpt_").toString
       Tables.table(spark, sf, "events")
         .select(col("user_id"), col("event_type"),
           unix_micros(col("ts")).as("us"))
@@ -364,8 +363,8 @@ class StreamBatchParitySpec extends AnyFunSuite {
 
   test("file-replay hoppingTotalsStream == q84 batch hopping windows") {
     failAfter(Span(300, Seconds)) {
-      val dir = Files.createTempDirectory("hop_replay_").toString
-      val ckpt = Files.createTempDirectory("hop_ckpt_").toString
+      val dir = tempPath("hop_replay_").toString
+      val ckpt = tempPath("hop_ckpt_").toString
       Tables.table(spark, sf, "events")
         .select(col("ts"), col("value"))
         .repartition(3).write.mode("overwrite").parquet(dir)
@@ -396,9 +395,9 @@ class StreamBatchParitySpec extends AnyFunSuite {
 
   test("file-replay overlapStream == q111 batch interval-overlap join") {
     failAfter(Span(300, Seconds)) {
-      val vDir = Files.createTempDirectory("ovl_views_").toString
-      val cDir = Files.createTempDirectory("ovl_clicks_").toString
-      val ckpt = Files.createTempDirectory("ovl_ckpt_").toString
+      val vDir = tempPath("ovl_views_").toString
+      val cDir = tempPath("ovl_clicks_").toString
+      val ckpt = tempPath("ovl_ckpt_").toString
       val ev = Tables.table(spark, sf, "events")
       ev.filter(col("event_type") === "view")
         .select(col("user_id"), col("event_id"), col("ts"))
@@ -436,9 +435,9 @@ class StreamBatchParitySpec extends AnyFunSuite {
 
   test("file-replay attributionStream == q67 batch attribution on the same fixture") {
     failAfter(Span(300, Seconds)) {
-      val cDir = Files.createTempDirectory("att_clicks_").toString
-      val pDir = Files.createTempDirectory("att_purch_").toString
-      val ckpt = Files.createTempDirectory("att_ckpt_").toString
+      val cDir = tempPath("att_clicks_").toString
+      val pDir = tempPath("att_purch_").toString
+      val ckpt = tempPath("att_ckpt_").toString
       val ev = Tables.table(spark, sf, "events")
       ev.filter(col("event_type") === "click")
         .select(col("user_id"), col("ts"))
@@ -486,8 +485,8 @@ class StreamBatchParitySpec extends AnyFunSuite {
 
   test("file-replay windowedQuantilesStream == batch sketch (mergeable state)") {
     failAfter(Span(300, Seconds)) {
-      val dir = Files.createTempDirectory("wq_replay_").toString
-      val ckpt = Files.createTempDirectory("wq_ckpt_").toString
+      val dir = tempPath("wq_replay_").toString
+      val ckpt = tempPath("wq_ckpt_").toString
       val ev = Tables.table(spark, sf, "events").select(col("ts"), col("value"))
       ev.repartition(3).write.mode("overwrite").parquet(dir) // 3-file replay
       val stream = spark.readStream
@@ -522,8 +521,8 @@ class StreamBatchParitySpec extends AnyFunSuite {
 
   test("file-replay latestStream == q128 batch latest-per-key compaction") {
     failAfter(Span(300, Seconds)) {
-      val dir = Files.createTempDirectory("latest_replay_").toString
-      val ckpt = Files.createTempDirectory("latest_ckpt_").toString
+      val dir = tempPath("latest_replay_").toString
+      val ckpt = tempPath("latest_ckpt_").toString
       Tables.table(spark, sf, "events")
         .select(col("user_id"), col("event_id"),
           unix_micros(col("ts")).as("us"), col("event_type"), col("value"))
@@ -564,16 +563,16 @@ class StreamBatchParitySpec extends AnyFunSuite {
 
   test("file-replay bandOwnerStream == batch LSH bucket owners + dup sets") {
     failAfter(Span(300, Seconds)) {
-      import graft.functions.{MinhashBandKeys, ShingleHashes}
+      import graft.functions.Kernels.{MinhashBandKeys, ShingleHashes}
       import graft.functions.TextOps.tokens
-      val dir = Files.createTempDirectory("lshdup_replay_").toString
-      val ckpt = Files.createTempDirectory("lshdup_ckpt_").toString
+      val dir = tempPath("lshdup_replay_").toString
+      val ckpt = tempPath("lshdup_ckpt_").toString
       // the SAME signature pipeline the batch MinHash-LSH query runs
       val bands = Tables.table(spark, sf, "documents")
         .select(col("doc_id"),
-          ShingleHashes.of(tokens(col("text"))).as("hs"))
+          ShingleHashes(tokens(col("text"))).as("hs"))
         .filter(size(col("hs")) > 0)
-        .select(col("doc_id"), posexplode(MinhashBandKeys.of(col("hs"))))
+        .select(col("doc_id"), posexplode(MinhashBandKeys(col("hs"))))
         .toDF("doc_id", "band_id", "key")
       // adversarial round-robin splits: the per-bucket fold is a
       // commutative min, so ANY arrival order must converge exactly
@@ -619,8 +618,8 @@ class StreamBatchParitySpec extends AnyFunSuite {
 
   test("file-replay decayedScoreStream == batch decay fold (exact, any order)") {
     failAfter(Span(300, Seconds)) {
-      val dir = Files.createTempDirectory("decay_replay_").toString
-      val ckpt = Files.createTempDirectory("decay_ckpt_").toString
+      val dir = tempPath("decay_replay_").toString
+      val ckpt = tempPath("decay_ckpt_").toString
       val ev = Tables.table(spark, sf, "events")
         .select(col("user_id").cast("long").as("user_id"), col("ts"),
           col("value").cast("double").as("value"))
@@ -680,8 +679,8 @@ class StreamBatchParitySpec extends AnyFunSuite {
       // written before a restart and read after it. A checkpoint that
       // loses (or double-applies) state cannot land on cur's fingerprint.
       import graft.operators.SnapshotDiff
-      val dir = Files.createTempDirectory("cdc_ckptrec_replay_").toString
-      val ckpt = Files.createTempDirectory("cdc_ckptrec_ckpt_").toString
+      val dir = tempPath("cdc_ckptrec_replay_").toString
+      val ckpt = tempPath("cdc_ckptrec_ckpt_").toString
       val base = Tables.table(spark, sf, "orders")
         .select(col("o_orderkey").as("key"),
           col("o_orderstatus").as("status"),
@@ -796,8 +795,8 @@ class StreamBatchParitySpec extends AnyFunSuite {
       // watermark the wave-0 clock event established — genuinely late, not
       // boundary-adjacent — and each wave's closing clock event advances
       // the watermark so every surviving window finalizes in append mode.
-      val dir = Files.createTempDirectory("late_replay_").toString
-      val ckpt = Files.createTempDirectory("late_ckpt_").toString
+      val dir = tempPath("late_replay_").toString
+      val ckpt = tempPath("late_ckpt_").toString
       val horizonMs = 3600000L // 1 hour
       val widthMs = 600000L    // 10 minutes
       val day = "2024-01-01 "
@@ -889,8 +888,8 @@ class StreamBatchParitySpec extends AnyFunSuite {
   test("file-replay manifestStream == q191 batch manifest (shared columns, " +
       "Σ-hash fingerprint converges on any micro-batch split)") {
     failAfter(Span(300, Seconds)) {
-      val dir = Files.createTempDirectory("manifest_replay_").toString
-      val ckpt = Files.createTempDirectory("manifest_ckpt_").toString
+      val dir = tempPath("manifest_replay_").toString
+      val ckpt = tempPath("manifest_ckpt_").toString
       val docs = Tables.table(spark, sf, "documents")
       docs.repartition(3).write.mode("overwrite").parquet(dir)
       val stream = spark.readStream
@@ -929,8 +928,8 @@ class StreamBatchParitySpec extends AnyFunSuite {
   test("file-replay qualityScreenStream == q190 batch-accepted set " +
       "(stateless ingest-time screen)") {
     failAfter(Span(300, Seconds)) {
-      val dir = Files.createTempDirectory("quality_replay_").toString
-      val ckpt = Files.createTempDirectory("quality_ckpt_").toString
+      val dir = tempPath("quality_replay_").toString
+      val ckpt = tempPath("quality_ckpt_").toString
       val docs = Tables.table(spark, sf, "documents")
       docs.repartition(3).write.mode("overwrite").parquet(dir)
       val stream = spark.readStream
@@ -961,8 +960,8 @@ class StreamBatchParitySpec extends AnyFunSuite {
   test("file-replay piiScreenStream == q61 batch per-doc projection " +
       "(stateless ingest-time PII screen)") {
     failAfter(Span(300, Seconds)) {
-      val dir = Files.createTempDirectory("pii_replay_").toString
-      val ckpt = Files.createTempDirectory("pii_ckpt_").toString
+      val dir = tempPath("pii_replay_").toString
+      val ckpt = tempPath("pii_ckpt_").toString
       val docs = Tables.table(spark, sf, "documents")
       docs.repartition(3).write.mode("overwrite").parquet(dir)
       val stream = spark.readStream
@@ -994,8 +993,8 @@ class StreamBatchParitySpec extends AnyFunSuite {
   test("file-replay dsirScreenStream == q199 batch dsirDocScores " +
       "(cross-plan: map-literal aggregate() vs explode-join-groupBy)") {
     failAfter(Span(300, Seconds)) {
-      val dir = Files.createTempDirectory("dsir_replay_").toString
-      val ckpt = Files.createTempDirectory("dsir_ckpt_").toString
+      val dir = tempPath("dsir_replay_").toString
+      val ckpt = tempPath("dsir_ckpt_").toString
       val docs = Tables.table(spark, sf, "documents")
       docs.repartition(3).write.mode("overwrite").parquet(dir)
       // the model table is built batch-side from the same corpus (the
@@ -1033,8 +1032,8 @@ class StreamBatchParitySpec extends AnyFunSuite {
       "(cross-plan: map-literal column program vs explode-join-fold)") {
     failAfter(Span(300, Seconds)) {
       import graft.queries.TextQueries
-      val dir = Files.createTempDirectory("bloom_replay_").toString
-      val ckpt = Files.createTempDirectory("bloom_ckpt_").toString
+      val dir = tempPath("bloom_replay_").toString
+      val ckpt = tempPath("bloom_ckpt_").toString
       val docs = Tables.table(spark, sf, "documents")
       docs.repartition(3).write.mode("overwrite").parquet(dir)
       // filter built batch-side from the eval slice (the deployment
@@ -1075,8 +1074,8 @@ class StreamBatchParitySpec extends AnyFunSuite {
   test("file-replay driftCountsStream + klFromCounts == batch KL drift " +
       "(state-finite 64-bucket monitor, complete mode)") {
     failAfter(Span(300, Seconds)) {
-      val dir = Files.createTempDirectory("drift_replay_").toString
-      val ckpt = Files.createTempDirectory("drift_ckpt_").toString
+      val dir = tempPath("drift_replay_").toString
+      val ckpt = tempPath("drift_ckpt_").toString
       val docs = Tables.table(spark, sf, "documents")
       docs.repartition(3).write.mode("overwrite").parquet(dir)
       val ref = graft.queries.TextQueries.driftRef(docs)
@@ -1108,8 +1107,8 @@ class StreamBatchParitySpec extends AnyFunSuite {
   test("file-replay ivmAggStream seeded from the old view == full batch " +
       "recompute, group-for-group (q221 fixture, cross-group move incl.)") {
     failAfter(Span(300, Seconds)) {
-      val dir = Files.createTempDirectory("ivm_replay_").toString
-      val ckpt = Files.createTempDirectory("ivm_ckpt_").toString
+      val dir = tempPath("ivm_replay_").toString
+      val ckpt = tempPath("ivm_ckpt_").toString
       import spark.implicits._
       // the q221 synthetic: adds (÷3 keys absent from old), removes (÷11
       // absent from cur), in-group price changes (÷5), and a cross-group
@@ -1183,8 +1182,8 @@ class StreamBatchParitySpec extends AnyFunSuite {
   test("file-replay conformalScreenStream == batch threshold " +
       "application (stateless conformal outlier screen)") {
     failAfter(Span(300, Seconds)) {
-      val dir = Files.createTempDirectory("conformal_replay_").toString
-      val ckpt = Files.createTempDirectory("conformal_ckpt_").toString
+      val dir = tempPath("conformal_replay_").toString
+      val ckpt = tempPath("conformal_ckpt_").toString
       val docs = Tables.table(spark, sf, "documents")
       docs.repartition(3).write.mode("overwrite").parquet(dir)
       val proj = docs.select(col("doc_id"), col("source"),
@@ -1226,8 +1225,8 @@ class StreamBatchParitySpec extends AnyFunSuite {
       "(per-user-partitioned replay)") {
     failAfter(Span(300, Seconds)) {
       import spark.implicits._
-      val dir = Files.createTempDirectory("trans_replay_").toString
-      val ckpt = Files.createTempDirectory("trans_ckpt_").toString
+      val dir = tempPath("trans_replay_").toString
+      val ckpt = tempPath("trans_ckpt_").toString
       val ev = Tables.table(spark, sf, "events")
         .select(col("user_id"), unix_micros(col("ts")).as("us"),
           col("event_id"), col("event_type"))
@@ -1273,8 +1272,8 @@ class StreamBatchParitySpec extends AnyFunSuite {
       "counts (bounded O(k) ingest-time state)") {
     failAfter(Span(300, Seconds)) {
       import graft.functions.TextOps.tokens
-      val dir = Files.createTempDirectory("mg_replay_").toString
-      val ckpt = Files.createTempDirectory("mg_ckpt_").toString
+      val dir = tempPath("mg_replay_").toString
+      val ckpt = tempPath("mg_ckpt_").toString
       val k = 16
       val docs = Tables.table(spark, sf, "documents")
       val tokDf = docs.select((col("doc_id") % 8).as("part"),
@@ -1338,8 +1337,8 @@ class StreamBatchParitySpec extends AnyFunSuite {
   test("file-replay psiCountsStream + psiFromCounts == batch q330 PSI " +
       "(state-finite 8-bucket drift gate, complete mode)") {
     failAfter(Span(300, Seconds)) {
-      val dir = Files.createTempDirectory("psi_replay_").toString
-      val ckpt = Files.createTempDirectory("psi_ckpt_").toString
+      val dir = tempPath("psi_replay_").toString
+      val ckpt = tempPath("psi_ckpt_").toString
       val events = Tables.table(spark, sf, "events")
       events.repartition(3).write.mode("overwrite").parquet(dir)
       val stream = spark.readStream

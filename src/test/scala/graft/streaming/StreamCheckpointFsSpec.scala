@@ -12,6 +12,7 @@ import org.scalatest.concurrent.TimeLimits.failAfter
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.{Seconds, Span}
 
+import graft.SpecFiles.tempPath
 import graft.TestSpark
 import graft.fs.NioLocalFs
 import graft.operators.SnapshotDiff
@@ -86,11 +87,11 @@ class StreamCheckpointFsSpec extends AnyFunSuite {
   test("a cdcUpsertStream checkpoint has the same entries, modes and " +
       ".crc files under LocalFs and NioLocalFs") {
     failAfter(Span(300, Seconds)) {
-      val dir = Files.createTempDirectory("ckfs_layout_replay_").toString
+      val dir = tempPath("ckfs_layout_replay_").toString
       feed(d1, 1L).unionByName(feed(d2, 2L))
         .repartition(3).write.mode("overwrite").parquet(dir)
       def run(impl: String): Seq[(String, Int)] = {
-        val ckpt = Files.createTempDirectory("ckfs_layout_ckpt_").toString
+        val ckpt = tempPath("ckfs_layout_ckpt_").toString
         val q = startUnder(impl)(cdcUpsertStream(replay(dir))
           .writeStream.format("noop").outputMode("update")
           .option("checkpointLocation", ckpt)
@@ -119,8 +120,8 @@ class StreamCheckpointFsSpec extends AnyFunSuite {
           feed(d2, 2L),
           feed(d1.filter(col("key") % 2 === 1), 1L),
           feed(d1.filter(col("key") % 2 === 0), 1L))
-        val dir = Files.createTempDirectory("ckfs_resume_replay_").toString
-        val ckpt = Files.createTempDirectory("ckfs_resume_ckpt_").toString
+        val dir = tempPath("ckfs_resume_replay_").toString
+        val ckpt = tempPath("ckfs_resume_ckpt_").toString
         // a batch replayed after a restart overwrites its own slot
         val collected =
           scala.collection.mutable.Map.empty[Long, Seq[CdcView]]

@@ -1,12 +1,11 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.concurrent.TimeLimits.failAfter
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.{Seconds, Span}
 
+import graft.SpecFiles.tempPath
 import graft.{Tables, TestSpark}
 
 /** The exactly-once-EFFECT contract of the foreachBatch upsert sink:
@@ -25,9 +24,9 @@ class StreamSinkSpec extends AnyFunSuite {
 
   test("file-replay upsert == q128 batch compaction; replays are no-ops") {
     failAfter(Span(300, Seconds)) {
-      val src = Files.createTempDirectory("sink_src_").toString
-      val ckpt = Files.createTempDirectory("sink_ckpt_").toString
-      val table = Files.createTempDirectory("sink_tbl_").toString + "/t"
+      val src = tempPath("sink_src_").toString
+      val ckpt = tempPath("sink_ckpt_").toString
+      val table = tempPath("sink_tbl_").toString + "/t"
       eventsDf.repartition(3).write.mode("overwrite").parquet(src)
       val stream = spark.readStream
         .schema(spark.read.parquet(src).schema)
@@ -71,7 +70,7 @@ class StreamSinkSpec extends AnyFunSuite {
   test("recovers the table from a crash between the two swap renames") {
     failAfter(Span(300, Seconds)) {
       import spark.implicits._
-      val table = Files.createTempDirectory("sink_crash_").toString + "/t"
+      val table = tempPath("sink_crash_").toString + "/t"
       def row(uid: Long, eid: Long, us: Long) =
         (uid, eid, us, "t", 1.0)
       def apply(rows: (Long, Long, Long, String, Double)*): Unit =

@@ -1,11 +1,9 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.Executors
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
-import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.local.LocalFs
 import org.apache.spark.sql.SparkSession
@@ -13,6 +11,7 @@ import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SpecFiles.tempPath
 import graft.TestSpark
 import graft.fs.NioLocalFs
 
@@ -45,7 +44,7 @@ class StreamStartSpec extends AnyFunSuite {
 
   /** A table directory holding the `orders` columns the CDC twin reads. */
   private lazy val tables = {
-    val dir = Files.createTempDirectory("sstart_tables_").toString
+    val dir = tempPath("sstart_tables_").toString
     spark.range(1, 1501).selectExpr("id AS o_orderkey",
       "element_at(array('F', 'O', 'P'), CAST(id % 3 + 1 AS INT)) AS o_orderstatus",
       "id * 1.5 AS o_totalprice")
@@ -54,7 +53,7 @@ class StreamStartSpec extends AnyFunSuite {
   }
 
   private lazy val upsertSource = {
-    val dir = Files.createTempDirectory("sstart_src_").toString
+    val dir = tempPath("sstart_src_").toString
     spark.range(200).selectExpr("id % 20 AS k", "id AS v")
       .repartition(2).write.mode("overwrite").parquet(dir)
     dir
@@ -65,8 +64,8 @@ class StreamStartSpec extends AnyFunSuite {
       .schema(spark.read.parquet(upsertSource).schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(upsertSource)
-    val out = Files.createTempDirectory("sstart_tbl_").toString + "/t"
-    val ckpt = Files.createTempDirectory("sstart_ckpt_").toString
+    val out = tempPath("sstart_tbl_").toString + "/t"
+    val ckpt = tempPath("sstart_ckpt_").toString
     StreamSink.upsertParquet(stream, "k", Seq("v"), out, ckpt)
   }
 
@@ -107,13 +106,9 @@ class StreamStartSpec extends AnyFunSuite {
   }
 
   test("no stream is started in src/main/scala outside StreamStart") {
-    val walk = Files.walk(Paths.get("src/main/scala"))
-    val offenders =
-      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    val found = offenders.filter { (p: Path) =>
-      p.getFileName.toString != "StreamStart.scala" &&
-        Files.readString(p).contains("writeStream")
+    val found = graft.SpecFiles.sources("src/main/scala").collect {
+      case (p, src) if p.getFileName.toString != "StreamStart.scala" &&
+          src.contains("writeStream") => p
     }
     assert(found.isEmpty,
       s"start streams through graft.streaming.StreamStart: ${found.mkString(", ")}")
