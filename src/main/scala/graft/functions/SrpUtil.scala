@@ -6,9 +6,10 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
   *
   * Hyperplanes are md5-derived pseudo-randoms — `((md5Head8("p_d") % 2001)
   * - 1000) / 1000.0` — exactly the formula the DuckDB oracle evaluates, so
-  * signatures agree bit-for-bit. The kernel ([[Kernels.SrpBandKeys]]) emits the 4 banded 4-bit
-  * keys directly (one dot-product loop per plane, float promoted to double
-  * left-to-right), replacing 16 interpreted zip_with/aggregate chains.
+  * signatures agree bit-for-bit. The kernel ([[Kernels.SrpBandKeys]])
+  * emits the 4 banded 4-bit keys directly (one dot-product loop per plane,
+  * float promoted to double left-to-right), replacing 16 interpreted
+  * zip_with/aggregate chains.
   */
 object SrpUtil {
 

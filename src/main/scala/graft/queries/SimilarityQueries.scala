@@ -2754,8 +2754,7 @@ object SimilarityQueries {
     // sf0.1 — int64-exact with 6 orders of headroom.
     "q247_power_iteration_pca" -> QueryDef(
       (s, dir) => {
-        def sd(v: String, d: String) =
-          graft.functions.IntegerMath.sdlSql(v, d)
+        import graft.functions.IntegerMath.{sdlSql => sd}
         val comps = Materialize(tableParallel(s, dir, "embeddings")
           .select(col("vec_id"), posexplode(col("embedding"))
             .as(Seq("i", "x")))
@@ -2855,8 +2854,7 @@ object SimilarityQueries {
     // sums N of those — int64-exact with 8 orders of headroom.
     "q249_lloyd_kmeans_rounds" -> QueryDef(
       (s, dir) => {
-        def sdiv(v: String, d: String) =
-          graft.functions.IntegerMath.sdlSql(v, d)
+        import graft.functions.IntegerMath.{sdlSql => sdiv}
         val comps = Materialize(tableParallel(s, dir, "embeddings")
           .select(col("vec_id"), posexplode(col("embedding"))
             .as(Seq("i", "x")))
@@ -3058,8 +3056,7 @@ object SimilarityQueries {
     // zero on the slope coefficients (spec-pinned).
     "q274_ridge_normal_eq" -> QueryDef(
       (s, dir) => {
-        def sd(v: String, d: String) =
-          graft.functions.IntegerMath.sdlSql(v, d)
+        import graft.functions.IntegerMath.{sdlSql => sd}
         def dec(x: String) = s"CAST($x AS DECIMAL(38,0))"
         // det of [[a,b,c],[d,e,f],[g,h,i]] — entries already DECIMAL
         def det3(a: String, b: String, c: String, d: String, e: String,
@@ -3272,8 +3269,7 @@ object SimilarityQueries {
     // per-fold MSE in micro² units.
     "q283_kfold_cv_moments" -> QueryDef(
       (s, dir) => {
-        def sd(v: String, d: String) =
-          graft.functions.IntegerMath.sdlSql(v, d)
+        import graft.functions.IntegerMath.{sdlSql => sd}
         def dec(x: String) = s"CAST($x AS DECIMAL(38,0))"
         def det3(a: String, b: String, c: String, d: String, e: String,
             f: String, g: String, h: String, i: String) =

@@ -4006,8 +4006,7 @@ object TrainingQueries {
     // moments are a 1-row reduce.
     "q276_cuped" -> QueryDef(
       (s, dir) => {
-        def sd(v: String, d: String) =
-          graft.functions.IntegerMath.sdlSql(v, d)
+        import graft.functions.IntegerMath.{sdlSql => sd}
         val cut = "TIMESTAMP '2024-01-16 00:00:00'"
         val users = table(s, dir, "events")
           .groupBy("user_id")
@@ -4097,8 +4096,7 @@ object TrainingQueries {
     // all run on ≤ 64-row bounded frames.
     "q285_shapley_data_value" -> QueryDef(
       (s, dir) => {
-        def sd(v: String, d: String) =
-          graft.functions.IntegerMath.sdlSql(v, d)
+        import graft.functions.IntegerMath.{sdlSql => sd}
         def dec(x: String) = s"CAST($x AS DECIMAL(38,0))"
         def det3(a: String, b: String, c: String, d: String, e: String,
             f: String, g: String, h: String, i: String) =
@@ -5478,8 +5476,7 @@ object TrainingQueries {
     // past that the audit contract is a hash-sampled slice.
     "q312_loo_influence" -> QueryDef(
       (s, dir) => {
-        def sdiv(a: String, b: String) =
-          graft.functions.IntegerMath.sdlSql(a, b)
+        import graft.functions.IntegerMath.{sdlSql => sdiv}
         val rows = Materialize(table(s, dir, "orders")
           .select(col("o_orderkey"),
             expr("CAST(substring(o_orderpriority, 1, 1) AS BIGINT)")
@@ -6384,8 +6381,7 @@ object TrainingQueries {
     // stratified, and the bias their difference.
     "q326_stratified_ate" -> QueryDef(
       (s, dir) => {
-        def sdiv(a: String, b: String) =
-          graft.functions.IntegerMath.sdlSql(a, b)
+        import graft.functions.IntegerMath.{sdlSql => sdiv}
         val users = Materialize(table(s, dir, "events")
           .groupBy("user_id")
           .agg(count(lit(1)).as("n_ev"),
